@@ -88,6 +88,12 @@ except Exception:  # pragma: no cover - best effort on older pyspark
     pass
 
 TOKENIZER_VERSION = "ascii-standard-v1"
+# Largest row count the driver holds for one table: the broadcast ordinal
+# map at build time, the field LUT, and the search head's ordinal resolve.
+# Above it those steps take their cluster-side plans.
+DRIVER_MAX_ROWS = 5_000_000
+# (shard << KEY_SHIFT) | ordinal: one int64 key per document across shards
+KEY_SHIFT = 40
 
 
 @dataclass
@@ -249,7 +255,7 @@ class IndexBuilder:
             # (duplicates within a batch are legitimate — last-write-wins
             # resolves them at compact()).
             bases = self._shard_bases(index_dir, shards)
-            ord_cap = int(c.extra.get("ordinal_broadcast_max_rows", 5_000_000))
+            ord_cap = int(c.extra.get("ordinal_broadcast_max_rows", DRIVER_MAX_ROWS))
             ordmap = None
             # row count first (metadata-only for unfiltered parquet scans) so
             # the above-cap path never computes, persists, or discards the map
@@ -328,146 +334,11 @@ class IndexBuilder:
             pool = ThreadPoolExecutor(max_workers=1)
             docs_future = pool.submit(inheritable_thread_target(_write_docs))
 
-            # ---------- postings job: the single tokenize pass ----------
-            docs = base
-            field_types = dict(df.dtypes)
-            for f in c.text_fields:
-                tok = analyzer_col(c.analyzers.get(f, "standard"))
-                if field_types.get(f, "").startswith("array"):
-                    # text[] (reference TextListFieldCodec.scala:89-92): each item
-                    # is an extra TextField instance sharing ONE norm — tokens
-                    # concatenate across items, doc length = sum over items; the
-                    # 32000-char analyzer cut applies per item, like Lucene's
-                    # per-field-instance truncation
-                    from nixiesearch_spark.analysis import UDF_ANALYZERS
-
-                    if c.analyzers.get(f, "standard") in UDF_ANALYZERS:
-                        # pandas_udf analyzers can't run inside transform lambdas;
-                        # space-join items first (space is a delimiter in every
-                        # chain, so tokens are identical; the 32000 cut then
-                        # applies to the joined string)
-                        toks = tok(F.concat_ws(" ", F.col(f)))
-                    else:
-                        # drop NULL items first: flatten over a NULL element
-                        # returns NULL and would silently drop the whole field
-                        toks = F.flatten(
-                            F.transform(
-                                F.filter(F.col(f), lambda x: x.isNotNull()),
-                                lambda x: tok(x),
-                            )
-                        )
-                else:
-                    toks = tok(F.col(f))
-                docs = docs.withColumn(f"_toks_{f}", toks)
-                # size(NULL) is -1 — clamp so null-field docs don't pollute sum_dl
-                docs = docs.withColumn(
-                    f"doclen_{f}", F.greatest(F.size(F.col(f"_toks_{f}")), F.lit(0))
-                )
-                norm = (
-                    F.expr(_norm_expr(f"doclen_{f}")).cast("int")
-                    if c.quantize
-                    else F.col(f"doclen_{f}").cast("int")
-                )
-                docs = docs.withColumn(f"norm_{f}", norm)
-            # doc-length field stats observe the tokenized frame BEFORE the
-            # explode, inside the same postings action — every row flows through
-            # the observe node even when it yields zero postings
-            len_exprs = []
-            for s in groups:
-                for f in c.text_fields:
-                    p = shard_pred(s)
-                    len_exprs.append(
-                        F.sum(F.when(p & (F.col(f"doclen_{f}") > 0), 1).otherwise(0)).alias(
-                            f"docs__{s}__{f}"
-                        )
-                    )
-                    len_exprs.append(
-                        F.sum(F.when(p, F.col(f"doclen_{f}")).otherwise(0)).alias(
-                            f"dl__{s}__{f}"
-                        )
-                    )
-            obs_len = Observation()
-            docs = docs.observe(obs_len, *len_exprs)
-            # per-doc tf via explode + groupBy with map-side partial aggregation
-            # (guide §2.3). Two alternatives were measured and REJECTED in r6:
-            # a run-length encode over array_sort with indexed HOF lambdas hit
-            # the alias-inlining trap (array_sort re-evaluated per element — a
-            # 50-doc build never finished), and the inlining-immune whole-array
-            # zip_with form ran 4x slower than this shuffle (130 s vs 30 s at
-            # 20k docs/local[4]: HOF lambdas evaluate interpreted, ~7k lambda
-            # calls per 1000-token doc, while explode+hash-agg is codegen'd).
-            posting_parts = [
-                docs.select(
-                    "docid",
-                    "ordinal",
-                    "shard",
-                    F.lit(f).alias("field"),
-                    F.col(f"norm_{f}").alias("norm"),
-                    F.explode(F.col(f"_toks_{f}")).alias("term"),
-                )
-                for f in c.text_fields
-            ]
-            exploded = posting_parts[0]
-            for p in posting_parts[1:]:
-                exploded = exploded.unionByName(p)
-            postings = exploded.groupBy(
-                "shard", "field", "term", "docid", "ordinal", "norm"
-            ).agg(F.count(F.lit(1)).cast("int").alias("tf"))
-            # Full builds may persist the narrow posting rows so finalize's
-            # pack shuffles straight off the cache instead of re-reading the
-            # just-written parquet (pack_source="cache", for object-store
-            # deployments; see the A/B note below — local disk favors the
-            # re-read). Appends/resumes never cache — their pack is already
-            # O(batch) via the incremental og overwrite.
-            full_build = (
-                c.quantize
-                and len(shards) == c.n_shards
-                and not os.path.isdir(os.path.join(index_dir, "postings"))
-            )
-            prev = getattr(self, "_full_postings", None)
-            if prev is not None:  # builder reuse: release the orphan cache first
-                prev[0].unpersist(blocking=False)
-            self._full_postings = None
-            # pack_source="parquet" (default) skips the cache: pack re-reads
-            # the written postings files. A/B at 20k docs/local[4] (bench_extra
-            # r6, warm JVM): parquet 29.9-35.3 s total vs cache 36.4 s — the
-            # MEMORY_AND_DISK serialization inside the postings action costs
-            # more than the local re-read, and skipping it also releases the
-            # executor storage pressure. "cache" remains for object-store
-            # deployments, where the re-read is a full-index network trip.
-            use_cache = c.extra.get("pack_source", "parquet") == "cache"
-            if full_build and use_cache:
-                span = c.block_size * int(c.extra.get("pack_group_blocks", 256))
-
-                postings = postings.persist(StorageLevel.MEMORY_AND_DISK)
-                self._full_postings = (postings, span)
-            # postings_out metric: an observe on the pre-agg exploded stream
-            # costs ~20% of the whole postings job (measured r4: 47.4s → 39.7s
-            # at 120k docs/14M tokens — 32 conditional sums ride every token
-            # row), while a post-hoc count over the cached agg is ~1s. Full
-            # builds therefore count AFTER the write; append batches keep the
-            # observe (the write is append-mode, so a post-hoc dir count would
-            # include other batches' rows).
-            obs_post = Observation() if not full_build else None
-            # the groupBy already shuffled once; write straight out of the
-            # aggregation partitions (sorted so parquet row-group min/max on
-            # term stays tight for query-time skipping). Flat write: the agg
-            # exchange mixes shards per task, so hive-partitioning by shard
-            # would write tasks×shards files; queries filter postings by
-            # (field, term), never by shard directory.
-            out = postings
-            if obs_post is not None:
-                post_exprs = [
-                    F.sum(
-                        F.when(shard_pred(s) & (F.col("field") == f), 1).otherwise(0)
-                    ).alias(f"post__{s}__{f}")
-                    for s in groups
-                    for f in c.text_fields
-                ]
-                out = out.observe(obs_post, *post_exprs)
-            out = out.sortWithinPartitions("shard", "field", "term", "docid")
-            self.spark.sparkContext.setJobDescription("index-build: postings")
             try:
+                out, postings, obs_len, obs_post, use_cache = self._postings_plan(
+                    df, base, index_dir, shards, groups, shard_pred
+                )
+                self.spark.sparkContext.setJobDescription("index-build: postings")
                 # snappy for the numeric-heavy postings rows: A/B at 8.9M rows
                 # (bench_extra r6) — write 7.8->5.5-6.2 s, scan-back 1.3->0.8 s,
                 # +12% bytes vs zstd; the text-heavy docs table stays on the
@@ -480,6 +351,8 @@ class IndexBuilder:
                 )
                 t_ph = self._mark("postings_write", t_ph)
             finally:
+                # joined on EVERY exit path, so a failed build never leaves
+                # the docs write running behind the caller's back
                 try:
                     docs_future.result()  # surface docs-write failures here
                 finally:
@@ -565,6 +438,154 @@ class IndexBuilder:
                 self.spark.conf.set("spark.sql.files.maxPartitionBytes", prev_mpb)
             if prev_sp is not None:
                 self.spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
+
+    def _postings_plan(self, df, base, index_dir, shards, groups, shard_pred):
+        """The postings job's plan (no action runs here): tokenize once,
+        explode, per-doc tf aggregate, sorted for the write. Returns
+        (out, postings, obs_len, obs_post, use_cache)."""
+        from pyspark import StorageLevel
+        from pyspark.sql import Observation
+
+        c = self.config
+        # ---------- postings job: the single tokenize pass ----------
+        docs = base
+        field_types = dict(df.dtypes)
+        for f in c.text_fields:
+            tok = analyzer_col(c.analyzers.get(f, "standard"))
+            if field_types.get(f, "").startswith("array"):
+                # text[] (reference TextListFieldCodec.scala:89-92): each item
+                # is an extra TextField instance sharing ONE norm — tokens
+                # concatenate across items, doc length = sum over items; the
+                # 32000-char analyzer cut applies per item, like Lucene's
+                # per-field-instance truncation
+                from nixiesearch_spark.analysis import UDF_ANALYZERS
+
+                if c.analyzers.get(f, "standard") in UDF_ANALYZERS:
+                    # pandas_udf analyzers can't run inside transform lambdas;
+                    # space-join items first (space is a delimiter in every
+                    # chain, so tokens are identical; the 32000 cut then
+                    # applies to the joined string)
+                    toks = tok(F.concat_ws(" ", F.col(f)))
+                else:
+                    # drop NULL items first: flatten over a NULL element
+                    # returns NULL and would silently drop the whole field
+                    toks = F.flatten(
+                        F.transform(
+                            F.filter(F.col(f), lambda x: x.isNotNull()),
+                            lambda x: tok(x),
+                        )
+                    )
+            else:
+                toks = tok(F.col(f))
+            docs = docs.withColumn(f"_toks_{f}", toks)
+            # size(NULL) is -1 — clamp so null-field docs don't pollute sum_dl
+            docs = docs.withColumn(
+                f"doclen_{f}", F.greatest(F.size(F.col(f"_toks_{f}")), F.lit(0))
+            )
+            norm = (
+                F.expr(_norm_expr(f"doclen_{f}")).cast("int")
+                if c.quantize
+                else F.col(f"doclen_{f}").cast("int")
+            )
+            docs = docs.withColumn(f"norm_{f}", norm)
+        # doc-length field stats observe the tokenized frame BEFORE the
+        # explode, inside the same postings action — every row flows through
+        # the observe node even when it yields zero postings
+        len_exprs = []
+        for s in groups:
+            for f in c.text_fields:
+                p = shard_pred(s)
+                len_exprs.append(
+                    F.sum(F.when(p & (F.col(f"doclen_{f}") > 0), 1).otherwise(0)).alias(
+                        f"docs__{s}__{f}"
+                    )
+                )
+                len_exprs.append(
+                    F.sum(F.when(p, F.col(f"doclen_{f}")).otherwise(0)).alias(
+                        f"dl__{s}__{f}"
+                    )
+                )
+        obs_len = Observation()
+        docs = docs.observe(obs_len, *len_exprs)
+        # per-doc tf via explode + groupBy with map-side partial aggregation
+        # (guide §2.3). Two alternatives were measured and REJECTED in r6:
+        # a run-length encode over array_sort with indexed HOF lambdas hit
+        # the alias-inlining trap (array_sort re-evaluated per element — a
+        # 50-doc build never finished), and the inlining-immune whole-array
+        # zip_with form ran 4x slower than this shuffle (130 s vs 30 s at
+        # 20k docs/local[4]: HOF lambdas evaluate interpreted, ~7k lambda
+        # calls per 1000-token doc, while explode+hash-agg is codegen'd).
+        posting_parts = [
+            docs.select(
+                "docid",
+                "ordinal",
+                "shard",
+                F.lit(f).alias("field"),
+                F.col(f"norm_{f}").alias("norm"),
+                F.explode(F.col(f"_toks_{f}")).alias("term"),
+            )
+            for f in c.text_fields
+        ]
+        exploded = posting_parts[0]
+        for p in posting_parts[1:]:
+            exploded = exploded.unionByName(p)
+        postings = exploded.groupBy(
+            "shard", "field", "term", "docid", "ordinal", "norm"
+        ).agg(F.count(F.lit(1)).cast("int").alias("tf"))
+        # Full builds may persist the narrow posting rows so finalize's
+        # pack shuffles straight off the cache instead of re-reading the
+        # just-written parquet (pack_source="cache", for object-store
+        # deployments; see the A/B note below — local disk favors the
+        # re-read). Appends/resumes never cache — their pack is already
+        # O(batch) via the incremental og overwrite.
+        full_build = (
+            c.quantize
+            and len(shards) == c.n_shards
+            and not os.path.isdir(os.path.join(index_dir, "postings"))
+        )
+        prev = getattr(self, "_full_postings", None)
+        if prev is not None:  # builder reuse: release the orphan cache first
+            prev[0].unpersist(blocking=False)
+        self._full_postings = None
+        # pack_source="parquet" (default) skips the cache: pack re-reads
+        # the written postings files. A/B at 20k docs/local[4] (bench_extra
+        # r6, warm JVM): parquet 29.9-35.3 s total vs cache 36.4 s — the
+        # MEMORY_AND_DISK serialization inside the postings action costs
+        # more than the local re-read, and skipping it also releases the
+        # executor storage pressure. "cache" remains for object-store
+        # deployments, where the re-read is a full-index network trip.
+        use_cache = c.extra.get("pack_source", "parquet") == "cache"
+        if full_build and use_cache:
+            span = c.block_size * int(c.extra.get("pack_group_blocks", 256))
+
+            postings = postings.persist(StorageLevel.MEMORY_AND_DISK)
+            self._full_postings = (postings, span)
+        # postings_out metric: an observe on the pre-agg exploded stream
+        # costs ~20% of the whole postings job (measured r4: 47.4s → 39.7s
+        # at 120k docs/14M tokens — 32 conditional sums ride every token
+        # row), while a post-hoc count over the cached agg is ~1s. Full
+        # builds therefore count AFTER the write; append batches keep the
+        # observe (the write is append-mode, so a post-hoc dir count would
+        # include other batches' rows).
+        obs_post = Observation() if not full_build else None
+        # the groupBy already shuffled once; write straight out of the
+        # aggregation partitions (sorted so parquet row-group min/max on
+        # term stays tight for query-time skipping). Flat write: the agg
+        # exchange mixes shards per task, so hive-partitioning by shard
+        # would write tasks×shards files; queries filter postings by
+        # (field, term), never by shard directory.
+        out = postings
+        if obs_post is not None:
+            post_exprs = [
+                F.sum(
+                    F.when(shard_pred(s) & (F.col("field") == f), 1).otherwise(0)
+                ).alias(f"post__{s}__{f}")
+                for s in groups
+                for f in c.text_fields
+            ]
+            out = out.observe(obs_post, *post_exprs)
+        out = out.sortWithinPartitions("shard", "field", "term", "docid")
+        return out, postings, obs_len, obs_post, use_cache
 
     def _tune_input_splits(self, base: DataFrame, parallelism: int) -> str | None:
         """Size input splits to the corpus so the CPU-bound tokenize stage
@@ -1334,24 +1355,28 @@ class IndexReader:
         "doc_gaps", "tfs", "norms", "max_impact",
     )
 
-    def fetch_packed(self, field: str, terms: list[str]) -> pd.DataFrame:
-        """The query's matched packed blocks as a pandas frame — pyarrow
+    def fetch_packed(self, field: str, terms: list[str]):
+        """The query's matched packed blocks as a pyarrow Table — pyarrow
         local read (no Spark job) when possible, else one Spark toPandas."""
+        import pyarrow as pa
+
         ds = self._local_dataset("packed")
         if ds is not None:
             import pyarrow.dataset as pads
 
             flt = (pads.field("field") == field) & pads.field("term").isin(list(terms))
-            return ds.to_table(columns=list(self.PACKED_FETCH_COLS), filter=flt).to_pandas()
-        return (
+            return ds.to_table(columns=list(self.PACKED_FETCH_COLS), filter=flt)
+        pdf = (
             self.packed.where((F.col("field") == field) & F.col("term").isin(list(terms)))
             .select(*self.PACKED_FETCH_COLS)
             .toPandas()
         )
+        return pa.Table.from_pandas(pdf, preserve_index=False)
 
-    def ordinal_lookup(self, pairs: list[tuple[int, int]]) -> dict:
-        """Resolve (shard, ordinal) → docid driver-side, zero Spark jobs
-        after a one-time pull (search-head WAND path, query/wand.py).
+    def ordinal_lookup(self, keys: np.ndarray) -> np.ndarray | None:
+        """Resolve segmented keys ``(shard << KEY_SHIFT) | ordinal`` → docid
+        driver-side, zero Spark jobs after a one-time pull (search-head WAND
+        path, query/wand.py). Returns docids aligned with ``keys``.
 
         The map is two sorted numpy arrays (composite key, docid) — ~16 B
         per doc, lazily built once per reader. Above 50M docs the pull is
@@ -1367,26 +1392,22 @@ class IndexReader:
             if doc_count > 50_000_000:
                 self._ordlut = False
             else:
-                import numpy as np
-
                 pdf = self.ordinal_map.toPandas()
-                keys = (
-                    pdf["shard"].to_numpy(np.int64) << np.int64(40)
+                lut_keys = (
+                    pdf["shard"].to_numpy(np.int64) << np.int64(KEY_SHIFT)
                 ) | pdf["ordinal"].to_numpy(np.int64)
-                order = np.argsort(keys)
-                self._ordlut = (keys[order], pdf["docid"].to_numpy(np.int64)[order])
+                order = np.argsort(lut_keys)
+                self._ordlut = (lut_keys[order], pdf["docid"].to_numpy(np.int64)[order])
         if self._ordlut is False:
             return None
-        import numpy as np
-
-        keys, docids = self._ordlut
-        want = np.array([(s << 40) | o for s, o in pairs], dtype=np.int64)
-        pos = np.searchsorted(keys, want)
-        out = {}
-        for (s, o), p in zip(pairs, pos):
-            if p < len(keys) and keys[p] == (s << 40) | o:
-                out[(s, o)] = int(docids[p])
-        return out
+        lut_keys, docids = self._ordlut
+        keys = np.asarray(keys, dtype=np.int64)
+        if not len(keys):
+            return np.empty(0, dtype=np.int64)
+        pos = np.minimum(np.searchsorted(lut_keys, keys), max(len(lut_keys) - 1, 0))
+        if not len(lut_keys) or not np.array_equal(lut_keys[pos], keys):
+            raise KeyError("packed ordinals missing from the ordinal map")
+        return docids[pos]
 
     def field_lut(self, field: str):
         """docid → stored-field value arrays for driver-side facet/sort
@@ -1405,7 +1426,7 @@ class IndexReader:
                 (f.get("doc_count", 0) for f in self.stats.get("fields", {}).values()),
                 default=0,
             )
-            ds = self._local_dataset("docs") if doc_count <= 5_000_000 else None
+            ds = self._local_dataset("docs") if doc_count <= DRIVER_MAX_ROWS else None
             if ds is not None:
                 try:
                     import numpy as np

@@ -102,9 +102,3 @@ def bm25_contrib(
     one = np.float32(1.0)
     return (w - w / (one + f * c)).astype(np.float32)
 
-
-def sum_scores_f32(contribs_by_doc: list[np.ndarray]) -> np.ndarray:
-    """Disjunction sum: accumulate float32 contribs in float64, cast to float32."""
-    return np.array(
-        [np.float32(np.sum(c.astype(np.float64))) for c in contribs_by_doc], dtype=np.float32
-    )

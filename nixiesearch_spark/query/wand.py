@@ -9,63 +9,87 @@ so this is the one genuinely custom physical operator (SURVEY.md §4):
 Distributed shape
 -----------------
 Shards hold disjoint document sets with complete postings (built that way —
-``index/builder.py``), so each shard computes an exact local top-k
+``index/builder.py``), so any set of shards computes an exact local top-k
 independently (the classic document-partitioned search fan-out; a shard ≡ a
 Lucene segment searched by the reference's work-stealing pool,
-``index/Searcher.scala:313``). Global answer = union of per-shard top-ks →
-``orderBy(score desc, docid asc).limit(k)`` — k rows per shard cross the
-wire, nothing else.
+``index/Searcher.scala:313``). Global answer = union of the per-partition
+top-ks → ``orderBy(score desc, docid asc).limit(k)`` — about k rows per
+partition cross the wire, nothing else.
 
-Per-shard algorithm (vectorized block-max pruning + heap-style threshold)
--------------------------------------------------------------------------
-1. Blocks of each query term cover disjoint ascending docid ranges; their
-   stored ``max_impact`` (idf-free float32 impact bound) gives a per-block
-   score upper bound ``ub = mult · weight · max_impact`` (+2 ulp slack so
-   float32 rounding can never break soundness).
-2. The shard's docid space is cut into stripes; stripe upper bound =
-   Σ_terms max(ub of term-blocks overlapping the stripe) — exactly the
-   block-max bound, since a doc meets ≤1 block per term.
-3. Stripes are processed in DESCENDING ub order, keeping a running top-k
-   (θ = k-th best score so far, the heap threshold). As soon as
-   ub(stripe) < θ, every remaining stripe — and every document in it — is
-   provably non-competitive and is skipped without decoding a single block.
-4. Inside a processed stripe, overlapping blocks are VByte-decoded (numpy)
-   and scored exactly with the same float32 Lucene op chain as the flat
-   path, so WAND results are bit-identical to the exhaustive plan.
+Cross-shard kernel (``_shard_topk``)
+------------------------------------
+One struct-of-arrays numpy kernel scores the matched blocks of EVERY shard
+it is handed in one pass — all shards on the search head, all shards of a
+partition in the distributed plan. A document is the segmented key
+``(shard << 40) | ordinal``, so per-shard state is plain array arithmetic
+over one key space:
+
+1. Each (branch, term) of the query is a *slot*; a match query is the
+   one-branch case of bool/dis_max. Blocks of a slot cover disjoint
+   ascending ordinal ranges; their stored ``max_impact`` (idf-free float32
+   impact bound) gives a block upper bound ``ub = mult · weight ·
+   max_impact`` (+2 ulp slack so float32 rounding can never break
+   soundness). must_not slots bound nothing (exclusion only removes).
+2. Each shard's ordinal range is cut into stripes (one stripe when the
+   shard has few blocks). Stripe ub = Σ_slots max(ub of the slot's blocks
+   overlapping the stripe) — exactly the block-max bound, since a doc meets
+   ≤1 block per term — filled for all shards at once by ``np.maximum.at``
+   over the block→stripe ranges.
+3. Stripes of ALL shards are ranked together by ub and consumed in rounds
+   of n_shards stripes against ONE global θ (the k-th best score so far,
+   the heap threshold). As soon as ub(stripe) < θ, that stripe and every
+   one after it — and every document in them — are provably
+   non-competitive and skipped without decoding a single block. θ over all
+   shards is never below one shard's own θ, so a score found in one shard
+   prunes stripes of another. A round may still decode a stripe that a θ
+   raised earlier in the same round would have skipped; the round size
+   bounds that.
+4. A round's blocks are VByte-decoded in ONE batched call and scored with
+   the same float32 Lucene op chain as the flat path: per-doc float64 sums
+   in (branch, term) order, cast to float32 per branch, then engine._fused's
+   bool/dis_max combination — so results are bit-identical to the
+   exhaustive plan.
 
 Skip test uses strict ``<`` so score==θ docs still surface for the
-docid-asc tiebreak (Lucene competitive-iff-equal-and-lower-docid rule).
+docid-asc tiebreak (Lucene competitive-iff-equal-and-lower-docid rule);
+tied candidates are kept up to k + TIE_KEEP per shard, because ordinals
+need not follow docid order after appends and the tiebreak happens only
+after the docid resolve.
 
 Filters and tombstones ride INSIDE the pruned search (the analog of
 Lucene's Occur.FILTER clause leapfrog, reference
 ``api/query/retrieve/RetrieveQuery.scala:42-57``): the filter predicate
-resolves against the docs table to a per-shard allowed-ordinal set (docs
+resolves against the docs table to an allowed (shard, ordinal) set (docs
 carry shard+ordinal columns — no join), which is unioned into the same
 explicit-repartition exchange as the packed blocks and applied as a
-vectorized membership mask at block-decode time. Upper bounds stay sound
-(a filter only removes candidates), so filtered WAND results are
-bit-identical to the flat filtered path. Tombstones become a banned-ordinal
-set the same way. Intended for SELECTIVE filters — a filter matching most
-of the corpus ships ~matching-ordinals×8B through the exchange, and the
-flat Catalyst path is the better plan there (same answer either way).
+vectorized segmented-key membership mask at block-decode time. Upper
+bounds stay sound (a filter only removes candidates), so filtered WAND
+results are bit-identical to the flat filtered path. Tombstones become a
+banned-key set the same way. Intended for SELECTIVE filters — a filter
+matching most of the corpus ships ~matching-ordinals×8B through the
+exchange, and the flat Catalyst path is the better plan there (same answer
+either way).
 
-Scope: OR and AND match, quantized indexes; parity verified in
-tests/test_wand.py.
+Scope: OR/AND match, bool/dis_max/rrf over match branches and the facet
+match set, quantized indexes; parity verified in tests/test_wand.py and
+tests/test_serving*.py.
 """
 
 from __future__ import annotations
 
+import os
 from collections import Counter
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nixiesearch_spark import lucene
 from nixiesearch_spark.analysis import analyzer_py
 from nixiesearch_spark.index import codec
-from nixiesearch_spark.index.builder import IndexReader
+from nixiesearch_spark.index.builder import DRIVER_MAX_ROWS, KEY_SHIFT, IndexReader
 
 # Python workers must run the pack/WAND closures even when this package is
 # not on the executors' import path (e.g. a host-created SparkSession with a
@@ -84,270 +108,306 @@ except Exception:  # pragma: no cover - best effort on older pyspark
 TOPK_SCHEMA = "shard int, ordinal long, score float"
 FINAL_SCHEMA = "docid long, score float"
 UB_SLACK = np.float64(1.0 + 2.0 ** -21)  # 2 ulps of float32
+ORD_MASK = np.int64((1 << KEY_SHIFT) - 1)
+TIE_KEEP = 4096  # candidates tied at the k-th score kept per shard beyond k
+# search-head bound: queries whose dictionary-estimated block count exceeds
+# this take the distributed plan (or the Catalyst plan for bool/dis_max)
+DRIVER_MAX_BLOCKS = 20_000
+
+
+def _member(sorted_set: np.ndarray, x: np.ndarray) -> np.ndarray:
+    """Vectorized membership of x in a sorted int64 array."""
+    if not len(sorted_set):
+        return np.zeros(len(x), dtype=bool)
+    pos = np.minimum(np.searchsorted(sorted_set, x), len(sorted_set) - 1)
+    return sorted_set[pos] == x
 
 
 def _shard_topk(
-    pdf: pd.DataFrame,
-    weights: dict[str, float],
-    mults: dict[str, int],
-    cache: np.ndarray,
+    blocks: pa.Table,
+    branches: list,
     k: int,
     n_stripes: int,
-    n_required: int = 0,  # >0 → AND semantics: doc must match all n terms
-    allow: np.ndarray | None = None,  # sorted allowed ordinals (filter mode)
-    ban: np.ndarray | None = None,  # sorted banned ordinals (tombstones)
-    bound_scale: float = 1.0,  # ≥1: avgdl-drift correction (see wand_topk)
-) -> pd.DataFrame:
-    shard = int(pdf["shard"].iloc[0])
-    terms = list(dict.fromkeys(pdf["term"]))
-    blocks: dict[str, dict] = {}
-    lo, hi = np.iinfo(np.int64).max, np.iinfo(np.int64).min
-    by_term = {t: g for t, g in pdf.groupby("term", sort=False)}
-    for t in terms:
-        tdf = by_term[t].sort_values("block_id")
-        first = tdf["block_id"].to_numpy(dtype=np.int64)
-        last = tdf["block_last"].to_numpy(dtype=np.int64)
-        ub = (
-            np.float64(mults[t])
-            * np.float64(weights[t])
-            * tdf["max_impact"].to_numpy(dtype=np.float64)
-            * UB_SLACK
-            * np.float64(bound_scale)
-        )
-        blocks[t] = {
-            "first": first,
-            "last": last,
-            "ub": ub,
-            "gaps": tdf["doc_gaps"].tolist(),
-            "tfs": tdf["tfs"].tolist(),
-            "norms": tdf["norms"].tolist(),
-        }
-        lo = min(lo, int(first[0]))
-        hi = max(hi, int(last[-1]))
-    if lo > hi:
-        return pd.DataFrame({"shard": [], "ordinal": [], "score": []}).astype(
-            {"shard": "int32", "ordinal": "int64", "score": "float32"}
-        )
+    kind: str = "bool",
+    tie: float = 0.0,
+    allow: np.ndarray | None = None,  # sorted allowed segmented keys (filter)
+    ban: np.ndarray | None = None,  # sorted banned segmented keys (tombstones)
+) -> tuple[np.ndarray, np.ndarray]:
+    """Block-max pruned top-k over the packed blocks of every shard in
+    ``blocks`` (module docstring) → (segmented keys int64, scores float32).
 
-    # few blocks → stripe bookkeeping costs more python than it saves in
-    # decode: collapse to one stripe (decode-all). Same math, same results.
-    if sum(len(b["first"]) for b in blocks.values()) <= 2 * n_stripes:
-        n_stripes = 1
-    edges = np.linspace(np.float64(lo), np.float64(hi) + 1.0, n_stripes + 1)
-    stripe_lo = edges[:-1].astype(np.int64)
-    # float64 rounding near ±2^63 can push the first edge above the smallest
-    # docid — clamp the outer stripes to cover the whole int64 space
-    stripe_lo[0] = np.iinfo(np.int64).min
-    stripe_hi = np.empty(n_stripes, dtype=np.int64)
-    stripe_hi[:-1] = stripe_lo[1:] - 1
-    stripe_hi[-1] = np.iinfo(np.int64).max
-
-    # stripe ub = Σ_t max(ub of blocks overlapping stripe); the stripe
-    # range of every block comes from ONE batched searchsorted per term
-    stripe_ub = np.zeros(n_stripes, dtype=np.float64)
-    overlap: list[list[tuple[str, int]]] = [[] for _ in range(n_stripes)]
-    for t in terms:
-        b = blocks[t]
-        s0a = np.maximum(
-            np.searchsorted(stripe_lo, b["first"], side="right") - 1, 0
-        )
-        s1a = np.minimum(
-            np.searchsorted(stripe_lo, b["last"], side="right") - 1, n_stripes - 1
-        )
-        tmax = np.zeros(n_stripes, dtype=np.float64)
-        ubs = b["ub"]
-        for j, (a0, a1) in enumerate(zip(s0a, s1a)):
-            for s in range(a0, a1 + 1):
-                overlap[s].append((t, j))
-            tmax[a0 : a1 + 1] = np.maximum(tmax[a0 : a1 + 1], ubs[j])
-        stripe_ub += tmax
-
-    order = np.argsort(-stripe_ub, kind="stable")
-    top_docs = np.empty(0, dtype=np.int64)
-    top_scores = np.empty(0, dtype=np.float32)
-    theta = -np.inf
-    decoded: dict[tuple[str, int], tuple] = {}
-    for s in order:
-        if stripe_ub[s] < theta:
-            break  # every remaining stripe is below threshold — pruned
-        if not overlap[s]:
-            continue
-        doc_parts, contrib_parts = [], []
-        todo = sorted(set(overlap[s]))  # deterministic accumulation order
-        pending: dict[str, list[int]] = {}
-        for t, j in todo:
-            if (t, j) not in decoded:
-                pending.setdefault(t, []).append(j)
-        for t, js in pending.items():
-            # ONE VByte pass decodes all of this term's new blocks for the
-            # stripe (batch decode identity unit-tested); laziness is kept
-            # — blocks of pruned stripes are never touched
-            b = blocks[t]
-            counts = np.array([len(b["norms"][j]) for j in js], dtype=np.int64)
-            dv, tfv, nmv = codec.decode_posting_blocks(
-                [b["gaps"][j] for j in js],
-                [b["tfs"][j] for j in js],
-                [b["norms"][j] for j in js],
-                counts,
-            )
-            bounds = np.concatenate([[0], np.cumsum(counts)])
-            w = np.float32(weights[t])
-            mult = np.float64(mults[t])
-            for i, j in enumerate(js):
-                d = dv[bounds[i] : bounds[i + 1]]
-                tf = tfv[bounds[i] : bounds[i + 1]]
-                nm = nmv[bounds[i] : bounds[i + 1]]
-                # filter/tombstone mask at decode time, cached with the
-                # block (membership by binary search on the sorted sets)
-                if allow is not None:
-                    if len(allow) == 0:
-                        keep = np.zeros(len(d), dtype=bool)
-                    else:
-                        pos = np.searchsorted(allow, d)
-                        keep = (pos < len(allow)) & (
-                            allow[np.minimum(pos, len(allow) - 1)] == d
-                        )
-                    d, tf, nm = d[keep], tf[keep], nm[keep]
-                if ban is not None and len(ban):
-                    pos = np.searchsorted(ban, d)
-                    hit = (pos < len(ban)) & (ban[np.minimum(pos, len(ban) - 1)] == d)
-                    d, tf, nm = d[~hit], tf[~hit], nm[~hit]
-                c = lucene.bm25_contrib(w, tf.astype(np.float32), nm, cache)
-                decoded[(t, j)] = (d, mult * c.astype(np.float64))
-        for (t, j) in todo:
-            d, c = decoded[(t, j)]
-            mask = (d >= stripe_lo[s]) & (d <= stripe_hi[s])
-            if mask.any():
-                doc_parts.append(d[mask])
-                contrib_parts.append(c[mask])
-        if not doc_parts:
-            continue
-        docs = np.concatenate(doc_parts)
-        contribs = np.concatenate(contrib_parts)
-        uniq, inv = np.unique(docs, return_inverse=True)
-        sums = np.zeros(len(uniq), dtype=np.float64)
-        np.add.at(sums, inv, contribs)
-        if n_required:
-            nterms = np.zeros(len(uniq), dtype=np.int64)
-            np.add.at(nterms, inv, 1)
-            keep = nterms >= n_required
-            uniq, sums = uniq[keep], sums[keep]
-            if not len(uniq):
+    ``branches``: _match_plan dicts plus a "role" — must/should/must_not
+    for kind="bool", dismax for kind="dismax"; a match query is one
+    "should" branch. ``blocks`` carries a "field" column when branches span
+    fields. Candidates at or above the k-th score are all returned (ties
+    capped at k + TIE_KEEP per shard); with k beyond the match count the
+    kernel returns the full match set."""
+    col = {c: blocks.column(c).to_numpy() for c in blocks.column_names}
+    names = col["term"]
+    if "field" in col:
+        names = col["field"] + "\x1f" + names
+    code = {n: i for i, n in enumerate(dict.fromkeys(names))}
+    name_code = np.array([code[n] for n in names], dtype=np.int64)
+    # slots in (branch, sorted term) order: the per-doc accumulation order
+    rows, slot_br, slot_w, slot_m, slot_pos, slot_cache = [], [], [], [], [], []
+    fields = list(dict.fromkeys(p["field"] for p in branches))
+    for bi, p in enumerate(branches):
+        for t in sorted(p["present"]):
+            c = code.get(f"{p['field']}\x1f{t}" if "field" in col else t)
+            if c is None:
                 continue
-        scores = sums.astype(np.float32)
-        # merge with running top-k (stripes hold disjoint docs — pure concat).
-        # Boundary ties at the k-th score are RETAINED (capped): ordinals
-        # follow docid order within a single batch build, but after
-        # incremental appends they may not, and the global docid-asc
-        # tiebreak happens after the docid join — so every tied candidate
-        # must survive the local cut.
-        top_docs = np.concatenate([top_docs, uniq])
-        top_scores = np.concatenate([top_scores, scores])
-        if len(top_docs) > k:
-            order_sel = np.lexsort((top_docs, -top_scores.astype(np.float64)))
-            kth = top_scores[order_sel[k - 1]]
-            keep_n = int(np.sum(top_scores >= kth))
-            keep_n = min(max(keep_n, k), k + 4096)
-            sel = order_sel[:keep_n]
-            top_docs, top_scores = top_docs[sel], top_scores[sel]
-        if len(top_docs) >= k:
-            theta = float(np.sort(top_scores)[::-1][k - 1])
-    return pd.DataFrame(
-        {"shard": np.full(len(top_docs), shard, dtype=np.int32),
-         "ordinal": top_docs, "score": top_scores}
+            rows.append(np.flatnonzero(name_code == c))
+            slot_br.append(bi)
+            slot_w.append(p["weights"][t])
+            slot_m.append(p["mults"][t])
+            slot_pos.append(p["role"] != "must_not")
+            slot_cache.append(fields.index(p["field"]))
+    empty = (np.empty(0, np.int64), np.empty(0, np.float32))
+    if not rows:
+        return empty
+    slot = np.repeat(np.arange(len(rows)), [len(r) for r in rows])
+    rows = np.concatenate(rows)
+    slot_br = np.array(slot_br, dtype=np.int64)
+    w64 = np.array(slot_w, dtype=np.float64)  # upper bounds: float64 weight
+    slot_w = w64.astype(np.float32)  # scoring: the float32 Lucene weight
+    slot_m = np.array(slot_m, dtype=np.float64)
+    slot_cache = np.array(slot_cache, dtype=np.int64)
+    scale = np.array([p["bound_scale"] for p in branches], dtype=np.float64)
+    shard = col["shard"][rows].astype(np.int64)
+    if allow is not None:  # shards without an allowed doc score nothing
+        keep = np.isin(shard, np.unique(allow >> KEY_SHIFT))
+        slot, rows, shard = slot[keep], rows[keep], shard[keep]
+    first = col["block_id"][rows].astype(np.int64)
+    last = col["block_last"][rows].astype(np.int64)
+    positive = np.array(slot_pos)[slot]
+    ub = np.where(
+        positive,
+        slot_m[slot]
+        * w64[slot]
+        * col["max_impact"][rows].astype(np.float64)
+        * UB_SLACK
+        * scale[slot_br[slot]],
+        0.0,
     )
 
+    # ---- stripes: per shard over the positive blocks' ordinal span ----
+    sh_ids, sh_inv = np.unique(shard, return_inverse=True)
+    lo = np.full(len(sh_ids), np.iinfo(np.int64).max)
+    hi = np.full(len(sh_ids), -1, dtype=np.int64)
+    np.minimum.at(lo, sh_inv[positive], first[positive])
+    np.maximum.at(hi, sh_inv[positive], last[positive])
+    live = hi >= lo  # a shard with only must_not blocks scores nothing
+    if not live.any():
+        return empty
+    # few blocks → one stripe (decode-all): bookkeeping would cost more
+    # than the decode it saves. Same math, same results.
+    per = np.where(np.bincount(sh_inv) <= 2 * n_stripes, 1, n_stripes)
+    per[~live] = 0
+    keep = live[sh_inv]
+    slot, rows, shard, first, last, ub = (
+        a[keep] for a in (slot, rows, shard, first, last, ub)
+    )
+    st_sh = np.repeat(np.arange(len(sh_ids)), per)
+    st_j = np.arange(len(st_sh)) - np.repeat(np.cumsum(per) - per, per)
+    lo_f = lo[st_sh].astype(np.float64)
+    step = (hi[st_sh].astype(np.float64) + 1.0 - lo_f) / per[st_sh]
+    # every shard's first stripe starts at ordinal 0 so it covers the
+    # must_not blocks below the positive span too
+    st_lo = np.where(st_j == 0, 0, (lo_f + st_j * step).astype(np.int64))
+    st_key = (sh_ids[st_sh] << KEY_SHIFT) | st_lo
+    n_st = len(st_key)
+    s0 = np.searchsorted(st_key, (shard << KEY_SHIFT) | first, side="right") - 1
+    s1 = np.searchsorted(st_key, (shard << KEY_SHIFT) | last, side="right") - 1
+    # (block, stripe) pairs for every stripe a block overlaps
+    span = s1 - s0 + 1
+    pair_blk = np.repeat(np.arange(len(rows)), span)
+    pair_st = s0[pair_blk] + np.arange(len(pair_blk)) - np.repeat(np.cumsum(span) - span, span)
+    tmax = np.zeros(len(slot_w) * n_st)
+    np.maximum.at(tmax, slot[pair_blk] * n_st + pair_st, ub[pair_blk])
+    stripe_ub = tmax.reshape(len(slot_w), n_st).sum(axis=0)
 
-def packed_ready(reader: IndexReader) -> bool:
-    """True when the packed/WAND serving path is usable: quantized index,
-    packed table present and not stale vs the flat postings (appends since
-    the last pack make WAND silently miss docs — the staleness guard)."""
+    nbr = len(branches)
+    need = np.array([p["n_required"] or 1 for p in branches], dtype=np.int64)
+    roles = [p["role"] for p in branches]
+    musts = [i for i, r in enumerate(roles) if r == "must"]
+    shoulds = [i for i, r in enumerate(roles) if r == "should"]
+    nots = [i for i, r in enumerate(roles) if r == "must_not"]
+    caches = [next(p["cache"] for p in branches if p["field"] == f) for f in fields]
+
+    order = np.argsort(-stripe_ub, kind="stable")
+    round_n = int(live.sum())
+    decoded = np.zeros(len(rows), dtype=bool)
+    in_round = np.zeros(n_st, dtype=bool)
+    # decoded postings whose stripe is not processed yet
+    p_key = np.empty(0, np.int64)
+    p_slot = np.empty(0, np.int64)
+    p_c = np.empty(0, np.float64)
+    p_st = np.empty(0, np.int64)
+    top_keys, top_scores = empty
+    theta = -np.inf
+    for r0 in range(0, n_st, round_n):
+        sel = order[r0 : r0 + round_n]
+        sel = sel[stripe_ub[sel] >= theta]
+        if not len(sel):
+            break  # every remaining stripe is below threshold — pruned
+        in_round[:] = False
+        in_round[sel] = True
+        due = np.unique(pair_blk[in_round[pair_st] & ~decoded[pair_blk]])
+        if len(due):
+            decoded[due] = True
+            r = rows[due]
+            norms = col["norms"][r]
+            counts = np.fromiter(map(len, norms), np.int64, len(r))
+            # ONE VByte pass for every block this round needs (batch decode
+            # identity unit-tested); blocks of pruned stripes are never touched
+            d, tf, nm = codec.decode_posting_blocks(
+                col["doc_gaps"][r], col["tfs"][r], norms, counts
+            )
+            sl = np.repeat(slot[due], counts)
+            key = (np.repeat(shard[due], counts) << KEY_SHIFT) | d
+            ok = np.ones(len(key), dtype=bool)
+            if allow is not None:
+                ok &= _member(allow, key)
+            if ban is not None:
+                ok &= ~_member(ban, key)
+            key, sl, tf, nm = key[ok], sl[ok], tf[ok], nm[ok]
+            w, tf32, cid = slot_w[sl], tf.astype(np.float32), slot_cache[sl]
+            if len(caches) == 1:
+                c = lucene.bm25_contrib(w, tf32, nm, caches[0])
+            else:
+                c = np.empty(len(key), dtype=np.float32)
+                for i, cache in enumerate(caches):
+                    m = cid == i
+                    c[m] = lucene.bm25_contrib(w[m], tf32[m], nm[m], cache)
+            p_key = np.concatenate([p_key, key])
+            p_slot = np.concatenate([p_slot, sl])
+            p_c = np.concatenate([p_c, slot_m[sl] * c.astype(np.float64)])
+            p_st = np.concatenate(
+                [p_st, np.searchsorted(st_key, key, side="right") - 1]
+            )
+        take = in_round[p_st]
+        o = np.argsort(p_slot[take], kind="stable")  # (branch, term) order
+        key, sl, c = p_key[take][o], p_slot[take][o], p_c[take][o]
+        p_key, p_slot, p_c, p_st = p_key[~take], p_slot[~take], p_c[~take], p_st[~take]
+        if not len(key):
+            continue
+        uniq, inv = np.unique(key, return_inverse=True)
+        nu = len(uniq)
+        flat = slot_br[sl] * nu + inv
+        # bincount adds in input order: each doc's float64 sum follows the
+        # (branch, term) order, the exact chain of the flat plan
+        sums32 = np.bincount(flat, weights=c, minlength=nbr * nu).astype(np.float32)
+        hits = np.bincount(flat, minlength=nbr * nu).reshape(nbr, nu) >= need[:, None]
+        sums32 = sums32.reshape(nbr, nu)
+        # bool/dismax combination in float64 over the float32 branch sums —
+        # the exact engine._fused chain
+        if kind == "bool":
+            cond = np.ones(nu, dtype=bool)
+            score = np.zeros(nu, dtype=np.float64)
+            for bi in musts:
+                cond &= hits[bi]
+                score += sums32[bi].astype(np.float64)
+            for bi in nots:
+                cond &= ~hits[bi]
+            ok_any = np.zeros(nu, dtype=bool)
+            for bi in shoulds:
+                ok_any |= hits[bi]
+                score += np.where(hits[bi], sums32[bi].astype(np.float64), 0.0)
+            if not musts:
+                cond &= ok_any
+        else:  # dismax
+            vals = np.where(hits, sums32.astype(np.float64), -np.inf)
+            cond = hits.any(axis=0)
+            mx = vals.max(axis=0)
+            total = np.where(vals == -np.inf, 0.0, vals).sum(axis=0)
+            score = mx + np.float64(tie) * (total - mx)
+        top_keys = np.concatenate([top_keys, uniq[cond]])
+        top_scores = np.concatenate([top_scores, score[cond].astype(np.float32)])
+        if len(top_scores) < k:
+            continue
+        kth = np.partition(top_scores, len(top_scores) - k)[len(top_scores) - k]
+        keep = top_scores >= kth
+        top_keys, top_scores = top_keys[keep], top_scores[keep]
+        if len(top_keys) > k + TIE_KEEP:
+            # cap ties per shard in (score desc, ordinal asc) order
+            sh = top_keys >> KEY_SHIFT
+            o = np.lexsort((top_keys, -top_scores.astype(np.float64), sh))
+            rank = np.arange(len(o)) - np.searchsorted(sh[o], sh[o], side="left")
+            o = o[rank < k + TIE_KEEP]
+            top_keys, top_scores = top_keys[o], top_scores[o]
+        theta = float(kth)
+    return top_keys, top_scores
+
+
+def _packed_unready(reader: IndexReader) -> str | None:
+    """Why the packed/WAND serving path cannot serve ``reader``, or None
+    when it can: quantized index, packed table present and not stale vs
+    the flat postings (appends since the last pack make WAND silently miss
+    docs — the staleness guard)."""
     if not reader.quantize:
-        return False
-    import os
-
-    if not os.path.isdir(os.path.join(reader.index_dir, "packed")):
-        return False
+        return "WAND serving path requires a quantized index"
     if "packed_seqnum" in reader.stats:  # absent = legacy stats (always packed)
         ps = reader.stats["packed_seqnum"]
         if ps is None or ps != reader.stats.get("seqnum"):
-            return False
-    return True
-
-
-def _resolve_pairs(reader: IndexReader, cand: pd.DataFrame) -> dict:
-    """(shard, ordinal) → docid for a candidate frame. Driver LUT when the
-    corpus fits (zero jobs after warmup); above that, pushed point-lookup
-    predicates against the ordinal map (parquet row-group pruned)."""
-    pairs = [(int(s), int(o)) for s, o in zip(cand["shard"], cand["ordinal"])]
-    omap = reader.ordinal_lookup(pairs)
-    if omap is None:  # corpus too big for the driver-side map — SQL lookup
-        pred = None
-        for s, g in cand.groupby("shard", sort=False):
-            p = (F.col("shard") == int(s)) & F.col("ordinal").isin(
-                [int(x) for x in g["ordinal"]]
+            return (
+                "packed table is stale (appends since last pack) — run merge()/"
+                "compact() or finalize(pack=True); the flat Searcher path is fresh"
             )
-            pred = p if pred is None else (pred | p)
-        omap = {
-            (int(r["shard"]), int(r["ordinal"])): int(r["docid"])
-            for r in reader.ordinal_map.where(pred).collect()
-        }
-    return omap
+    if not os.path.isdir(os.path.join(reader.index_dir, "packed")):
+        return "index has no packed table — run finalize(pack=True)"
+    return None
 
 
-def _wand_topk_driver(
-    reader: IndexReader,
-    field: str,
-    present: list[str],
-    weights: dict,
-    mults: dict,
-    cache: np.ndarray,
-    k: int,
-    n_stripes: int,
-    n_required: int,
-    bound_scale: float,
-) -> DataFrame:
+def packed_ready(reader: IndexReader) -> bool:
+    """True when the packed/WAND serving path is usable (_packed_unready)."""
+    return _packed_unready(reader) is None
+
+
+def _resolve_keys(reader: IndexReader, keys: np.ndarray) -> np.ndarray:
+    """Segmented keys → docids. Driver LUT when the corpus fits (zero jobs
+    after warmup); above that, pushed point-lookup predicates against the
+    ordinal map (parquet row-group pruned)."""
+    docids = reader.ordinal_lookup(keys)
+    if docids is not None:
+        return docids
+    shard, ords = keys >> KEY_SHIFT, keys & ORD_MASK
+    pred = None
+    for s in np.unique(shard):
+        p = (F.col("shard") == int(s)) & F.col("ordinal").isin(
+            [int(x) for x in ords[shard == s]]
+        )
+        pred = p if pred is None else (pred | p)
+    omap = {
+        (int(r["shard"]) << KEY_SHIFT) | int(r["ordinal"]): int(r["docid"])
+        for r in reader.ordinal_map.where(pred).collect()
+    }
+    return np.array([omap[int(x)] for x in keys], dtype=np.int64)
+
+
+def _topk_frame(reader: IndexReader, keys: np.ndarray, scores: np.ndarray, k: int) -> DataFrame:
+    """Kernel candidates → the global top-k under (score desc, docid asc)
+    as a pandas → Arrow → LocalRelation frame (~10x cheaper than the
+    row-list path, which builds an RDD-backed frame whose collect is a full
+    RDD job)."""
+    if not len(keys):
+        return reader.spark.createDataFrame([], FINAL_SCHEMA)
+    docids = _resolve_keys(reader, keys)
+    o = np.lexsort((docids, -scores.astype(np.float64)))[:k]
+    out = pd.DataFrame({"docid": docids[o], "score": scores[o]})
+    return reader.spark.createDataFrame(out, FINAL_SCHEMA)
+
+
+def _wand_topk_driver(reader: IndexReader, plan: dict, k: int, n_stripes: int) -> DataFrame:
     """Search-head WAND: the query's matched blocks come from a direct
     pyarrow read of the packed parquet (row-group pruned on the sorted term
     column — zero Spark jobs, zero plan compiles; IndexReader.fetch_packed
-    falls back to one Spark toPandas on non-local storage), the per-shard
-    numpy kernel runs in-process, and the ordinal→docid resolve hits the
+    falls back to one Spark read on non-local storage), ONE kernel call
+    scores every shard in-process, and the ordinal→docid resolve hits the
     driver LUT. Same kernel, same tie semantics → bit-identical to the
     distributed plan."""
-    spark = reader.spark
-    pdf = reader.fetch_packed(field, present)
-    if pdf.empty:
-        return spark.createDataFrame([], FINAL_SCHEMA)
-    parts = [
-        _shard_topk(g, weights, mults, cache, k, n_stripes, n_required, None, None, bound_scale)
-        for _, g in pdf.groupby("shard", sort=False)
-    ]
-    cand = pd.concat(parts, ignore_index=True)
-    if not len(cand):
-        return spark.createDataFrame([], FINAL_SCHEMA)
-    scores = cand["score"].to_numpy()
-    # only candidates at or above the global k-th score can reach the top-k
-    # (equal scores retained for the docid-asc tiebreak) — resolving just
-    # those keeps the ordinal_map filter to a handful of literals
-    theta = np.sort(scores)[::-1][min(k, len(scores)) - 1]
-    cand = cand[scores >= theta]
-    omap = _resolve_pairs(reader, cand)
-    rows = sorted(
-        (
-            (omap[(int(s), int(o))], float(v))
-            for s, o, v in zip(cand["shard"], cand["ordinal"], cand["score"])
-        ),
-        key=lambda t: (-t[1], t[0]),
-    )[:k]
-    # pandas → Arrow → LocalRelation: ~10x cheaper than the row-list path
-    # (which builds an RDD-backed frame whose collect is a full RDD job)
-    out = pd.DataFrame(
-        {
-            "docid": np.array([d for d, _ in rows], dtype=np.int64),
-            "score": np.array([v for _, v in rows], dtype=np.float32),
-        }
-    )
-    return spark.createDataFrame(out, FINAL_SCHEMA)
+    blocks = reader.fetch_packed(plan["field"], plan["present"])
+    keys, scores = _shard_topk(blocks, [plan], k, n_stripes)
+    return _topk_frame(reader, keys, scores, k)
 
 
 def match_scores_driver(
@@ -355,45 +415,34 @@ def match_scores_driver(
 ) -> "pd.DataFrame | None":
     """FULL match-set (docid, score float32) decoded on the search head —
     the driver analog of engine.score() for a match query, feeding facet
-    and sort-by-field serving. Reuses _shard_topk with an unreachable k
-    (no theta ever set, single stripe → plain decode-all), so the float32
+    and sort-by-field serving. One kernel call with an unreachable k (no
+    θ ever set, one stripe per shard → plain decode-all), so the float32
     score chain is the exact WAND/flat chain. Returns None when the packed
     path or the driver ordinal LUT is unavailable (callers fall back to
     the cluster plan); tombstones must be handled by the caller (decline)."""
     if not packed_ready(reader):
         return None
+    empty = pd.DataFrame({"docid": np.empty(0, np.int64), "score": np.empty(0, np.float32)})
     plan = _match_plan(reader, field, text, operator)
     if plan is None:
-        return pd.DataFrame({"docid": np.empty(0, np.int64), "score": np.empty(0, np.float32)})
-    pdf = reader.fetch_packed(field, plan["present"])
-    if pdf.empty:
-        return pd.DataFrame({"docid": np.empty(0, np.int64), "score": np.empty(0, np.float32)})
-    parts = [
-        _shard_topk(
-            g, plan["weights"], plan["mults"], plan["cache"], 1 << 60, 1,
-            plan["n_required"], None, None, plan["bound_scale"],
-        )
-        for _, g in pdf.groupby("shard", sort=False)
-    ]
-    cand = pd.concat(parts, ignore_index=True)
-    if not len(cand):
-        return pd.DataFrame({"docid": np.empty(0, np.int64), "score": np.empty(0, np.float32)})
-    pairs = [(int(s), int(o)) for s, o in zip(cand["shard"], cand["ordinal"])]
-    omap = reader.ordinal_lookup(pairs)
-    if omap is None:  # corpus too big for the driver map → cluster plan
+        return empty
+    blocks = reader.fetch_packed(field, plan["present"])
+    keys, scores = _shard_topk(blocks, [plan], 1 << 60, 1)
+    if not len(keys):
+        return empty
+    docids = reader.ordinal_lookup(keys)
+    if docids is None:  # corpus too big for the driver map → cluster plan
         return None
-    return pd.DataFrame(
-        {
-            "docid": np.array([omap[p] for p in pairs], dtype=np.int64),
-            "score": cand["score"].to_numpy(np.float32),
-        }
-    )
+    return pd.DataFrame({"docid": docids, "score": scores})
 
 
-def _match_plan(reader: IndexReader, field: str, text: str, operator: str = "or"):
+def _match_plan(
+    reader: IndexReader, field: str, text: str, operator: str = "or", role: str = "should"
+):
     """Resolve a match query's terms/weights/bounds against the dictionary
-    (driver-side, zero jobs on a local index). None = provably-empty query
-    (no known terms, or an AND with a missing term)."""
+    (driver-side, zero jobs on a local index) into a kernel branch of
+    ``role``. None = provably-empty query (no known terms, or an AND with a
+    missing term)."""
     terms = analyzer_py(reader.field_analyzer(field))(text)
     mult = Counter(terms)
     tstats = reader.term_stats(field, list(mult))
@@ -403,6 +452,7 @@ def _match_plan(reader: IndexReader, field: str, text: str, operator: str = "or"
     avgdl_now = float(reader.field_stats(field)["avgdl"])
     pack_avgdl = (reader.stats.get("pack_avgdl") or {}).get(field)
     return {
+        "role": role,
         "field": field,
         "present": present,
         "dfs": {t: int(tstats[t][0]) for t in present},
@@ -416,6 +466,15 @@ def _match_plan(reader: IndexReader, field: str, text: str, operator: str = "or"
     }
 
 
+def _est_blocks(reader: IndexReader, plans: list) -> int:
+    """Upper bound on the matched block count from dictionary df:
+    ceil(df/bs) + one boundary block per (term, shard, ordinal sub-group) —
+    known driver-side with zero jobs."""
+    bs = int(reader.stats.get("block_size", 128))
+    nsh = int(reader.stats.get("n_shards", 32))
+    return sum(p["dfs"][t] // bs + 1 + nsh for p in plans for t in p["present"])
+
+
 def rrf_topk_driver(
     reader: IndexReader,
     branches: list,
@@ -426,7 +485,7 @@ def rrf_topk_driver(
 ) -> DataFrame:
     """Search-head RRF over match branches (the rrf_fuse semantics of
     query/rrf.py executed entirely on the driver): each branch's top-window
-    comes from the same WAND numpy kernel (bit-identical branch scores),
+    comes from one call of the WAND kernel (bit-identical branch scores),
     ranks fuse as Σ 1/(rrf_k + rank) in float64 with the docid-asc tiebreak
     at every cut, and the fused top-``size`` returns as an Arrow
     LocalRelation. Zero Catalyst compiles — this is the serving answer to
@@ -438,13 +497,14 @@ def rrf_topk_driver(
     Requires ``packed_ready(reader)`` — callers route elsewhere when stale.
     """
     spark = reader.spark
-    plans = []
+    live = []
     for m in branches:
         field, text, op = (
             (m.field, m.query, m.operator) if hasattr(m, "field") else m
         )
-        plans.append(_match_plan(reader, field, text, op))
-    live = [p for p in plans if p is not None]
+        p = _match_plan(reader, field, text, op)
+        if p is not None:
+            live.append(p)
     empty = spark.createDataFrame([], "docid long, score double")
     if not live:
         return empty
@@ -452,261 +512,30 @@ def rrf_topk_driver(
     for p in live:
         by_field.setdefault(p["field"], set()).update(p["present"])
     fetched = {f: reader.fetch_packed(f, sorted(ts)) for f, ts in by_field.items()}
-    branch_cands = []
-    for p in live:
-        pdf = fetched[p["field"]]
-        pdf = pdf[pdf["term"].isin(p["present"])]
-        if pdf.empty:
-            branch_cands.append(None)
-            continue
-        parts = [
-            _shard_topk(
-                g, p["weights"], p["mults"], p["cache"], window, n_stripes,
-                p["n_required"], None, None, p["bound_scale"],
-            )
-            for _, g in pdf.groupby("shard", sort=False)
-        ]
-        cand = pd.concat(parts, ignore_index=True)
-        branch_cands.append(cand if len(cand) else None)
-    present_cands = [c for c in branch_cands if c is not None]
-    if not present_cands:
+    cands = [
+        _shard_topk(fetched[p["field"]], [p], window, n_stripes)
+        for p in live
+    ]
+    cands = [c for c in cands if len(c[0])]
+    if not cands:
         return empty
-    cat = pd.concat(present_cands, ignore_index=True)
-    omap = _resolve_pairs(reader, cat.drop_duplicates(["shard", "ordinal"]))
-    fused: dict[int, float] = {}
-    for c in branch_cands:
-        if c is None:
-            continue
-        docids = np.array(
-            [omap[(int(s), int(o))] for s, o in zip(c["shard"], c["ordinal"])],
-            dtype=np.int64,
-        )
-        scores = c["score"].to_numpy()
+    keys = np.unique(np.concatenate([c[0] for c in cands]))
+    docid_of = _resolve_keys(reader, keys)
+    docs, contribs = [], []
+    for bkeys, scores in cands:
+        docids = docid_of[np.searchsorted(keys, bkeys)]
         # branch rank = position under (score desc, docid asc) — the same
         # total order rrf_fuse's orderBy().limit(window) applies
-        order = np.lexsort((docids, -scores.astype(np.float64)))[:window]
-        for rank, idx in enumerate(order):
-            d = int(docids[idx])
-            fused[d] = fused.get(d, 0.0) + 1.0 / (float(rrf_k) + rank)
-    rows = sorted(fused.items(), key=lambda t: (-t[1], t[0]))[:size]
-    out = pd.DataFrame(
-        {
-            "docid": np.array([d for d, _ in rows], dtype=np.int64),
-            "score": np.array([v for _, v in rows], dtype=np.float64),
-        }
-    )
+        o = np.lexsort((docids, -scores.astype(np.float64)))[:window]
+        docs.append(docids[o])
+        contribs.append(1.0 / (float(rrf_k) + np.arange(len(o), dtype=np.float64)))
+    uniq, inv = np.unique(np.concatenate(docs), return_inverse=True)
+    # branch-major input order: each doc's float64 sum adds its branches in
+    # branch order
+    fused = np.bincount(inv, weights=np.concatenate(contribs), minlength=len(uniq))
+    o = np.lexsort((uniq, -fused))[:size]
+    out = pd.DataFrame({"docid": uniq[o], "score": fused[o]})
     return spark.createDataFrame(out, "docid long, score double")
-
-
-def _shard_bool_topk(
-    pdf: pd.DataFrame,
-    plans: list,
-    kind: str,
-    tie: float,
-    k: int,
-    n_stripes: int,
-) -> pd.DataFrame:
-    """Per-shard block-max pruned top-k for a FUSED bool/dis_max of match
-    branches — the multi-branch generalization of _shard_topk, replicating
-    engine._fused's quantized float chain exactly: per-branch sums are
-    float64 accumulations of float32 contribs cast to float32, combined in
-    float64 (must+matching-should sum, or max + tie·rest), final float32.
-
-    ``plans``: per-branch dicts from _match_plan + {"role"}; must_not
-    branches contribute no upper bound (exclusion only removes). Stripe
-    ub = Σ over positive branches of Σ_terms max block ub — sound for the
-    bool sum, and for dis_max with tie ≤ 1."""
-    shard = int(pdf["shard"].iloc[0])
-    empty = pd.DataFrame({"shard": [], "ordinal": [], "score": []}).astype(
-        {"shard": "int32", "ordinal": "int64", "score": "float32"}
-    )
-    # blocks per (branch, term): branches may share surface terms but carry
-    # their own weights/mults
-    binfo: list[dict] = []
-    lo, hi = np.iinfo(np.int64).max, np.iinfo(np.int64).min
-    for bi, p in enumerate(plans):
-        fpdf = pdf[(pdf["field"] == p["field"]) & pdf["term"].isin(p["present"])]
-        terms = list(dict.fromkeys(fpdf["term"]))
-        by_term = {t: g for t, g in fpdf.groupby("term", sort=False)}
-        blocks = {}
-        for t in terms:
-            tdf = by_term[t].sort_values("block_id")
-            first = tdf["block_id"].to_numpy(dtype=np.int64)
-            last = tdf["block_last"].to_numpy(dtype=np.int64)
-            ub = (
-                np.float64(p["mults"][t])
-                * np.float64(p["weights"][t])
-                * tdf["max_impact"].to_numpy(dtype=np.float64)
-                * UB_SLACK
-                * np.float64(p["bound_scale"])
-            )
-            blocks[t] = {
-                "first": first, "last": last, "ub": ub,
-                "gaps": tdf["doc_gaps"].tolist(), "tfs": tdf["tfs"].tolist(),
-                "norms": tdf["norms"].tolist(),
-            }
-            if p["role"] != "must_not":
-                lo = min(lo, int(first[0]))
-                hi = max(hi, int(last[-1]))
-        binfo.append({"plan": p, "blocks": blocks})
-    if lo > hi:
-        return empty
-    if sum(len(b["first"]) for info in binfo for b in info["blocks"].values()) <= 2 * n_stripes:
-        n_stripes = 1
-    edges = np.linspace(np.float64(lo), np.float64(hi) + 1.0, n_stripes + 1)
-    stripe_lo = edges[:-1].astype(np.int64)
-    stripe_lo[0] = np.iinfo(np.int64).min
-    stripe_hi = np.empty(n_stripes, dtype=np.int64)
-    stripe_hi[:-1] = stripe_lo[1:] - 1
-    stripe_hi[-1] = np.iinfo(np.int64).max
-
-    stripe_ub = np.zeros(n_stripes, dtype=np.float64)
-    overlap: list[list[tuple[int, str, int]]] = [[] for _ in range(n_stripes)]
-    for bi, info in enumerate(binfo):
-        positive = info["plan"]["role"] != "must_not"
-        for t, b in info["blocks"].items():
-            tmax = np.zeros(n_stripes, dtype=np.float64)
-            s0a = np.maximum(
-                np.searchsorted(stripe_lo, b["first"], side="right") - 1, 0
-            )
-            s1a = np.minimum(
-                np.searchsorted(stripe_lo, b["last"], side="right") - 1,
-                n_stripes - 1,
-            )
-            ubs = b["ub"]
-            for j, (a0, a1) in enumerate(zip(s0a, s1a)):
-                for s in range(a0, a1 + 1):
-                    overlap[s].append((bi, t, j))
-                if positive:
-                    tmax[a0 : a1 + 1] = np.maximum(tmax[a0 : a1 + 1], ubs[j])
-            stripe_ub += tmax
-
-    musts = [i for i, x in enumerate(binfo) if x["plan"]["role"] == "must"]
-    shoulds = [i for i, x in enumerate(binfo) if x["plan"]["role"] == "should"]
-    nots = [i for i, x in enumerate(binfo) if x["plan"]["role"] == "must_not"]
-    dis = [i for i, x in enumerate(binfo) if x["plan"]["role"] == "dismax"]
-
-    order = np.argsort(-stripe_ub, kind="stable")
-    top_docs = np.empty(0, dtype=np.int64)
-    top_scores = np.empty(0, dtype=np.float32)
-    theta = -np.inf
-    decoded: dict[tuple[int, str, int], tuple] = {}
-    for s in order:
-        if stripe_ub[s] < theta:
-            break
-        if not overlap[s]:
-            continue
-        # per-branch per-doc sums + term counts within this stripe
-        per_branch: dict[int, tuple] = {}
-        by_branch_docs: dict[int, list] = {}
-        by_branch_contribs: dict[int, list] = {}
-        todo = sorted(set(overlap[s]))  # deterministic accumulation order
-        pending: dict[tuple[int, str], list[int]] = {}
-        for bi, t, j in todo:
-            if (bi, t, j) not in decoded:
-                pending.setdefault((bi, t), []).append(j)
-        for (bi, t), js in pending.items():
-            # batch VByte decode per (branch, term) — same identity-tested
-            # kernel as _shard_topk's stripe decode
-            info = binfo[bi]
-            b = info["blocks"][t]
-            p = info["plan"]
-            counts_b = np.array([len(b["norms"][j]) for j in js], dtype=np.int64)
-            dv, tfv, nmv = codec.decode_posting_blocks(
-                [b["gaps"][j] for j in js],
-                [b["tfs"][j] for j in js],
-                [b["norms"][j] for j in js],
-                counts_b,
-            )
-            bounds = np.concatenate([[0], np.cumsum(counts_b)])
-            w = np.float32(p["weights"][t])
-            mult = np.float64(p["mults"][t])
-            for i, j in enumerate(js):
-                d = dv[bounds[i] : bounds[i + 1]]
-                tf = tfv[bounds[i] : bounds[i + 1]]
-                nm = nmv[bounds[i] : bounds[i + 1]]
-                c = lucene.bm25_contrib(w, tf.astype(np.float32), nm, p["cache"])
-                decoded[(bi, t, j)] = (d, mult * c.astype(np.float64))
-        for (bi, t, j) in todo:
-            d, c = decoded[(bi, t, j)]
-            mask = (d >= stripe_lo[s]) & (d <= stripe_hi[s])
-            if mask.any():
-                by_branch_docs.setdefault(bi, []).append(d[mask])
-                by_branch_contribs.setdefault(bi, []).append(c[mask])
-        if not any(bi in by_branch_docs for bi in (musts + shoulds + dis)):
-            continue
-        # union of positive docs in this stripe (must_not-only docs never score)
-        pos_docs = np.concatenate(
-            [x for bi in (musts + shoulds + dis) for x in by_branch_docs.get(bi, [])]
-        )
-        uniq = np.unique(pos_docs)
-        nb = len(binfo)
-        sums32 = np.zeros((nb, len(uniq)), dtype=np.float32)
-        counts = np.zeros((nb, len(uniq)), dtype=np.int64)
-        for bi in range(nb):
-            if bi not in by_branch_docs:
-                continue
-            d = np.concatenate(by_branch_docs[bi])
-            c = np.concatenate(by_branch_contribs[bi])
-            pos = np.searchsorted(uniq, d)
-            inside = (pos < len(uniq)) & (uniq[np.minimum(pos, len(uniq) - 1)] == d)
-            d, c, pos = d[inside], c[inside], pos[inside]
-            acc = np.zeros(len(uniq), dtype=np.float64)
-            np.add.at(acc, pos, c)
-            sums32[bi] = acc.astype(np.float32)
-            np.add.at(counts[bi], pos, 1)
-        # bool/dismax combination in float64 over the float32 branch sums —
-        # the exact engine._fused chain
-        if kind == "bool":
-            cond = np.ones(len(uniq), dtype=bool)
-            for bi in musts:
-                need = binfo[bi]["plan"]["n_required"] or 1
-                cond &= counts[bi] >= need
-            for bi in nots:
-                need = binfo[bi]["plan"]["n_required"] or 1
-                cond &= counts[bi] < need
-            score = np.zeros(len(uniq), dtype=np.float64)
-            for bi in musts:
-                score += sums32[bi].astype(np.float64)
-            ok_any = np.zeros(len(uniq), dtype=bool)
-            for bi in shoulds:
-                need = binfo[bi]["plan"]["n_required"] or 1
-                ok = counts[bi] >= need
-                ok_any |= ok
-                score += np.where(ok, sums32[bi].astype(np.float64), 0.0)
-            if not musts:
-                cond &= ok_any
-        else:  # dismax
-            vals = np.full((len(dis), len(uniq)), -np.inf, dtype=np.float64)
-            ok_any = np.zeros(len(uniq), dtype=bool)
-            for i, bi in enumerate(dis):
-                need = binfo[bi]["plan"]["n_required"] or 1
-                ok = counts[bi] >= need
-                ok_any |= ok
-                vals[i] = np.where(ok, sums32[bi].astype(np.float64), -np.inf)
-            cond = ok_any
-            mx = vals.max(axis=0)
-            total = np.where(vals == -np.inf, 0.0, vals).sum(axis=0)
-            score = mx + np.float64(tie) * (total - mx)
-        uniq, score = uniq[cond], score[cond]
-        if not len(uniq):
-            continue
-        scores = score.astype(np.float32)
-        top_docs = np.concatenate([top_docs, uniq])
-        top_scores = np.concatenate([top_scores, scores])
-        if len(top_docs) > k:
-            order_sel = np.lexsort((top_docs, -top_scores.astype(np.float64)))
-            kth = top_scores[order_sel[k - 1]]
-            keep_n = int(np.sum(top_scores >= kth))
-            keep_n = min(max(keep_n, k), k + 4096)
-            sel = order_sel[:keep_n]
-            top_docs, top_scores = top_docs[sel], top_scores[sel]
-        if len(top_docs) >= k:
-            theta = float(np.sort(top_scores)[::-1][k - 1])
-    return pd.DataFrame(
-        {"shard": np.full(len(top_docs), shard, dtype=np.int32),
-         "ordinal": top_docs, "score": top_scores}
-    )
 
 
 def bool_topk_driver(
@@ -716,7 +545,7 @@ def bool_topk_driver(
     kind: str = "bool",
     tie: float = 0.0,
     n_stripes: int = 32,
-    driver_max_blocks: int = 20_000,
+    driver_max_blocks: int = DRIVER_MAX_BLOCKS,
 ) -> DataFrame | None:
     """Search-head fused bool/dis_max top-k over match branches —
     bit-identical to engine._fused's flat plan (tests/test_serving.py).
@@ -729,10 +558,7 @@ def bool_topk_driver(
     spark = reader.spark
     plans = []
     for role, m in branches:
-        p = _match_plan(reader, m.field, m.query, m.operator)
-        if p is not None:
-            p = dict(p, role=role)
-        plans.append((role, p))
+        plans.append((role, _match_plan(reader, m.field, m.query, m.operator, role)))
     empty = spark.createDataFrame([], FINAL_SCHEMA)
     # dead-branch semantics identical to engine._fused
     if any(role == "must" and p is None for role, p in plans):
@@ -740,51 +566,19 @@ def bool_topk_driver(
     live = [p for _, p in plans if p is not None]
     if not any(p["role"] in ("must", "should", "dismax") for p in live):
         return empty
-    bs = int(reader.stats.get("block_size", 128))
-    nsh_est = int(reader.stats.get("n_shards", 32))
-    est_blocks = sum(
-        p["dfs"][t] // bs + 1 + nsh_est for p in live for t in p["present"]
-    )
-    if est_blocks > driver_max_blocks:
+    if _est_blocks(reader, live) > driver_max_blocks:
         return None
     by_field: dict[str, set] = {}
     for p in live:
         by_field.setdefault(p["field"], set()).update(p["present"])
-    # fetch_packed projects the field column away — re-tag per source frame
-    pdf = pd.concat(
-        [
-            reader.fetch_packed(f, sorted(ts)).assign(field=f)
-            for f, ts in by_field.items()
-        ],
-        ignore_index=True,
-    )
-    if pdf.empty:
-        return empty
-    parts = [
-        _shard_bool_topk(g, live, kind, float(tie), k, n_stripes)
-        for _, g in pdf.groupby("shard", sort=False)
-    ]
-    cand = pd.concat(parts, ignore_index=True)
-    if not len(cand):
-        return empty
-    scores = cand["score"].to_numpy()
-    theta = np.sort(scores)[::-1][min(k, len(scores)) - 1]
-    cand = cand[scores >= theta]
-    omap = _resolve_pairs(reader, cand)
-    rows = sorted(
-        (
-            (omap[(int(s), int(o))], float(v))
-            for s, o, v in zip(cand["shard"], cand["ordinal"], cand["score"])
-        ),
-        key=lambda t: (-t[1], t[0]),
-    )[:k]
-    out = pd.DataFrame(
-        {
-            "docid": np.array([d for d, _ in rows], dtype=np.int64),
-            "score": np.array([v for _, v in rows], dtype=np.float32),
-        }
-    )
-    return spark.createDataFrame(out, FINAL_SCHEMA)
+    tables = []
+    for f, ts in by_field.items():
+        t = reader.fetch_packed(f, sorted(ts))  # projects the field away
+        tables.append(t.append_column("field", pa.array([f] * len(t), pa.string())))
+    # promote: an empty Spark-fallback fetch carries null-typed columns
+    blocks = pa.concat_tables(tables, promote_options="default")
+    keys, scores = _shard_topk(blocks, live, k, n_stripes, kind, float(tie))
+    return _topk_frame(reader, keys, scores, k)
 
 
 def wand_topk(
@@ -797,41 +591,35 @@ def wand_topk(
     resolve: str = "auto",
     filters: dict | None = None,
     mode: str = "auto",
-    driver_max_blocks: int = 20_000,
+    driver_max_blocks: int = DRIVER_MAX_BLOCKS,
 ) -> DataFrame:
     """Block-max WAND match top-k over the packed table.
     ``operator="and"`` requires every query term per doc (conjunction is
     applied inside the stripe scorer; the OR upper bounds stay valid).
     ``resolve``: ordinal→docid strategy — "join" | "lookup" | "auto"
-    (lookup above 5M docs; see inline rationale).
+    (lookup above DRIVER_MAX_ROWS docs; see inline rationale).
     ``filters``: same predicate dict as the flat Searcher — applied inside
-    the pruned search as an allowed-ordinal mask (module docstring); results
+    the pruned search as an allowed-key mask (module docstring); results
     are bit-identical to ``Searcher.search(..., filters=...)``. Tombstones
-    are honored the same way (banned-ordinal set), so a WAND query between
+    are honored the same way (banned-key set), so a WAND query between
     deletes and the next compaction stays correct.
 
     ``mode``: physical strategy — "distributed" | "driver" | "auto". The
     driver path is the search-head pattern (the reference's coordinator
     searching Lucene segments in-process): when the dictionary says the
     query's matched blocks are small (Σ df/block_size ≤ driver_max_blocks,
-    known BEFORE any job), ONE job collects those blocks from the cached
-    packed scan, the same _shard_topk numpy kernel runs per shard on the
-    driver, and a second tiny job resolves just the global top-k ordinals.
-    That replaces the repartition exchange + python-worker round-trip +
-    broadcast-join job (~0.5 s of pure scheduling at any data size) with
-    ~2 small jobs. High-df queries — where block volume is real work —
-    keep the distributed plan; "auto" also falls back to it whenever a
-    filter or tombstones are in play (their ordinal sets belong on the
-    cluster). Results are bit-identical across modes (tests/test_wand.py)."""
-    if not reader.quantize:
-        raise ValueError("WAND serving path requires a quantized index")
-    if "packed_seqnum" in reader.stats:  # absent = legacy stats (always packed)
-        ps = reader.stats["packed_seqnum"]
-        if ps is None or ps != reader.stats.get("seqnum"):
-            raise ValueError(
-                "packed table is stale (appends since last pack) — run merge()/"
-                "compact() or finalize(pack=True); the flat Searcher path is fresh"
-            )
+    known BEFORE any job), the matched blocks are read on the driver, ONE
+    kernel call scores every shard, and the ordinal LUT resolves just the
+    global top-k. That replaces the repartition exchange + python-worker
+    round-trip + broadcast-join job (~0.5 s of pure scheduling at any data
+    size). High-df queries — where block volume is real work — keep the
+    distributed plan, one kernel call per partition; "auto" also falls back
+    to it whenever a filter or tombstones are in play (their ordinal sets
+    belong on the cluster). Results are bit-identical across modes
+    (tests/test_wand.py)."""
+    why = _packed_unready(reader)
+    if why is not None:
+        raise ValueError(why)
     spark = reader.spark
     # _match_plan resolves terms/weights and the avgdl-drift bound_scale
     # (incremental packs keep block max_impact bounds computed at the avgdl
@@ -843,12 +631,8 @@ def wand_topk(
     plan = _match_plan(reader, field, text, operator)
     if plan is None:
         return spark.createDataFrame([], FINAL_SCHEMA)
-    present = plan["present"]
-    n_required = plan["n_required"]
-    weights, mults = plan["weights"], plan["mults"]
-    cache, bound_scale = plan["cache"], plan["bound_scale"]
 
-    # resolve filters/tombstones to per-shard ordinal sets (docs rows carry
+    # resolve filters/tombstones to (shard, ordinal) sets (docs rows carry
     # shard + ordinal — a column projection, no join); "allow" mode when a
     # filter is present (tombstones anti-joined in), "ban" mode for
     # tombstones alone (cheaper: ships only deleted ordinals)
@@ -868,56 +652,50 @@ def wand_topk(
             2,
         )
 
-    bs = int(reader.stats.get("block_size", 128))
-    nsh_est = int(reader.stats.get("n_shards", 32))
-    # exact block count upper bound from dictionary df: ceil(df/bs) + one
-    # boundary block per (term, shard, ordinal sub-group) — known driver-side
-    # with zero jobs
-    est_blocks = sum(plan["dfs"][t] // bs + 1 + nsh_est for t in present)
     # filters/tombstones always take the distributed plan (their ordinal
     # sets belong on the cluster) — an explicit mode="driver" is a physical
     # HINT, never a license to drop the masks
     if fframe is None and (
-        mode == "driver" or (mode == "auto" and est_blocks <= driver_max_blocks)
+        mode == "driver"
+        or (mode == "auto" and _est_blocks(reader, [plan]) <= driver_max_blocks)
     ):
-        return _wand_topk_driver(
-            reader, field, present, weights, mults, cache, k, n_stripes,
-            n_required, bound_scale,
-        )
+        return _wand_topk_driver(reader, plan, k, n_stripes)
 
-    def run(batches) -> "pd.DataFrame":
-        # mapInPandas over an explicit repartition: AQE would coalesce the
+    def run(batches):
+        # mapInArrow over an explicit repartition: AQE would coalesce the
         # tiny query-time shuffle into ONE task (serializing all shards into
         # a single python worker); an explicit numPartitions exchange is
-        # never coalesced. Batches within a partition may split a shard, so
-        # concat first (query-matched blocks are small by construction).
-        chunks = list(batches)
-        if not chunks:
+        # never coalesced. One kernel call scores every shard of the
+        # partition (query-matched blocks are small by construction).
+        batches = list(batches)
+        if not batches:
             return
-        pdf = pd.concat(chunks, ignore_index=True)
-        for _, g in pdf.groupby("shard", sort=False):
-            allow = ban = None
-            if fmode:
-                ords = np.sort(
-                    g.loc[g["_f"] != 0, "f_ord"].to_numpy(dtype=np.int64)
-                )
-                if fmode == 1:
-                    allow = ords
-                elif len(ords):
-                    ban = ords
-                g = g[g["_f"] == 0]
-                if not len(g) or (fmode == 1 and not len(allow)):
-                    continue
-            yield _shard_topk(
-                g, weights, mults, cache, k, n_stripes, n_required, allow, ban,
-                bound_scale,
+        tbl = pa.Table.from_batches(batches)
+        allow = ban = None
+        if fmode:
+            f = tbl.column("_f").to_numpy()
+            sets = np.unique(
+                (tbl.column("shard").to_numpy()[f != 0].astype(np.int64) << KEY_SHIFT)
+                | tbl.column("f_ord").to_numpy()[f != 0].astype(np.int64)
             )
+            if fmode == 1:
+                allow = sets
+            else:
+                ban = sets
+            tbl = tbl.filter(pa.array(f == 0))
+        keys, scores = _shard_topk(tbl, [plan], k, n_stripes, allow=allow, ban=ban)
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array((keys >> KEY_SHIFT).astype(np.int32)),
+                pa.array(keys & ORD_MASK),
+                pa.array(scores),
+            ],
+            names=["shard", "ordinal", "score"],
+        )
 
     matched = reader.packed.where(
-        (F.col("field") == field) & F.col("term").isin(present)
-    ).select(
-        "shard", "term", "block_id", "block_last", "doc_gaps", "tfs", "norms", "max_impact"
-    )
+        (F.col("field") == field) & F.col("term").isin(plan["present"])
+    ).select(*IndexReader.PACKED_FETCH_COLS)
     if fmode:
         # union the ordinal set into the SAME exchange as the packed blocks
         # (one shuffle, co-located by shard; no cogroup — grouped applyInPandas
@@ -939,13 +717,13 @@ def wand_topk(
         )
         matched = matched.unionByName(fpad)
     nsh = int(reader.stats.get("n_shards", 32))
-    local = matched.repartition(nsh, "shard").mapInPandas(run, schema=TOPK_SCHEMA)
+    local = matched.repartition(nsh, "shard").mapInArrow(run, schema=TOPK_SCHEMA)
     # map shard-local ordinals back to global docids. Two physical
     # strategies with identical results:
     # - "join": broadcast the tiny candidate frame against the
     #   (shard, ordinal, docid) map — one job, minimal plan, fastest when
     #   the map fits a cached scan (sandbox scale);
-    # - "lookup": collect the ≈k-per-shard candidates and fold them into
+    # - "lookup": collect the ≈k-per-partition candidates and fold them into
     #   pushable point predicates (OR of shard = s AND ordinal IN (...))
     #   + a literal score map — at 10^9+ docs the join side would scan the
     #   WHOLE docs-derived map per query, while the predicates prune to a
@@ -956,7 +734,7 @@ def wand_topk(
         (f.get("doc_count", 0) for f in reader.stats.get("fields", {}).values()),
         default=0,
     )
-    use_lookup = resolve == "lookup" or (resolve == "auto" and doc_count > 5_000_000)
+    use_lookup = resolve == "lookup" or (resolve == "auto" and doc_count > DRIVER_MAX_ROWS)
     if not use_lookup:
         joined = reader.ordinal_map.join(F.broadcast(local), ["shard", "ordinal"])
         return (

@@ -418,7 +418,7 @@ _FR_S2A = sorted(
      "iront", "is", "issaIent", "issais", "issait", "issant", "issante",
      "issantes", "issants", "isse", "issent", "isses", "issez", "issiez",
      "issions", "issons", "it"],
-    key=len, reverse=True,
+    key=lambda s: (-len(s), s),
 )
 
 _FR_S2B_GROUPS = {
@@ -858,7 +858,7 @@ ES_VOWELS = "aeiouáéíóúü"
 _ES_S0_PRON = sorted(
     ["me", "se", "sela", "selo", "selas", "selos", "la", "le", "lo",
      "las", "les", "los", "nos"],
-    key=len, reverse=True,
+    key=lambda s: (-len(s), s),
 )
 # (a) un-accent the preceding verb suffix; (b) plain; (c) yendo after u
 _ES_S0_A = {"iéndo": "iendo", "ándo": "ando", "ár": "ar", "ér": "er", "ír": "ir"}
@@ -885,7 +885,7 @@ _ES_S1 = sorted(
 _ES_S2A = sorted(
     ["ya", "ye", "yan", "yen", "yeron", "yendo", "yo", "yó", "yas", "yes",
      "yais", "yamos"],
-    key=len, reverse=True,
+    key=lambda s: (-len(s), s),
 )
 
 _ES_S2B_GU = ["en", "es", "éis", "emos"]
@@ -1241,7 +1241,7 @@ _IT_S0_PRON = sorted(
      "mele", "meli", "melo", "mene", "tela", "tele", "teli", "telo",
      "tene", "cela", "cele", "celi", "celo", "cene", "vela", "vele",
      "veli", "velo", "vene"],
-    key=len, reverse=True,
+    key=lambda s: (-len(s), s),
 )
 
 _IT_S1_GROUPS = {
@@ -1274,7 +1274,7 @@ _IT_S2 = sorted(
      "irò", "irono", "isca", "iscano", "isce", "isci", "isco", "iscono",
      "issero", "ita", "ite", "iti", "ito", "iva", "ivamo", "ivano",
      "ivate", "ivi", "ivo", "ono", "uta", "ute", "uti", "uto", "ar", "ir"],
-    key=len, reverse=True,
+    key=lambda s: (-len(s), s),
 )
 
 
@@ -1567,7 +1567,7 @@ _PT_S2 = sorted(
      "ávamos", "emos", "aremos", "eremos", "iremos", "ássemos",
      "êssemos", "íssemos", "imos", "armos", "ermos", "irmos", "eu",
      "iu", "ou", "ira", "iras"],
-    key=len, reverse=True,
+    key=lambda s: (-len(s), s),
 )
 
 _PT_S4 = ["os", "a", "i", "o", "á", "í", "ó"]  # residual, RV post-test
@@ -2102,7 +2102,7 @@ _RU_ADJ = sorted(
     ["ее", "ие", "ые", "ое", "ими", "ыми", "ей", "ий", "ый", "ой", "ем",
      "им", "ым", "ом", "его", "ого", "ему", "ому", "их", "ых", "ую", "юю",
      "ая", "яя", "ою", "ею"],
-    key=len, reverse=True,
+    key=lambda s: (-len(s), s),
 )
 _RU_PART_1 = ["ем", "нн", "вш", "ющ", "щ"]  # preceded by а/я (in RV)
 _RU_PART_2 = ["ивш", "ывш", "ующ"]
@@ -2130,7 +2130,7 @@ def _ru_try(w: str, rv: int, g1: list[str], g2: list[str]) -> str | None:
     immediately before (itself inside RV). Among semantics: the longest
     surface match within RV decides; a failed g1 а/я test means NO removal
     (no backtracking to shorter suffixes)."""
-    for suf in sorted(set(g1) | set(g2), key=len, reverse=True):
+    for suf in sorted(set(g1) | set(g2), key=lambda s: (-len(s), s)):
         pos = len(w) - len(suf)
         if not (w.endswith(suf) and pos >= rv):
             continue
@@ -2173,7 +2173,7 @@ def russian_py(word: str) -> str:
             if out is not None:
                 w = out
             else:
-                for suf in sorted(set(_RU_NOUN), key=len, reverse=True):
+                for suf in sorted(set(_RU_NOUN), key=lambda s: (-len(s), s)):
                     pos = len(w) - len(suf)
                     if w.endswith(suf) and pos >= rv:
                         w = w[:pos]
@@ -2224,7 +2224,7 @@ def _ru_try_sql(x: str, g1: list[str], g2: list[str]) -> str:
     _ru_try); yields the stripped word or {x} unchanged."""
     g2set = set(g2)
     cases = []
-    for suf in sorted(set(g1) | g2set, key=len, reverse=True):
+    for suf in sorted(set(g1) | g2set, key=lambda s: (-len(s), s)):
         n = len(suf)
         pos = f"(length({x}) - {n})"
         st = _strip(x, n)
@@ -2242,7 +2242,7 @@ def _ru_try_sql(x: str, g1: list[str], g2: list[str]) -> str:
 def _ru_suffix_sql(x: str, sufs: list[str]) -> str:
     """Plain RV-limited delete-among (reflexive / noun / step amongs)."""
     cases = []
-    for suf in sorted(set(sufs), key=len, reverse=True):
+    for suf in sorted(set(sufs), key=lambda s: (-len(s), s)):
         n = len(suf)
         pos = f"(length({x}) - {n})"
         cases.append(
@@ -2336,7 +2336,7 @@ _SV_STEP1 = sorted(
      "er", "heter", "or", "as", "arnas", "ernas", "ornas", "es", "ades",
      "andes", "ens", "arens", "hetens", "erns", "at", "andet", "het",
      "ast"],
-    key=len, reverse=True,
+    key=lambda s: (-len(s), s),
 )
 _SV_STEP3 = [("fullt", "full"), ("löst", "lös"), ("lig", ""), ("els", ""), ("ig", "")]
 
@@ -2347,7 +2347,7 @@ def swedish_py(word: str) -> str:
     # step 1: among matched WITHIN R1 (setlimit tomark p1 — the longest
     # suffix that fits entirely inside R1 wins; a longer surface suffix
     # poking out of R1 does not shadow it); s needs a valid s-ending
-    for suf in sorted(set(_SV_STEP1) | {"s"}, key=len, reverse=True):
+    for suf in sorted(set(_SV_STEP1) | {"s"}, key=lambda s: (-len(s), s)):
         pos = len(w) - len(suf)
         if not (w.endswith(suf) and pos >= r1):
             continue
@@ -2375,12 +2375,12 @@ _NO_STEP1_DEL = sorted(
     ["a", "e", "ede", "ande", "ende", "ane", "ene", "hetene", "en",
      "heten", "ar", "er", "heter", "as", "es", "edes", "endes", "enes",
      "hetenes", "ens", "hetens", "ers", "ets", "et", "het", "ast"],
-    key=len, reverse=True,
+    key=lambda s: (-len(s), s),
 )
 _NO_STEP3 = sorted(
     ["hetslov", "slov", "elov", "lov", "eleg", "elig", "leg", "lig",
      "eig", "els", "ig"],
-    key=len, reverse=True,
+    key=lambda s: (-len(s), s),
 )
 
 
@@ -2388,7 +2388,7 @@ def norwegian_py(word: str) -> str:
     w = word
     r1, _ = _r1r2_py(w, NO_VOWELS, r1_min=3)
     # step 1: among matched WITHIN R1 (longest suffix inside R1 wins)
-    for suf in sorted(set(_NO_STEP1_DEL) | {"s", "erte", "ert"}, key=len, reverse=True):
+    for suf in sorted(set(_NO_STEP1_DEL) | {"s", "erte", "ert"}, key=lambda s: (-len(s), s)):
         pos = len(w) - len(suf)
         if not (w.endswith(suf) and pos >= r1):
             continue
@@ -2421,7 +2421,7 @@ _DA_STEP1_DEL = sorted(
      "erne", "ere", "en", "heden", "eren", "er", "heder", "erer", "heds",
      "es", "endes", "erendes", "enes", "ernes", "eres", "ens", "hedens",
      "erens", "ers", "ets", "erets", "et", "eret"],
-    key=len, reverse=True,
+    key=lambda s: (-len(s), s),
 )
 
 
@@ -2429,7 +2429,7 @@ def danish_py(word: str) -> str:
     w = word
     r1, _ = _r1r2_py(w, DA_VOWELS, r1_min=3)
     # step 1: among matched WITHIN R1 (longest suffix inside R1 wins)
-    for suf in sorted(set(_DA_STEP1_DEL) | {"s"}, key=len, reverse=True):
+    for suf in sorted(set(_DA_STEP1_DEL) | {"s"}, key=lambda s: (-len(s), s)):
         pos = len(w) - len(suf)
         if not (w.endswith(suf) and pos >= r1):
             continue
@@ -2478,7 +2478,7 @@ def danish_py(word: str) -> str:
 def _scand_among_sql(x: str, sufs: list[str], s_cond: str | None) -> str:
     """Longest-match among over ``sufs`` ∪ {'s'}: delete if in R1; 's'
     additionally needs ``s_cond`` (a SQL predicate over {x})."""
-    entries = sorted(set(sufs) | {"s"}, key=len, reverse=True)
+    entries = sorted(set(sufs) | {"s"}, key=lambda s: (-len(s), s))
     cases = []
     for suf in entries:
         n = len(suf)
@@ -2535,7 +2535,7 @@ def norwegian_sql_ctes(src: str, out: str, p: str = "no_") -> str:
         f"AND NOT contains('{NO_VOWELS}', {prev2})))"
     )
     # one among over delete-list ∪ {s, erte, ert}
-    entries = sorted(set(_NO_STEP1_DEL) | {"s", "erte", "ert"}, key=len, reverse=True)
+    entries = sorted(set(_NO_STEP1_DEL) | {"s", "erte", "ert"}, key=lambda s: (-len(s), s))
     cases = []
     for suf in entries:
         n = len(suf)
@@ -2674,7 +2674,7 @@ _RO_STEP2_DEL = [
 _RO_STEP2_IST = ["ism", "isme", "ist", "ista", "iste", "isti", "istă", "iști"]
 _RO_STEP2_IUNE = ["iune", "iuni"]
 _RO_STEP2_ALL = sorted(
-    _RO_STEP2_DEL + _RO_STEP2_IST + _RO_STEP2_IUNE, key=len, reverse=True
+    _RO_STEP2_DEL + _RO_STEP2_IST + _RO_STEP2_IUNE, key=lambda s: (-len(s), s)
 )
 _RO_IST_SET = set(_RO_STEP2_IST)
 
@@ -2700,7 +2700,7 @@ _RO_VERB_2 = [
     "seși", "serăm", "serăți", "seră", "sei", "se",
     "sesem", "seseși", "sese", "seserăm", "seserăți", "seseră",
 ]
-_RO_VERB_ALL = sorted(set(_RO_VERB_1) | set(_RO_VERB_2), key=len, reverse=True)
+_RO_VERB_ALL = sorted(set(_RO_VERB_1) | set(_RO_VERB_2), key=lambda s: (-len(s), s))
 _RO_VERB_2_SET = set(_RO_VERB_2)
 
 
@@ -3236,12 +3236,12 @@ _FI_CASE_PLAIN = ("ssa", "ssä", "sta", "stä", "lla", "llä", "lta", "ltä",
 _FI_CASE = sorted(
     list(_FI_HXN) + ["siin", "den", "tten", "seen", "tta", "ttä"]
     + list(_FI_CASE_PLAIN) + ["a", "ä", "n"],
-    key=len, reverse=True,
+    key=lambda s: (-len(s), s),
 )
 _FI_OTHER = sorted(
     ["impi", "impa", "impä", "immi", "imma", "immä",
      "mpi", "mpa", "mpä", "mmi", "mma", "mmä", "eja", "ejä"],
-    key=len, reverse=True,
+    key=lambda s: (-len(s), s),
 )
 
 
@@ -3255,7 +3255,7 @@ def finnish_py(word: str) -> str:
 
     # step 1: particles. longest in-R1 match; sti needs R2, the others a
     # preceding n, t or vowel
-    for suf in sorted(_FI_PARTICLES, key=len, reverse=True):
+    for suf in sorted(_FI_PARTICLES, key=lambda s: (-len(s), s)):
         pos = len(w) - len(suf)
         if not (w.endswith(suf) and pos >= r1):
             continue
@@ -3268,7 +3268,7 @@ def finnish_py(word: str) -> str:
         break
 
     # step 2: possessives
-    for suf in sorted(_FI_POSS, key=len, reverse=True):
+    for suf in sorted(_FI_POSS, key=lambda s: (-len(s), s)):
         pos = len(w) - len(suf)
         if not (w.endswith(suf) and pos >= r1):
             continue
@@ -3379,7 +3379,7 @@ def _fi_prev_in(x: str, n: int, chars: str) -> str:
 
 def _fi_s1_sql(x: str) -> str:
     whens = []
-    for suf in sorted(_FI_PARTICLES, key=len, reverse=True):
+    for suf in sorted(_FI_PARTICLES, key=lambda s: (-len(s), s)):
         n = len(suf)
         b = _strip(x, n)
         cond = (
@@ -3395,7 +3395,7 @@ def _fi_s1_sql(x: str) -> str:
 
 def _fi_s2_sql(x: str) -> str:
     whens = []
-    for suf in sorted(_FI_POSS, key=len, reverse=True):
+    for suf in sorted(_FI_POSS, key=lambda s: (-len(s), s)):
         n = len(suf)
         b = _strip(x, n)
         if suf == "si":

@@ -88,3 +88,49 @@ def test_duplicate_docids_in_batch_keep_per_row_ordinals(spark, tmp_path):
     # the two duplicate rows carry distinct ordinals (append-safe)
     dup = docs.where("path = 'p'").toPandas()
     assert len(set(dup["ordinal"])) == 2
+
+
+def test_failed_postings_plan_joins_docs_write_and_restores_conf(spark, tmp_path, monkeypatch):
+    """Fault injection: when the postings plan raises after the docs write
+    was submitted, the build must still join the docs-write thread, shut
+    its pool down and restore the session conf it overrode."""
+    import concurrent.futures as cf
+
+    pools = []
+
+    class RecordingPool(cf.ThreadPoolExecutor):
+        def __init__(self, *a, **kw):
+            super().__init__(*a, **kw)
+            self.futures, self.closed = [], False
+            pools.append(self)
+
+        def submit(self, *a, **kw):
+            f = super().submit(*a, **kw)
+            self.futures.append(f)
+            return f
+
+        def shutdown(self, *a, **kw):
+            self.closed = True
+            super().shutdown(*a, **kw)
+
+    mpb, sp = "spark.sql.files.maxPartitionBytes", "spark.sql.shuffle.partitions"
+    before = (spark.conf.get(mpb), spark.conf.get(sp))
+
+    def tune(self, base, parallelism):  # what a large file input does
+        self._last_input_bytes = 2 * int(before[1]) * 16 * 1024 * 1024
+        spark.conf.set(mpb, str(4 * 1024 * 1024))
+        return before[0]
+
+    def boom(self, *a, **kw):
+        raise RuntimeError("injected postings-plan failure")
+
+    monkeypatch.setattr(cf, "ThreadPoolExecutor", RecordingPool)
+    monkeypatch.setattr(IndexBuilder, "_tune_input_splits", tune)
+    monkeypatch.setattr(IndexBuilder, "_postings_plan", boom)
+    b = IndexBuilder(spark, IndexConfig(text_fields=("content",), n_shards=2))
+    with pytest.raises(RuntimeError, match="injected"):
+        b.build(spark.createDataFrame(make_corpus(40, seed=5)), str(tmp_path / "idx"))
+    assert len(pools) == 1 and pools[0].closed
+    assert pools[0].futures and all(f.done() for f in pools[0].futures)
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+    assert (spark.conf.get(mpb), spark.conf.get(sp)) == before

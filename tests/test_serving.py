@@ -215,3 +215,73 @@ def test_dismax_driver_equals_flat(built):
         tie_breaker=1.5,
     )
     assert _pairs(s.search(q, size=8).collect()) == _flat_pairs(s, q, 8)
+
+
+@pytest.mark.parametrize("n_stripes", [1, 2, 4])
+def test_bool_dismax_kernel_multi_stripe_equals_flat(built, n_stripes):
+    """The one kernel with few stripes per shard (several stripes of every
+    shard ranked against one global θ): bool with must_not and dis_max at
+    tie 0 / 0.3 / 1.0 stay bit-identical to the flat plan."""
+    from nixiesearch_spark.query import BoolQuery, DisMaxQuery
+    from nixiesearch_spark.query.wand import bool_topk_driver
+
+    s = Searcher(built, plan_cache=False)
+
+    def bits(rows):
+        return [(x["docid"], np.float32(x["score"]).tobytes()) for x in rows]
+
+    bools = [
+        BoolQuery(should=[MatchQuery("content", "def import")],
+                  must_not=[MatchQuery("content", "return")]),
+        BoolQuery(must=[MatchQuery("content", "the")],
+                  should=[MatchQuery("content", "while for")],
+                  must_not=[MatchQuery("content", "import def", "and")]),
+    ]
+    for q in bools:
+        branches = ([("must", m) for m in q.must] + [("should", m) for m in q.should]
+                    + [("must_not", m) for m in q.must_not])
+        got = bool_topk_driver(built, branches, k=10, n_stripes=n_stripes).collect()
+        assert bits(got) == bits(s.search(q, size=10, mode="flat").collect()), q
+    for tie in (0.0, 0.3, 1.0):
+        q = DisMaxQuery(queries=[MatchQuery("content", "def import"),
+                                 MatchQuery("content", "the return")], tie_breaker=tie)
+        got = bool_topk_driver(
+            built, [("dismax", m) for m in q.queries], k=10, kind="dismax", tie=tie,
+            n_stripes=n_stripes,
+        ).collect()
+        assert bits(got) == bits(s.search(q, size=10, mode="flat").collect()), tie
+
+
+def test_match_scores_driver_after_append_with_avgdl_drift(spark, tmp_path):
+    """Facet match set after an incremental append of LONGER docs: the
+    stored block bounds were packed at a smaller avgdl, so bound_scale > 1;
+    the full match set (docids and float32 bits) must equal the flat
+    score() set, and the search-head top-k the flat top-k."""
+    from nixiesearch_spark.corpus import make_corpus
+    from nixiesearch_spark.query import wand
+    from nixiesearch_spark.streaming import IncrementalIndexer
+
+    cfg = IndexConfig(text_fields=("content",), id_col="doc_id", n_shards=2, block_size=16)
+    idx = str(tmp_path / "drift")
+    full = make_corpus(240, seed=9)
+    full.insert(0, "doc_id", range(240))
+    IndexBuilder(spark, cfg).build(spark.createDataFrame(full.iloc[:200]), idx)
+    extra = full.iloc[200:].copy()
+    extra["content"] = extra["content"] + " " + extra["content"]
+    IncrementalIndexer(spark, cfg, idx, pack_each_batch=True).process_batch(
+        spark.createDataFrame(extra), batch_id=1
+    )
+    r = IndexReader(spark, idx)
+    assert packed_ready(r)
+    s = Searcher(r, plan_cache=False)
+    for text, op in (("def import return", "or"), ("the", "or"), ("def import", "and")):
+        assert wand._match_plan(r, "content", text, op)["bound_scale"] > 1.0
+        q = MatchQuery("content", text, op)
+        ms = wand.match_scores_driver(r, "content", text, op)
+        flat = s.score(q).toPandas()
+        got = sorted(zip(ms["docid"].tolist(), [np.float32(x).tobytes() for x in ms["score"]]))
+        want = sorted(zip(flat["docid"].tolist(), [np.float32(x).tobytes() for x in flat["score"]]))
+        assert len(got) > 0 and got == want, text
+        assert _pairs(s.search(q, size=10).collect()) == _pairs(
+            s.search(q, size=10, mode="flat").collect()
+        )

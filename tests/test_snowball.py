@@ -580,3 +580,27 @@ def test_spark_column_form_matches_python(spark):
         }
         want = {i: analyzer_py(lang)(t) for i, t in rows}
         assert got == want, (lang, got, want)
+
+
+def test_oracle_sql_text_independent_of_hash_seed():
+    """oracle_sql() text must not depend on set iteration order: the
+    among-tables sort ties on length break by the suffix itself."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    dump = (
+        "import json, sys, __spark_entry__ as e; "
+        "sys.stdout.write(json.dumps(e.oracle_sql(), sort_keys=True))"
+    )
+    outs = []
+    for seed in ("1", "2"):
+        env = dict(os.environ, PYTHONHASHSEED=seed)
+        p = subprocess.run(
+            [sys.executable, "-c", dump], cwd=root, env=env, capture_output=True,
+            timeout=300,
+        )
+        assert p.returncode == 0, p.stderr.decode()[-2000:]
+        outs.append(p.stdout)
+    assert outs[0] and outs[0] == outs[1]

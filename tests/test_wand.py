@@ -196,3 +196,141 @@ def test_wand_tombstones_ban_and_allow(built, spark, tmp_path):
         (r["docid"], np.float32(r["score"])) for r in wandf
     ]
     assert not (set(dead) & {r["docid"] for r in wandf})
+
+
+# ---- cross-shard kernel identity: a purpose-built 2-shard corpus (shard =
+# doc_id % 2) with 4-posting blocks, so every query term spans several
+# stripes per shard at n_stripes=4
+
+
+def _striped_rows():
+    rows = []
+    for i in range(120):
+        if i % 10 in (3, 4):  # identical docs in both shards → exact ties
+            text = "tiedoc filler"
+        else:
+            words = ["common", f"filler{i % 5}"] + ["pad"] * (i % 7)
+            if i % 6 == 0:  # shard 0 only
+                words += ["zzrare", "zzrare"]
+            if i % 4 == 0:  # shard 0 only
+                words.append("onlyzero")
+            text = " ".join(words)
+        rows.append((i, "py" if i % 3 == 0 else "go", text))
+    return rows
+
+
+@pytest.fixture(scope="module")
+def striped(spark, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("idxstriped"))
+    df = spark.createDataFrame(_striped_rows(), "doc_id long, lang string, content string")
+    cfg = IndexConfig(
+        text_fields=("content",), id_col="doc_id", n_shards=2, quantize=True, block_size=4
+    )
+    IndexBuilder(spark, cfg).build(df, d)
+    return IndexReader(spark, d)
+
+
+def _bits(rows):
+    return [(r["docid"], np.float32(r["score"]).tobytes()) for r in rows]
+
+
+def _flat(reader, text, k, operator="or", filters=None):
+    return Searcher(reader).search(
+        MatchQuery("content", text, operator), size=k, filters=filters, mode="flat"
+    ).collect()
+
+
+def test_global_theta_prunes_stripes_of_another_shard(striped):
+    """Shard 1 holds no 'zzrare': its stripes are bounded by 'common' alone,
+    far below the scores shard 0 finds first. The global θ must skip them
+    undecoded — proven by corrupting every shard-1 block, which raises the
+    moment it is decoded (as it is when shard 1 is scored on its own)."""
+    import pyarrow as pa
+
+    from nixiesearch_spark.query import wand
+
+    text, k, n_stripes = "zzrare common", 3, 4
+    plan = wand._match_plan(striped, "content", text)
+    blocks = striped.fetch_packed("content", plan["present"])
+    shard = blocks.column("shard").to_numpy()
+    assert min((shard == 0).sum(), (shard == 1).sum()) > 2 * n_stripes  # several stripes
+    gaps = blocks.column("doc_gaps").to_pylist()
+    gaps = [b"\x01" * 9 if s == 1 else g for s, g in zip(shard, gaps)]  # 9 ≠ any count
+    bad = blocks.set_column(
+        blocks.schema.get_field_index("doc_gaps"), "doc_gaps", pa.array(gaps, pa.binary())
+    )
+    branch = [plan]
+    with pytest.raises(ValueError):
+        wand._shard_topk(bad.filter(pa.array(shard == 1)), branch, k, n_stripes)
+    keys, scores = wand._shard_topk(bad, branch, k, n_stripes)
+    got = wand._topk_frame(striped, keys, scores, k).collect()
+    assert _bits(got) == _bits(_flat(striped, text, k))
+
+
+@pytest.mark.parametrize("mode", ["driver", "distributed"])
+@pytest.mark.parametrize("k", [1, 3, 7, 30])
+def test_ties_at_kth_score_span_shards(striped, mode, k):
+    got = wand_topk(striped, "content", "tiedoc", k=k, n_stripes=4, mode=mode).collect()
+    flat = _flat(striped, "tiedoc", k)
+    assert len({r["score"] for r in flat}) == 1  # one tie group
+    assert len({r["docid"] % 2 for r in flat[: max(k, 2)]}) == (1 if k == 1 else 2)
+    assert _bits(got) == _bits(flat)
+
+
+@pytest.mark.parametrize("mode", ["driver", "distributed"])
+@pytest.mark.parametrize("text", ["onlyzero common", "zzrare onlyzero pad"])
+def test_and_with_term_missing_from_a_shard(striped, mode, text):
+    got = wand_topk(
+        striped, "content", text, k=10, n_stripes=4, operator="and", mode=mode
+    ).collect()
+    flat = _flat(striped, text, 10, "and")
+    assert flat and all(r["docid"] % 2 == 0 for r in flat)
+    assert _bits(got) == _bits(flat)
+
+
+@pytest.mark.parametrize("text", ["zzrare common", "common pad tiedoc", "filler1 pad"])
+def test_multi_stripe_modes_identical(striped, text):
+    flat = _flat(striped, text, 12)
+    for mode in ("driver", "distributed"):
+        got = wand_topk(striped, "content", text, k=12, n_stripes=4, mode=mode).collect()
+        assert _bits(got) == _bits(flat), mode
+
+
+def test_distributed_filtered_and_tombstoned_identity(striped, spark, tmp_path):
+    import shutil
+
+    flt = {"term": {"lang": "py"}}
+    for text in ("zzrare common", "tiedoc", "filler2 pad"):
+        got = wand_topk(striped, "content", text, k=8, n_stripes=4, filters=flt).collect()
+        assert _bits(got) == _bits(_flat(striped, text, 8, filters=flt)), text
+    d = str(tmp_path / "striped_tomb")
+    shutil.copytree(striped.index_dir, d)
+    top = _flat(striped, "zzrare common", 4)
+    dead = [top[0]["docid"], top[3]["docid"], 3]  # shard 0 and shard 1 docs
+    spark.createDataFrame([(int(x),) for x in dead], "docid long").coalesce(1).write.mode(
+        "append"
+    ).parquet(d + "/tombstones")
+    r2 = IndexReader(spark, d)
+    for text, f in (("zzrare common", None), ("tiedoc", None), ("zzrare common", flt)):
+        got = wand_topk(r2, "content", text, k=8, n_stripes=4, filters=f).collect()
+        flat = _flat(r2, text, 8, filters=f)
+        assert not set(dead) & {r["docid"] for r in got}
+        assert _bits(got) == _bits(flat), (text, f)
+
+
+def test_spark_fetch_fallback_identity(striped, monkeypatch):
+    """Non-local storage: fetch_packed reads through Spark instead of
+    pyarrow; the search-head kernels must answer identically."""
+    from nixiesearch_spark.query import BoolQuery
+    from nixiesearch_spark.query.wand import bool_topk_driver
+
+    monkeypatch.setattr(type(striped), "_local_dataset", lambda self, table: None)
+    for text in ("zzrare common", "tiedoc", "nosuchterm_xyz"):
+        got = wand_topk(striped, "content", text, k=6, n_stripes=4, mode="driver").collect()
+        assert _bits(got) == _bits(_flat(striped, text, 6)), text
+    q = BoolQuery(should=[MatchQuery("content", "zzrare")],
+                  must_not=[MatchQuery("content", "pad")])
+    got = bool_topk_driver(
+        striped, [("should", q.should[0]), ("must_not", q.must_not[0])], k=6, n_stripes=4
+    ).collect()
+    assert _bits(got) == _bits(Searcher(striped).search(q, size=6, mode="flat").collect())
