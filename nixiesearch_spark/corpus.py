@@ -74,11 +74,6 @@ def make_corpus(n_docs: int, seed: int = SEED) -> pd.DataFrame:
     return df
 
 
-def corpus_sha256(df: pd.DataFrame) -> pd.Series:
-    """Per-row invariant: sha256(content) (BASELINE.json input_hint)."""
-    return df["content"].map(lambda c: hashlib.sha256(c.encode()).hexdigest())
-
-
 def write_corpus_parquet(path: str, n_docs: int, seed: int = SEED) -> str:
     import pyarrow as pa
     import pyarrow.parquet as pq

@@ -92,6 +92,9 @@ TOKENIZER_VERSION = "ascii-standard-v1"
 # map at build time, the field LUT, and the search head's ordinal resolve.
 # Above it those steps take their cluster-side plans.
 DRIVER_MAX_ROWS = 5_000_000
+# Largest corpus whose (shard, ordinal) → docid map the search head pulls
+# into memory (two sorted int64 arrays, ~16 B per doc): IndexReader.ordinal_lookup
+DRIVER_MAX_ORDINAL_ROWS = 50_000_000
 # (shard << KEY_SHIFT) | ordinal: one int64 key per document across shards
 KEY_SHIFT = 40
 
@@ -1379,8 +1382,8 @@ class IndexReader:
         path, query/wand.py). Returns docids aligned with ``keys``.
 
         The map is two sorted numpy arrays (composite key, docid) — ~16 B
-        per doc, lazily built once per reader. Above 50M docs the pull is
-        refused (returns None) and the caller falls back to the pushed
+        per doc, lazily built once per reader. Above DRIVER_MAX_ORDINAL_ROWS
+        (50M) docs the pull is refused (returns None) and the caller falls back to the pushed
         point-lookup SQL path; on a real deployment that threshold is the
         search head's memory budget, the same trade Lucene makes keeping
         its docid maps segment-local."""
@@ -1389,7 +1392,7 @@ class IndexReader:
                 (f.get("doc_count", 0) for f in self.stats.get("fields", {}).values()),
                 default=0,
             )
-            if doc_count > 50_000_000:
+            if doc_count > DRIVER_MAX_ORDINAL_ROWS:
                 self._ordlut = False
             else:
                 pdf = self.ordinal_map.toPandas()
@@ -1414,10 +1417,11 @@ class IndexReader:
         serving: a pyarrow local read of just (docid, field) from the docs
         table, sorted by docid, memoized per field. Returns
         (docids int64 ndarray, values pandas Series aligned) or None when
-        the docs dir isn't locally readable or the corpus exceeds 5M docs
-        (the search-head memory trade — callers fall back to the cluster
-        plan, same deal as ordinal_lookup's 50M bound; the value column is
-        wider than an 8-byte docid, hence the smaller cap)."""
+        the docs dir isn't locally readable or the corpus exceeds
+        DRIVER_MAX_ROWS docs (the search-head memory trade — callers fall
+        back to the cluster plan, same deal as ordinal_lookup's
+        DRIVER_MAX_ORDINAL_ROWS bound; the value column is wider than an
+        8-byte docid, hence the smaller cap)."""
         if getattr(self, "_flut", None) is None:
             self._flut = {}
         if field not in self._flut:

@@ -120,9 +120,6 @@ class IndexMapping:
             )
         return f
 
-    def text_search_fields(self) -> list[str]:
-        return [f.name for f in self.fields.values() if f.search and not f.is_wildcard]
-
     def migrate_check(self, new: "IndexMapping") -> list[str]:
         """Allowed: add field, delete field, keep same type. Type changes are
         rejected (reference IndexMapping.scala:104-135). Returns change log."""

@@ -38,6 +38,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nixiesearch_spark.index.builder import DRIVER_MAX_ROWS
+
 try:  # ship by value for foreign-cwd executors (same pattern as wand.py)
     from pyspark import cloudpickle as _cp
     import sys as _sys
@@ -392,7 +394,7 @@ def _beam_search_shard(
 
 # driver mode refuses graphs beyond this many nodes (loads per-shard
 # frames on the search head; above it, stay distributed)
-DRIVER_MAX_GRAPH_ROWS = 5_000_000
+DRIVER_MAX_GRAPH_ROWS = DRIVER_MAX_ROWS
 
 
 def hnsw_topk_driver(

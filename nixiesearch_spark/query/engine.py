@@ -36,6 +36,7 @@ from nixiesearch_spark.analysis import analyzer_py
 from nixiesearch_spark.index.builder import IndexReader
 from nixiesearch_spark.query import ast
 from nixiesearch_spark.query.filters import compile_predicate
+from nixiesearch_spark.query.wand import LocalFrame, local_schema
 
 K1 = 1.2
 B = 0.75
@@ -77,13 +78,13 @@ class Searcher:
         analog (BENCH.md r3: ~85% of a warm-index query was plan compile).
         Plans are lazy, so this caches COMPILATION, never results; keys
         include the index seqnum + tombstone mtime, so any index mutation
-        invalidates. Search-head (driver-mode) responses are materialized
-        local relations and are deliberately NOT cached."""
+        invalidates. Search-head (driver-mode) responses are driver-side
+        answers (wand.LocalFrame) and are deliberately NOT cached."""
         self.reader = reader
         self.mapping = mapping
         self.embedder = embedder
         self.spark: SparkSession = reader.spark
-        self._cache_df = {}  # field -> broadcastable norm-cache DataFrame
+        self._cache_df = {}  # ("arr", field) -> norm-cache array literal
         self._persisted: list[DataFrame] = []  # searcher-lifetime cached frames
         self._plan_cache_on = plan_cache
         self._plan_cache: dict = {}
@@ -248,7 +249,7 @@ class Searcher:
             topk = self._wand_search(query, filters, size)
             if fields:
                 return self.fetch(topk, fields), False
-            return topk, False  # may be a materialized search-head relation
+            return topk, False  # may be a driver-side LocalFrame
         if (
             mode == "auto"
             and sort is None
@@ -294,7 +295,7 @@ class Searcher:
             return all(isinstance(s, ast.MatchQuery) for s in query.queries)
         return False
 
-    def _bool_search(self, q: ast.Query, size: int) -> DataFrame | None:
+    def _bool_search(self, q: ast.Query, size: int) -> LocalFrame | None:
         from nixiesearch_spark.query.wand import bool_topk_driver
 
         if self.mapping is not None:
@@ -332,7 +333,10 @@ class Searcher:
         """Doc-fetch join: tiny top-k frame broadcast against the docs table
         (reference Searcher.collect, ``index/Searcher.scala:253-274``).
         Preserves the top-k frame's order via its ``_rank`` column if present
-        (sort queries), else re-orders by (score desc, docid asc)."""
+        (sort queries), else re-orders by (score desc, docid asc). A
+        search-head LocalFrame joins as its Spark frame."""
+        if isinstance(topk, LocalFrame):
+            topk = topk.to_spark()
         docs = self.reader.docs.select("docid", *fields)
         out = docs.join(F.broadcast(topk), "docid")
         if "_rank" in topk.columns:
@@ -400,7 +404,7 @@ class Searcher:
         kernel on a fresh quantized packed index (rrf_topk_driver — zero
         Catalyst compiles), else the single-scan fused path
         (rrf_fuse_matches: one postings scan feeds every branch). Returns
-        (frame, plan-cacheable) — driver results are materialized and not
+        (frame, plan-cacheable) — driver results are LocalFrames and not
         plan-cached."""
         from nixiesearch_spark.query.rrf import rrf_fuse, rrf_fuse_matches
 
@@ -706,7 +710,7 @@ class Searcher:
 
         return term_agg(self.score(query, filters), self.reader.docs, field, size)
 
-    def _facet_term_rrf_driver(self, q: ast.RRFQuery, field: str, size) -> DataFrame | None:
+    def _facet_term_rrf_driver(self, q: ast.RRFQuery, field: str, size) -> LocalFrame | None:
         if self.reader.field_lut(field) is None:  # cheap gate first
             return None
         union = self._union_match_sets_driver(q.retrieve)
@@ -735,7 +739,7 @@ class Searcher:
             self._ms_cache[key] = ms
         return ms
 
-    def _facet_term_driver(self, q: ast.MatchQuery, field: str, size) -> DataFrame | None:
+    def _facet_term_driver(self, q: ast.MatchQuery, field: str, size) -> LocalFrame | None:
         # cheap gate FIRST: no LUT means the cluster plan runs anyway, so
         # don't pay the full match-set decode just to find that out
         if self.reader.field_lut(field) is None:
@@ -745,10 +749,11 @@ class Searcher:
             return None
         return self._facet_values_local(ms, field, size)
 
-    def _facet_values_local(self, ms, field: str, size) -> DataFrame | None:
+    def _facet_values_local(self, ms, field: str, size) -> LocalFrame | None:
         """Term-facet counting over a driver-side match frame (docid col):
         facet values via the field LUT, count-desc/term-asc ties like the
-        cluster agg, output typed from the docs schema."""
+        cluster agg, returned as a LocalFrame typed from the docs schema
+        (None when the LUT cannot serve)."""
         from pyspark.sql.types import LongType, StructField, StructType
 
         from nixiesearch_spark.query.aggs import MAX_TERM_FACETS
@@ -768,19 +773,13 @@ class Searcher:
         pos = _lut_positions(docids, mdoc)
         if pos is None:
             return None
-        if len(mdoc):
-            sel = vals.iloc[pos]
-            vc = sel.value_counts(dropna=True)  # matches the isNotNull filter
-            pdf = vc.rename_axis("term").reset_index(name="count")
-            # same tie order as the cluster plan: count desc, term asc
-            pdf = pdf.sort_values(
-                ["count", "term"], ascending=[False, True], kind="stable"
-            ).head(n)
-        else:
-            import pandas as _pd
-
-            pdf = _pd.DataFrame({"term": [], "count": []})
-        return self.reader.spark.createDataFrame(pdf, schema)
+        if not len(mdoc):
+            return LocalFrame.empty(self.spark, schema)
+        vc = vals.iloc[pos].value_counts(dropna=True)  # matches the isNotNull filter
+        pdf = vc.rename_axis("term").reset_index(name="count")
+        # same tie order as the cluster plan: count desc, term asc
+        pdf = pdf.sort_values(["count", "term"], ascending=[False, True], kind="stable").head(n)
+        return LocalFrame(self.spark, pdf, schema)
 
     def facet_range(
         self,
@@ -858,7 +857,7 @@ class Searcher:
             parts.append(ms[["docid"]])
         return pd.concat(parts, ignore_index=True).drop_duplicates("docid")
 
-    def _facet_range_driver(self, q: ast.MatchQuery, field: str, ranges: list) -> DataFrame | None:
+    def _facet_range_driver(self, q: ast.MatchQuery, field: str, ranges: list) -> LocalFrame | None:
         if not self._range_lut_ok(field):  # cheap gate (incl. dtype) first
             return None
         ms = self._match_set_driver(q)
@@ -866,7 +865,10 @@ class Searcher:
             return None
         return self._range_values_local(ms, field, ranges)
 
-    def _range_values_local(self, ms, field: str, ranges: list) -> DataFrame | None:
+    def _range_values_local(self, ms, field: str, ranges: list) -> LocalFrame | None:
+        """Range-bucket counts over a driver-side match frame as a
+        LocalFrame; an open bound is NaN in the frame and collects as None
+        (None when the LUT cannot serve)."""
         import pandas as pd
 
         lut = self.reader.field_lut(field)
@@ -899,16 +901,17 @@ class Searcher:
                 )
             )
         pdf = pd.DataFrame(rows, columns=["range_from", "range_to", "count"])
-        return self.reader.spark.createDataFrame(
-            pdf, "range_from double, range_to double, count long"
+        return LocalFrame(
+            self.spark, pdf, local_schema("range_from double, range_to double, count long")
         )
 
-    def _sort_search_driver(self, q: ast.MatchQuery, sort: list, size: int) -> DataFrame | None:
+    def _sort_search_driver(self, q: ast.MatchQuery, sort: list, size: int) -> LocalFrame | None:
         """Search-head sort-by-field: full match set decoded driver-side,
         sort columns via the pyarrow docid LUT, the multi-key order applied
         as reversed stable pandas sorts (docid-asc tiebreak first) — the
         exact TakeOrderedAndProject semantics including per-key
-        missing-first/last. Declines (None) on geo items, float sort
+        missing-first/last — returned as a (docid, score, _rank) LocalFrame.
+        Declines (None) on geo items, float sort
         columns (their pandas form conflates null and NaN, which Spark
         orders differently), or columns whose LUT/match-set can't serve
         driver-side."""
@@ -958,7 +961,7 @@ class Searcher:
                 "_rank": np.arange(1, len(top) + 1, dtype=np.int64),
             }
         )
-        return self.reader.spark.createDataFrame(out, "docid long, score float, _rank long")
+        return LocalFrame(self.spark, out, local_schema("docid long, score float, _rank long"))
 
     # ---------- score compilation ----------
 
@@ -1150,14 +1153,6 @@ class Searcher:
 
     def _empty_scores(self) -> DataFrame:
         return self.spark.createDataFrame([], f"docid long, score {self._stype}")
-
-    def _norm_cache_df(self, field: str) -> DataFrame:
-        if field not in self._cache_df:
-            avgdl = np.float32(self.reader.field_stats(field)["avgdl"])
-            cache = lucene.norm_cache(avgdl)
-            rows = [(int(i), float(cache[i])) for i in range(256)]
-            self._cache_df[field] = self.spark.createDataFrame(rows, "norm int, cache float")
-        return self._cache_df[field]
 
     def _norm_cache_arr(self, field: str) -> Column:
         """256-entry norm cache as an inline array literal — element_at by

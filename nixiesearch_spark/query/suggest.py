@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from nixiesearch_spark.analysis import tokenize_col
 from nixiesearch_spark.query.ranks import rank_limited
+from nixiesearch_spark.query.wand import LocalFrame, local_schema
 
 RRF_SCALE = 60.0
 MAX_SHINGLE = 3
@@ -53,12 +54,6 @@ def shingles_from_tokens(toks, max_n: int = MAX_SHINGLE):
             F.when(F.size(toks) >= n, F.transform(idx, gram(n))).otherwise(F.array())
         )
     return F.flatten(F.array(*parts))
-
-
-def shingles_col(text_col, max_n: int = MAX_SHINGLE):
-    """Shingles straight from a text column — ONLY safe for callers that
-    materialize the tokens first; build_suggest binds them to a column."""
-    return shingles_from_tokens(tokenize_col(text_col), max_n)
 
 
 # suggestion-length partition cap: dirs slen=1..LEN_CAP, longer shingles
@@ -194,11 +189,12 @@ def suggest_driver(
     text: str,
     count: int = 10,
     window: int = 50,
-) -> DataFrame | None:
-    """Driver-mode suggest: returns None when the table isn't locally
-    readable or the pruned read exceeds DRIVER_MAX_SUGG_ROWS (callers fall
-    back to the cluster plan). Branch ranks, RRF fusion and tie order
-    replicate suggest() exactly."""
+) -> LocalFrame | None:
+    """Driver-mode suggest: the (suggestion, score) answer as a
+    wand.LocalFrame, or None when the table isn't locally readable or the
+    pruned read exceeds DRIVER_MAX_SUGG_ROWS (callers fall back to the
+    cluster plan). Branch ranks, RRF fusion and tie order replicate
+    suggest() exactly."""
     import glob
     import os as _os
 
@@ -260,4 +256,4 @@ def suggest_driver(
             "score": np.array([r[1] for r in rows], dtype=np.float64),
         }
     )
-    return spark.createDataFrame(out, "suggestion string, score double")
+    return LocalFrame(spark, out, local_schema("suggestion string, score double"))

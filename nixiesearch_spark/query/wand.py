@@ -83,8 +83,20 @@ from collections import Counter
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BooleanType,
+    ByteType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from nixiesearch_spark import lucene
 from nixiesearch_spark.analysis import analyzer_py
@@ -106,13 +118,105 @@ except Exception:  # pragma: no cover - best effort on older pyspark
     pass
 
 TOPK_SCHEMA = "shard int, ordinal long, score float"
-FINAL_SCHEMA = "docid long, score float"
 UB_SLACK = np.float64(1.0 + 2.0 ** -21)  # 2 ulps of float32
 ORD_MASK = np.int64((1 << KEY_SHIFT) - 1)
 TIE_KEEP = 4096  # candidates tied at the k-th score kept per shard beyond k
 # search-head bound: queries whose dictionary-estimated block count exceeds
 # this take the distributed plan (or the Catalyst plan for bool/dis_max)
 DRIVER_MAX_BLOCKS = 20_000
+
+# Spark type → numpy dtype LocalFrame converts a column through (None: str)
+_LOCAL_TYPES = {
+    LongType: np.int64, IntegerType: np.int32, ShortType: np.int16, ByteType: np.int8,
+    DoubleType: np.float64, FloatType: np.float32, BooleanType: np.bool_, StringType: None,
+}
+_DDL_TYPES = {"long": LongType, "int": IntegerType, "float": FloatType,
+              "double": DoubleType, "string": StringType}
+
+
+def local_schema(ddl: str) -> StructType:
+    """``"name type, ..."`` over long/int/float/double/string → the
+    StructType Spark parses from the same DDL (nullable fields), built
+    without the JVM."""
+    return StructType(
+        [StructField(n, _DDL_TYPES[t]()) for n, t in (f.split() for f in ddl.split(","))]
+    )
+
+
+FINAL_SCHEMA = local_schema("docid long, score float")
+RRF_SCHEMA = local_schema("docid long, score double")
+
+
+class LocalFrame:
+    """A search-head answer held on the driver: a pandas frame plus the
+    schema it has as a DataFrame. ``collect()`` reads the frame directly —
+    no Arrow batch, no Catalyst analysis, no JVM round trip — and returns
+    the Rows Spark's collect of ``createDataFrame(pdf, schema)`` returns:
+    plain Python values of the column type (float32 columns as the float of
+    the float32 value), pandas nulls and float NaN as None (Arrow's
+    ``from_pandas`` masking). Every other DataFrame attribute goes to that
+    Spark frame, built once on first use, so callers keep the DataFrame
+    contract. Columns of other types collect through Spark too."""
+
+    def __init__(self, spark, pdf: pd.DataFrame, schema: StructType):
+        self._spark = spark
+        self._pdf = pdf.reset_index(drop=True)
+        self.schema = schema
+        self._df = None
+
+    @classmethod
+    def empty(cls, spark, schema: StructType) -> "LocalFrame":
+        return cls(spark, pd.DataFrame({n: [] for n in schema.fieldNames()}), schema)
+
+    @property
+    def columns(self) -> list[str]:
+        return self.schema.fieldNames()
+
+    def _local(self) -> bool:
+        return all(type(f.dataType) in _LOCAL_TYPES for f in self.schema.fields)
+
+    def collect(self) -> list:
+        if not self._local():
+            return self.to_spark().collect()
+        cols = []
+        for f in self.schema.fields:
+            s = self._pdf[f.name]
+            dt = _LOCAL_TYPES[type(f.dataType)]
+            vals = s.astype(str) if dt is None else s.to_numpy(dtype=dt, na_value=0)
+            cols.append([None if n else v for v, n in zip(vals.tolist(), s.isna().tolist())])
+        row = Row(*self.columns)
+        return [row(*vals) for vals in zip(*cols)]
+
+    def toPandas(self) -> pd.DataFrame:
+        if not self._local():
+            return self.to_spark().toPandas()
+        out = self._pdf[self.columns].copy()
+        for f in self.schema.fields:
+            dt = _LOCAL_TYPES[type(f.dataType)]
+            if dt is not None and not out[f.name].isna().any():
+                out[f.name] = out[f.name].astype(dt)
+        return out
+
+    def drop(self, *cols):
+        if not all(isinstance(c, str) for c in cols):
+            return self.to_spark().drop(*cols)
+        keep = [f for f in self.schema.fields if f.name not in cols]
+        return LocalFrame(self._spark, self._pdf[[f.name for f in keep]], StructType(keep))
+
+    def to_spark(self) -> DataFrame:
+        """The answer as a Spark DataFrame (a LocalRelation), built once."""
+        if self._df is None:
+            data = self._pdf if len(self._pdf) else []
+            self._df = self._spark.createDataFrame(data, self.schema)
+        return self._df
+
+    def __getattr__(self, name: str):
+        if name.startswith("__") or name in ("_spark", "_pdf", "_df", "schema"):
+            raise AttributeError(name)
+        return getattr(self.to_spark(), name)
+
+    def __getitem__(self, item):
+        return self.to_spark()[item]
 
 
 def _member(sorted_set: np.ndarray, x: np.ndarray) -> np.ndarray:
@@ -384,27 +488,25 @@ def _resolve_keys(reader: IndexReader, keys: np.ndarray) -> np.ndarray:
     return np.array([omap[int(x)] for x in keys], dtype=np.int64)
 
 
-def _topk_frame(reader: IndexReader, keys: np.ndarray, scores: np.ndarray, k: int) -> DataFrame:
+def _topk_frame(reader: IndexReader, keys: np.ndarray, scores: np.ndarray, k: int) -> LocalFrame:
     """Kernel candidates → the global top-k under (score desc, docid asc)
-    as a pandas → Arrow → LocalRelation frame (~10x cheaper than the
-    row-list path, which builds an RDD-backed frame whose collect is a full
-    RDD job)."""
+    as a LocalFrame: the answer stays on the driver, and the API reads it
+    without a JVM round trip."""
     if not len(keys):
-        return reader.spark.createDataFrame([], FINAL_SCHEMA)
+        return LocalFrame.empty(reader.spark, FINAL_SCHEMA)
     docids = _resolve_keys(reader, keys)
     o = np.lexsort((docids, -scores.astype(np.float64)))[:k]
     out = pd.DataFrame({"docid": docids[o], "score": scores[o]})
-    return reader.spark.createDataFrame(out, FINAL_SCHEMA)
+    return LocalFrame(reader.spark, out, FINAL_SCHEMA)
 
 
-def _wand_topk_driver(reader: IndexReader, plan: dict, k: int, n_stripes: int) -> DataFrame:
+def _wand_topk_driver(reader: IndexReader, plan: dict, k: int, n_stripes: int) -> LocalFrame:
     """Search-head WAND: the query's matched blocks come from a direct
-    pyarrow read of the packed parquet (row-group pruned on the sorted term
-    column — zero Spark jobs, zero plan compiles; IndexReader.fetch_packed
-    falls back to one Spark read on non-local storage), ONE kernel call
-    scores every shard in-process, and the ordinal→docid resolve hits the
-    driver LUT. Same kernel, same tie semantics → bit-identical to the
-    distributed plan."""
+    pyarrow read of the packed parquet (zero Spark jobs, zero plan
+    compiles; IndexReader.fetch_packed falls back to one Spark read on
+    non-local storage), ONE kernel call scores every shard in-process, and
+    the ordinal→docid resolve hits the driver LUT. Same kernel, same tie
+    semantics → bit-identical to the distributed plan."""
     blocks = reader.fetch_packed(plan["field"], plan["present"])
     keys, scores = _shard_topk(blocks, [plan], k, n_stripes)
     return _topk_frame(reader, keys, scores, k)
@@ -482,21 +584,21 @@ def rrf_topk_driver(
     window: int = 100,
     rrf_k: float = 60.0,
     n_stripes: int = 32,
-) -> DataFrame:
+) -> LocalFrame:
     """Search-head RRF over match branches (the rrf_fuse semantics of
     query/rrf.py executed entirely on the driver): each branch's top-window
     comes from one call of the WAND kernel (bit-identical branch scores),
     ranks fuse as Σ 1/(rrf_k + rank) in float64 with the docid-asc tiebreak
-    at every cut, and the fused top-``size`` returns as an Arrow
-    LocalRelation. Zero Catalyst compiles — this is the serving answer to
-    the two-branch plan-compile floor (BENCH.md r3 §1).
+    at every cut, and the fused top-``size`` returns as a LocalFrame
+    (float64 scores). Zero Catalyst compiles and zero JVM calls — this is
+    the serving answer to the two-branch plan-compile floor (BENCH.md r3
+    §1).
 
     ``branches``: ast.MatchQuery objects or (field, text, operator) tuples.
     Dead branches drop out exactly like rrf_fuse_matches' ``live`` filter;
     results match the on-cluster fused path (tests/test_wand.py parity).
     Requires ``packed_ready(reader)`` — callers route elsewhere when stale.
     """
-    spark = reader.spark
     live = []
     for m in branches:
         field, text, op = (
@@ -505,7 +607,7 @@ def rrf_topk_driver(
         p = _match_plan(reader, field, text, op)
         if p is not None:
             live.append(p)
-    empty = spark.createDataFrame([], "docid long, score double")
+    empty = LocalFrame.empty(reader.spark, RRF_SCHEMA)
     if not live:
         return empty
     by_field: dict[str, set] = {}
@@ -535,7 +637,7 @@ def rrf_topk_driver(
     fused = np.bincount(inv, weights=np.concatenate(contribs), minlength=len(uniq))
     o = np.lexsort((uniq, -fused))[:size]
     out = pd.DataFrame({"docid": uniq[o], "score": fused[o]})
-    return spark.createDataFrame(out, "docid long, score double")
+    return LocalFrame(reader.spark, out, RRF_SCHEMA)
 
 
 def bool_topk_driver(
@@ -546,7 +648,7 @@ def bool_topk_driver(
     tie: float = 0.0,
     n_stripes: int = 32,
     driver_max_blocks: int = DRIVER_MAX_BLOCKS,
-) -> DataFrame | None:
+) -> LocalFrame | None:
     """Search-head fused bool/dis_max top-k over match branches —
     bit-identical to engine._fused's flat plan (tests/test_serving.py).
     ``branches``: list of (role, MatchQuery-like). Returns None when this
@@ -555,11 +657,10 @@ def bool_topk_driver(
     back to the Catalyst plan."""
     if kind == "dismax" and not (0.0 <= float(tie) <= 1.0):
         return None
-    spark = reader.spark
     plans = []
     for role, m in branches:
         plans.append((role, _match_plan(reader, m.field, m.query, m.operator, role)))
-    empty = spark.createDataFrame([], FINAL_SCHEMA)
+    empty = LocalFrame.empty(reader.spark, FINAL_SCHEMA)
     # dead-branch semantics identical to engine._fused
     if any(role == "must" and p is None for role, p in plans):
         return empty
@@ -592,7 +693,7 @@ def wand_topk(
     filters: dict | None = None,
     mode: str = "auto",
     driver_max_blocks: int = DRIVER_MAX_BLOCKS,
-) -> DataFrame:
+) -> DataFrame | LocalFrame:
     """Block-max WAND match top-k over the packed table.
     ``operator="and"`` requires every query term per doc (conjunction is
     applied inside the stripe scorer; the OR upper bounds stay valid).
@@ -610,13 +711,13 @@ def wand_topk(
     query's matched blocks are small (Σ df/block_size ≤ driver_max_blocks,
     known BEFORE any job), the matched blocks are read on the driver, ONE
     kernel call scores every shard, and the ordinal LUT resolves just the
-    global top-k. That replaces the repartition exchange + python-worker
-    round-trip + broadcast-join job (~0.5 s of pure scheduling at any data
-    size). High-df queries — where block volume is real work — keep the
-    distributed plan, one kernel call per partition; "auto" also falls back
-    to it whenever a filter or tombstones are in play (their ordinal sets
-    belong on the cluster). Results are bit-identical across modes
-    (tests/test_wand.py)."""
+    global top-k, returned as a LocalFrame. That replaces the repartition
+    exchange + python-worker round-trip + broadcast-join job (~0.5 s of
+    pure scheduling at any data size). High-df queries — where block
+    volume is real work — keep the distributed plan, one kernel call per
+    partition; "auto" also falls back to it whenever a filter or
+    tombstones are in play (their ordinal sets belong on the cluster).
+    Results are bit-identical across modes (tests/test_wand.py)."""
     why = _packed_unready(reader)
     if why is not None:
         raise ValueError(why)
@@ -630,7 +731,7 @@ def wand_topk(
     # bit-identical to the flat path — drift only costs pruning power).
     plan = _match_plan(reader, field, text, operator)
     if plan is None:
-        return spark.createDataFrame([], FINAL_SCHEMA)
+        return LocalFrame.empty(spark, FINAL_SCHEMA)
 
     # resolve filters/tombstones to (shard, ordinal) sets (docs rows carry
     # shard + ordinal — a column projection, no join); "allow" mode when a
@@ -744,7 +845,7 @@ def wand_topk(
         )
     rows = local.collect()
     if not rows:
-        return spark.createDataFrame([], FINAL_SCHEMA)
+        return LocalFrame.empty(spark, FINAL_SCHEMA)
     by_shard: dict[int, list[int]] = {}
     smap: dict[str, float] = {}
     for r in rows:

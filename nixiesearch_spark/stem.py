@@ -168,10 +168,6 @@ def porter_py(word: str) -> str:
     return w
 
 
-def stem_tokens_py(tokens: list[str]) -> list[str]:
-    return [porter_py(t) for t in tokens]
-
-
 # ------------------------------------------------------------------- sql form
 # Every helper returns a DuckDB SQL scalar expression string over the input
 # expression x (a lowercase token). No variables exist in SQL expressions,

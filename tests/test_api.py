@@ -10,6 +10,7 @@ pushed documents must become searchable after the POST returns
 from __future__ import annotations
 
 import json
+import struct
 import urllib.request
 
 import pytest
@@ -82,12 +83,146 @@ def test_search_matches_direct(server, spark):
         .collect()
     )
     assert [h["_id"] for h in body["hits"]] == [str(r["docid"]) for r in direct]
-    assert [pytest.approx(h["_score"]) for h in body["hits"]] == [
-        r["score"] for r in direct
-    ]
+    assert [h["_score"] for h in body["hits"]] == [r["score"] for r in direct]
     # legacy route serves the identical response shape
     st, legacy = _req(server.port, "POST", "/docs/_search", q)
     assert [h["_id"] for h in legacy["hits"]] == [h["_id"] for h in body["hits"]]
+
+
+# Search-head answers vs the pure-Catalyst plan, through SearchServer.handle:
+# one request per served route (match OR/AND, bool, dis_max, rrf, sort by
+# field, term and range facets). Open range bounds must serialize as null.
+CUT_LO, CUT_HI = 600, 1400
+EXACT_REQUESTS = [
+    {"query": {"match": {"content": "def import return"}}, "size": 7},
+    {"query": {"match": {"content": {"query": "def import", "operator": "and"}}}, "size": 7},
+    {
+        "query": {
+            "bool": {
+                "must": [{"match": {"content": "def"}}],
+                "should": [{"match": {"content": "return class"}}],
+                "must_not": [{"match": {"content": "lambda"}}],
+            }
+        },
+        "size": 8,
+    },
+    {
+        "query": {
+            "dis_max": {
+                "queries": [{"match": {"content": "import"}}, {"match": {"content": "return"}}],
+                "tie_breaker": 0.3,
+            }
+        },
+        "size": 8,
+    },
+    {
+        "query": {
+            "rrf": {
+                "retrieve": [{"match": {"content": "def import"}},
+                             {"match": {"content": "return"}}],
+                "rank_window_size": 20,
+            }
+        },
+        "size": 6,
+    },
+    {
+        "query": {"match": {"content": "import"}},
+        "size": 9,
+        "sort": [{"nlen": {"order": "desc"}}],
+    },
+    {
+        "query": {"match": {"content": "def import"}},
+        "size": 3,
+        "aggs": {
+            "by_lang": {"term": {"field": "lang", "size": 4}},
+            "by_len": {"range": {"field": "nlen", "ranges": [
+                {"lt": CUT_LO}, {"gte": CUT_LO, "lt": CUT_HI}, {"gte": CUT_HI}]}},
+        },
+    },
+]
+
+
+@pytest.fixture(scope="module")
+def exact(spark, tmp_path_factory):
+    """Read-only index with an integer facet column, a SearchServer over
+    it (driven through ``handle``, no socket) and a flat-plan Searcher."""
+    from nixiesearch_spark.api import SearchServer
+    from nixiesearch_spark.index import IndexReader
+    from nixiesearch_spark.query import Searcher
+
+    d = str(tmp_path_factory.mktemp("api_exact"))
+    pdf = make_corpus(300, seed=7)
+    pdf["nlen"] = pdf["content"].str.len().astype("int64")
+    cfg = IndexConfig(text_fields=("content",), n_shards=4)
+    IndexBuilder(spark, cfg).build(spark.createDataFrame(pdf), d)
+    srv = SearchServer(spark, port=0).add_index("exact", d)
+    yield srv, Searcher(IndexReader(spark, d), plan_cache=False)
+    srv.httpd.server_close()
+
+
+def _handle(srv, body):
+    st, payload, _ = srv.handle(
+        "POST", "/v1/index/exact/search", json.dumps(body).encode(), {}
+    )
+    assert st == 200
+    json.dumps(payload)  # every value must be JSON-serializable
+    return payload
+
+
+def _bits(x):
+    return struct.pack("<d", x)
+
+
+def _flat_answer(flat, body):
+    from nixiesearch_spark.api import _parse_sort
+
+    q = body["query"]
+    rows = flat.search(
+        q, size=body["size"], sort=_parse_sort(body.get("sort")) or None, mode="flat"
+    ).collect()
+    aggs = {}
+    for name, spec in (body.get("aggs") or {}).items():
+        kind, a = next(iter(spec.items()))
+        if kind == "term":
+            out = flat.facet_term(q, a["field"], size=a["size"], mode="flat")
+        else:
+            out = flat.facet_range(q, a["field"], a["ranges"], mode="flat")
+        aggs[name] = [r.asDict() for r in out.collect()]
+    return rows, aggs
+
+
+@pytest.mark.parametrize("i", range(len(EXACT_REQUESTS)))
+def test_served_answers_equal_flat_plan(exact, i):
+    srv, flat = exact
+    body = EXACT_REQUESTS[i]
+    got = _handle(srv, body)
+    rows, aggs = _flat_answer(flat, body)
+    assert rows, "request must match documents"
+    assert [h["_id"] for h in got["hits"]] == [str(r["docid"]) for r in rows]
+    # python floats of the float32 (float64 for rrf) scores, bit for bit
+    assert [_bits(h["_score"]) for h in got["hits"]] == [_bits(r["score"]) for r in rows]
+    assert {n: a["buckets"] for n, a in got["aggs"].items()} == aggs
+    if "by_len" in aggs:
+        b = got["aggs"]["by_len"]["buckets"]
+        assert b[0]["range_from"] is None and b[-1]["range_to"] is None
+        assert sum(x["count"] for x in b) > 0
+
+
+def test_served_answers_make_no_jvm_round_trip(exact, spark, monkeypatch):
+    """The same requests, answered again with the LocalRelation build and
+    the classic DataFrame collect both raising: search-head answers are
+    read from the driver-side frame."""
+    srv, _ = exact
+    warm = [_handle(srv, body) for body in EXACT_REQUESTS]
+
+    def refuse(*a, **k):
+        raise AssertionError("search-head answer crossed into the JVM")
+
+    monkeypatch.setattr(type(spark), "createDataFrame", refuse)
+    monkeypatch.setattr(type(spark.range(1)), "collect", refuse)
+    for body, want in zip(EXACT_REQUESTS, warm):
+        got = _handle(srv, body)
+        assert got["hits"] == want["hits"] and got["aggs"] == want["aggs"]
 
 
 def test_search_with_fields_and_aggs(server):
