@@ -338,7 +338,7 @@ class IndexBuilder:
             docs_future = pool.submit(inheritable_thread_target(_write_docs))
 
             try:
-                out, postings, obs_len, obs_post, use_cache = self._postings_plan(
+                out, obs_len, obs_post = self._postings_plan(
                     df, base, index_dir, shards, groups, shard_pred
                 )
                 self.spark.sparkContext.setJobDescription("index-build: postings")
@@ -364,12 +364,9 @@ class IndexBuilder:
             dvals, lvals = obs_docs.get, obs_len.get
             if obs_post is not None:
                 pvals = obs_post.get
-            else:  # count from what the write just materialized: the cache, or
-                # (pack_source=parquet) the files themselves — the dir held
+            else:  # count from the files the write just made — the dir held
                 # nothing before a full build, so the dir count IS the batch
-                src = postings if use_cache else self.spark.read.parquet(
-                    os.path.join(index_dir, "postings")
-                )
+                src = self.spark.read.parquet(os.path.join(index_dir, "postings"))
                 pc = {
                     (int(r["shard"]), r["field"]): int(r["cnt"])
                     for r in src.groupBy("shard", "field")
@@ -445,8 +442,7 @@ class IndexBuilder:
     def _postings_plan(self, df, base, index_dir, shards, groups, shard_pred):
         """The postings job's plan (no action runs here): tokenize once,
         explode, per-doc tf aggregate, sorted for the write. Returns
-        (out, postings, obs_len, obs_post, use_cache)."""
-        from pyspark import StorageLevel
+        (out, obs_len, obs_post)."""
         from pyspark.sql import Observation
 
         c = self.config
@@ -535,38 +531,20 @@ class IndexBuilder:
         postings = exploded.groupBy(
             "shard", "field", "term", "docid", "ordinal", "norm"
         ).agg(F.count(F.lit(1)).cast("int").alias("tf"))
-        # Full builds may persist the narrow posting rows so finalize's
-        # pack shuffles straight off the cache instead of re-reading the
-        # just-written parquet (pack_source="cache", for object-store
-        # deployments; see the A/B note below — local disk favors the
-        # re-read). Appends/resumes never cache — their pack is already
-        # O(batch) via the incremental og overwrite.
+        # finalize's pack re-reads the written postings files: persisting
+        # the rows for it instead measured slower at 20k docs/local[4]
+        # (bench_extra r6, warm JVM: re-read 29.9-35.3 s total vs cache
+        # 36.4 s — the MEMORY_AND_DISK serialization inside the postings
+        # action costs more than the local re-read).
         full_build = (
             c.quantize
             and len(shards) == c.n_shards
             and not os.path.isdir(os.path.join(index_dir, "postings"))
         )
-        prev = getattr(self, "_full_postings", None)
-        if prev is not None:  # builder reuse: release the orphan cache first
-            prev[0].unpersist(blocking=False)
-        self._full_postings = None
-        # pack_source="parquet" (default) skips the cache: pack re-reads
-        # the written postings files. A/B at 20k docs/local[4] (bench_extra
-        # r6, warm JVM): parquet 29.9-35.3 s total vs cache 36.4 s — the
-        # MEMORY_AND_DISK serialization inside the postings action costs
-        # more than the local re-read, and skipping it also releases the
-        # executor storage pressure. "cache" remains for object-store
-        # deployments, where the re-read is a full-index network trip.
-        use_cache = c.extra.get("pack_source", "parquet") == "cache"
-        if full_build and use_cache:
-            span = c.block_size * int(c.extra.get("pack_group_blocks", 256))
-
-            postings = postings.persist(StorageLevel.MEMORY_AND_DISK)
-            self._full_postings = (postings, span)
         # postings_out metric: an observe on the pre-agg exploded stream
         # costs ~20% of the whole postings job (measured r4: 47.4s → 39.7s
         # at 120k docs/14M tokens — 32 conditional sums ride every token
-        # row), while a post-hoc count over the cached agg is ~1s. Full
+        # row), while a post-hoc count is one small aggregation job. Full
         # builds therefore count AFTER the write; append batches keep the
         # observe (the write is append-mode, so a post-hoc dir count would
         # include other batches' rows).
@@ -588,7 +566,7 @@ class IndexBuilder:
             ]
             out = out.observe(obs_post, *post_exprs)
         out = out.sortWithinPartitions("shard", "field", "term", "docid")
-        return out, postings, obs_len, obs_post, use_cache
+        return out, obs_len, obs_post
 
     def _tune_input_splits(self, base: DataFrame, parallelism: int) -> str | None:
         """Size input splits to the corpus so the CPU-bound tokenize stage
@@ -782,40 +760,31 @@ class IndexBuilder:
         do_pack = c.quantize and pack
         pack_avgdl, pack_mode, new_files = prev_pack_avgdl, "skip", None
         t_ph = self._mark("finalize_stats", t_ph)
-        try:
-            if do_pack:
-                spark.sparkContext.setJobDescription("index-build: pack")
-                pack_avgdl, pack_mode, new_files = self._pack_or_repack(index_dir, fields)
-            t_ph = self._mark("pack", t_ph)
-            stats = {
-                "fields": fields,
-                "analyzers": {f: c.analyzers.get(f, "standard") for f in c.text_fields},
-                "quantize": c.quantize,
-                "n_shards": c.n_shards,
-                "block_size": c.block_size,
-                "tokenizer": TOKENIZER_VERSION,
-                "seqnum": seqnum,
-                # seqnum the packed table was built at; < seqnum ⇒ WAND stale
-                "packed_seqnum": seqnum if do_pack else prev_packed,
-                # avgdl the packed max_impact bounds were computed at: WAND
-                # scales bounds by max(1, avgdl_now / pack_avgdl) so incremental
-                # packs stay sound under avgdl drift (query/wand.py)
-                "pack_avgdl": pack_avgdl,
-            }
-            spark.sparkContext.setJobDescription("index-build: dictionary")
-            self._refresh_dictionary(index_dir, pack_mode, new_files)
-            self._mark("dictionary", t_ph)
-            spark.sparkContext.setJobDescription(None)
-            with open(os.path.join(index_dir, "stats.json"), "w") as f:
-                json.dump(stats, f, indent=2)
-        finally:
-            # build-lifetime cache: released even when the pack throws —
-            # a leaked MEMORY_AND_DISK full-index aggregation would pin
-            # executor storage for the application lifetime
-            cached = getattr(self, "_full_postings", None)
-            if cached is not None:
-                cached[0].unpersist(blocking=False)
-                self._full_postings = None
+        if do_pack:
+            spark.sparkContext.setJobDescription("index-build: pack")
+            pack_avgdl, pack_mode, new_files = self._pack_or_repack(index_dir, fields)
+        t_ph = self._mark("pack", t_ph)
+        stats = {
+            "fields": fields,
+            "analyzers": {f: c.analyzers.get(f, "standard") for f in c.text_fields},
+            "quantize": c.quantize,
+            "n_shards": c.n_shards,
+            "block_size": c.block_size,
+            "tokenizer": TOKENIZER_VERSION,
+            "seqnum": seqnum,
+            # seqnum the packed table was built at; < seqnum ⇒ WAND stale
+            "packed_seqnum": seqnum if do_pack else prev_packed,
+            # avgdl the packed max_impact bounds were computed at: WAND
+            # scales bounds by max(1, avgdl_now / pack_avgdl) so incremental
+            # packs stay sound under avgdl drift (query/wand.py)
+            "pack_avgdl": pack_avgdl,
+        }
+        spark.sparkContext.setJobDescription("index-build: dictionary")
+        self._refresh_dictionary(index_dir, pack_mode, new_files)
+        self._mark("dictionary", t_ph)
+        spark.sparkContext.setJobDescription(None)
+        with open(os.path.join(index_dir, "stats.json"), "w") as f:
+            json.dump(stats, f, indent=2)
         return stats
 
     def _refresh_dictionary(self, index_dir: str, pack_mode: str, new_files) -> None:
@@ -932,12 +901,7 @@ class IndexBuilder:
                 with open(man_path, "w") as f:
                     json.dump(manifest, f)
                 return pack_avgdl, "incremental", new_abs
-        # full pack: feed the build's persisted postings aggregation when
-        # _build_shards left one (pack-from-postings-agg — skips the parquet
-        # re-read AND the pack shuffle, same og partitioning)
-        cached = getattr(self, "_full_postings", None)
-        pdf = cached[0] if (cached and cached[1] == span) else None
-        self._pack(index_dir, cur_avgdl, span, postings_df=pdf)
+        self._pack(index_dir, cur_avgdl, span)
         with open(man_path, "w") as f:
             json.dump({"files": cur, "pack_avgdl": cur_avgdl, "group_span": span}, f)
         return cur_avgdl, "full", None
@@ -948,7 +912,6 @@ class IndexBuilder:
         avgdl_by_field: dict,
         span: int,
         new_files: list | None = None,
-        postings_df: DataFrame | None = None,
     ) -> None:
         """Flat postings → VByte blocks with block-max impact (WAND path).
 
@@ -1090,16 +1053,7 @@ class IndexBuilder:
             if carry is not None and carry.num_rows:
                 yield encode_region(carry, _group_starts(carry))
 
-        if postings_df is not None:
-            # pack-from-postings-cache: the persisted build rows feed the
-            # pack instead of re-reading the just-written parquet. The
-            # (shard, field, term, og) repartition below still shuffles —
-            # what this saves is the full-index read, which on object-store
-            # deployments is a network round trip (local disk: measured a
-            # wash, r4).
-            postings = postings_df
-        else:
-            postings = self.spark.read.parquet(os.path.join(index_dir, "postings"))
+        postings = self.spark.read.parquet(os.path.join(index_dir, "postings"))
         if new_files is not None:
             # incremental: only ordinal groups touched by the new files need
             # re-encoding — appends land ABOVE each shard's committed ordinal
@@ -1139,7 +1093,7 @@ class IndexBuilder:
             # batch (violating the documented per-batch cost contract)
             nbytes = sum(os.path.getsize(f) for f in new_files if os.path.isfile(f))
             nparts = max(min(nparts, int(nbytes // (64 * 1024 * 1024)) + parallelism), 1)
-        elif postings_df is None:
+        else:
             import glob as _glob
 
             nbytes = sum(
@@ -1156,7 +1110,7 @@ class IndexBuilder:
         # counts — same size-derived split rule as the build's input scan
         mpb_conf = "spark.sql.files.maxPartitionBytes"
         prev_mpb = None
-        if postings_df is None and new_files is None and nbytes > 0:
+        if new_files is None and nbytes > 0:
             want = max(nbytes // max(parallelism * 3, 1), 4 * 1024 * 1024)
             prev_mpb = self.spark.conf.get(mpb_conf)
             self.spark.conf.set(mpb_conf, str(int(want)))
@@ -1251,6 +1205,13 @@ class IndexReader:
     def field_stats(self, field: str) -> dict:
         return self.stats["fields"][field]
 
+    @property
+    def doc_count(self) -> int:
+        """Docs in the index as the driver size bounds count them: the
+        largest per-field doc count in stats.json."""
+        fields = self.stats.get("fields", {}).values()
+        return max((f.get("doc_count", 0) for f in fields), default=0)
+
     def field_analyzer(self, field: str) -> str:
         return self.stats.get("analyzers", {}).get(field, "standard")
 
@@ -1331,8 +1292,10 @@ class IndexReader:
     # search head reads the parquet files directly with pyarrow, exactly the
     # way the reference's searcher reads its own Lucene segment files
     # (index/Searcher.scala:115-274 operates on an open IndexReader, not a
-    # cluster job). Files are sorted by term, so parquet row-group min/max
-    # stats prune the read to a handful of pages. Falls back to the Spark
+    # cluster job). Dictionary files are sorted by term, so parquet
+    # row-group min/max stats prune the term_stats read; every packed file
+    # is ONE row group holding all its terms, so fetch_packed's read prunes
+    # nothing and filters the whole packed table. Falls back to the Spark
     # path automatically when the index is not on a local filesystem (a real
     # deployment can mount object storage or keep head-local replicas — the
     # same deal Lucene makes with its directory abstraction).
@@ -1388,11 +1351,7 @@ class IndexReader:
         search head's memory budget, the same trade Lucene makes keeping
         its docid maps segment-local."""
         if getattr(self, "_ordlut", None) is None:
-            doc_count = max(
-                (f.get("doc_count", 0) for f in self.stats.get("fields", {}).values()),
-                default=0,
-            )
-            if doc_count > DRIVER_MAX_ORDINAL_ROWS:
+            if self.doc_count > DRIVER_MAX_ORDINAL_ROWS:
                 self._ordlut = False
             else:
                 pdf = self.ordinal_map.toPandas()
@@ -1426,11 +1385,7 @@ class IndexReader:
             self._flut = {}
         if field not in self._flut:
             lut = None
-            doc_count = max(
-                (f.get("doc_count", 0) for f in self.stats.get("fields", {}).values()),
-                default=0,
-            )
-            ds = self._local_dataset("docs") if doc_count <= DRIVER_MAX_ROWS else None
+            ds = self._local_dataset("docs") if self.doc_count <= DRIVER_MAX_ROWS else None
             if ds is not None:
                 try:
                     import numpy as np

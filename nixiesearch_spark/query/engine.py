@@ -183,18 +183,26 @@ class Searcher:
         replacing score order (reference RetrieveQuery.scala:82-87);
         ``fields``: stored columns to fetch (default [docid, score]).
 
-        ``mode``: physical strategy. "auto" (default) routes score-ordered
-        match queries on a fresh quantized packed index through the WAND
-        serving path (query/wand.py — search-head driver mode for small
-        block volumes, distributed block-max pruning otherwise), all-match
-        RRF queries through the search-head fused kernel, and all-match
-        bool/dis_max through the multi-branch kernel (bool_topk_driver;
-        declines back to Catalyst for tie_breaker > 1 or large block
-        volumes). Every fast path is bit-identical to the flat plan
-        (tests/test_wand.py, tests/test_serving.py). "flat" forces the
-        pure-Catalyst plan everywhere."""
+        ``mode``: physical strategy, "auto" (default) or "flat". The
+        mapping checks run first, on every route. Then ``_plan_route``
+        picks the producer, in this order of checks: mode "auto", a fresh
+        quantized packed index (wand.packed_ready), a score-ordered match
+        query (→ wand_topk: search-head driver mode for small block
+        volumes, distributed block-max pruning otherwise, and always
+        distributed under filters or tombstones), no filters, a query shape
+        a search-head driver serves (sort-by-field over one match query,
+        all-match rrf with ≥ 2 branches, all-match bool, all-match dis_max
+        with tie_breaker ≤ 1), no tombstones. A search-head driver may
+        still decline on the data (driver size bounds, docs/packed drift);
+        the flat plan then serves. Every fast path is bit-identical to the
+        flat plan (tests/test_wand.py, tests/test_serving.py). "flat"
+        forces the pure-Catalyst plan everywhere."""
         if isinstance(query, dict) or query is None:
             query = ast.parse_query(query)
+        if isinstance(query, ast.RRFQuery) and sort:
+            # reference Searcher.scala:119
+            raise ValueError("sorting is not supported for rrf queries")
+        self._check_mapping(query, filters, sort=sort)
         self.counters["searches"] += 1
         key = None
         if self._plan_cache_on:
@@ -203,131 +211,119 @@ class Searcher:
             if hit is not None:
                 self.counters["plan_cache_hits"] += 1
                 return hit
-        df, cacheable = self._search_impl(query, filters, size, fields, sort, mode)
-        if not cacheable:  # non-cacheable == an auto-routed serving response
+        topk = self._served_topk(query, filters, size, sort, mode)
+        if topk is None:  # the flat route, or a driver declined on the data
+            topk = self._flat_topk(query, filters, size, sort)
+        else:  # served off the flat plan: never plan-cached
             self.counters["autorouted"] += 1
-        if key is not None and cacheable:
-            self._cache_plan(key, df)
-        return df
-
-    def _search_impl(
-        self,
-        query: ast.Query,
-        filters: dict | None,
-        size: int,
-        fields: list[str] | None,
-        sort: list | None,
-        mode: str,
-    ) -> tuple[DataFrame, bool]:
-        if isinstance(query, ast.RRFQuery):
-            # rerank query: fuse per-branch top-windows; sorting is rejected
-            # (reference Searcher.scala:119)
-            if sort:
-                raise ValueError("sorting is not supported for rrf queries")
-            fused, cacheable = self._rrf(query, filters, size, mode)
-            if fields:
-                return self.fetch(fused, fields), cacheable
-            return fused, cacheable
-        if self.mapping is not None and sort:
-            for item in sort:
-                if item[0] not in ("_score", "_doc"):
-                    self.mapping.require(item[0], "sort")
-        if (
-            mode == "auto"
-            and sort is not None
-            and filters is None
-            and self.reader.tombstones is None
-            and isinstance(query, ast.MatchQuery)
-            and self._wand_routable(query)
-        ):
-            topk = self._sort_search_driver(query, sort, size)
-            if topk is not None:  # driver declined → fall through to flat
-                if fields:
-                    return self.fetch(topk, fields), False
-                return topk.drop("_rank"), False
-        if mode == "auto" and sort is None and self._wand_routable(query):
-            topk = self._wand_search(query, filters, size)
-            if fields:
-                return self.fetch(topk, fields), False
-            return topk, False  # may be a driver-side LocalFrame
-        if (
-            mode == "auto"
-            and sort is None
-            and filters is None
-            and self.reader.tombstones is None
-            and self._bool_routable(query)
-        ):
-            topk = self._bool_search(query, size)
-            if topk is not None:  # driver declined → fall through to flat
-                if fields:
-                    return self.fetch(topk, fields), False
-                return topk, False
-        scored = self.score(query, filters)
-        if sort:
-            topk = self._sorted_topk(scored, sort, size)
-            if fields:
-                return self.fetch(topk, fields), True
-            return topk.drop("_rank"), True
-        topk = scored.orderBy(F.desc("score"), F.asc("docid")).limit(size)
+            key = None
         if fields:
-            return self.fetch(topk, fields), True
-        return topk, True
+            topk = self.fetch(topk, fields)
+        elif sort:
+            topk = topk.drop("_rank")
+        if key is not None:
+            self._cache_plan(key, topk)
+        return topk
 
-    def _wand_routable(self, query: ast.Query) -> bool:
-        from nixiesearch_spark.query.wand import packed_ready
+    def _plan_route(
+        self, query: ast.Query, filters: dict | None, mode: str,
+        sort: list | None = None, facet: bool = False,
+    ) -> str:
+        """The one route decision for search(), facet_term() and
+        facet_range() (``facet=True``): which producer serves the request —
 
-        return isinstance(query, ast.MatchQuery) and packed_ready(self.reader)
+        - "head": a search-head driver (bool_topk_driver, rrf_topk_driver,
+          or the full match set of _match_set_driver for sort-by-field and
+          facets);
+        - "wand": wand_topk, which picks its own driver or distributed
+          plan from block volume, filters and tombstones;
+        - "flat": the Catalyst plan.
 
-    def _bool_routable(self, query: ast.Query) -> bool:
-        """Fused bool/dis_max of match branches on a fresh packed index —
-        the same shapes engine._fused handles, served by the search-head
-        kernel (wand.bool_topk_driver, bit-identical)."""
-        from nixiesearch_spark.query.wand import packed_ready
+        Checks, in order: mode, a fresh packed index, a score-ordered match
+        search, filters, the query shape, tombstones (last: reading them is
+        a Spark read when they exist). The mapping checks have already run.
+        A head driver may still decline on the data by returning None (the
+        ordinal and field LUT doc-count bounds, DRIVER_MAX_BLOCKS,
+        docs/packed drift); the caller then serves the flat plan."""
+        from nixiesearch_spark.query import wand
 
-        if not packed_ready(self.reader):
-            return False
-        if isinstance(query, ast.BoolQuery):
+        if mode != "auto" or not wand.packed_ready(self.reader):
+            return "flat"
+        match = isinstance(query, ast.MatchQuery)
+        if match and not sort and not facet:
+            return "wand"
+        if filters is not None:
+            return "flat"
+        if isinstance(query, ast.RRFQuery):
+            # a one-branch rrf search passes the branch's raw scores through
+            # the flat plan; a facet needs only the branch match sets
+            ok = all(isinstance(b, ast.MatchQuery) for b in query.retrieve) and (
+                len(query.retrieve) > (0 if facet else 1)
+            )
+        elif sort or facet:
+            # the full match set of one match query; geo sort items need
+            # the distance expression of the flat plan
+            ok = match and not any(isinstance(item[0], dict) for item in sort or ())
+        elif isinstance(query, ast.BoolQuery):
             subs = [*query.must, *query.should, *query.must_not]
-            return bool(query.must or query.should) and all(
+            ok = bool(query.must or query.should) and all(
                 isinstance(s, ast.MatchQuery) for s in subs
             )
-        if isinstance(query, ast.DisMaxQuery):
-            return all(isinstance(s, ast.MatchQuery) for s in query.queries)
-        return False
-
-    def _bool_search(self, q: ast.Query, size: int) -> LocalFrame | None:
-        from nixiesearch_spark.query.wand import bool_topk_driver
-
-        if self.mapping is not None:
-            self._validate_query(q)
-        if isinstance(q, ast.BoolQuery):
-            branches = (
-                [("must", m) for m in q.must]
-                + [("should", m) for m in q.should]
-                + [("must_not", m) for m in q.must_not]
+        elif isinstance(query, ast.DisMaxQuery):
+            # a tie_breaker above 1 breaks the kernel's Σ upper bound
+            ok = 0.0 <= float(query.tie_breaker) <= 1.0 and all(
+                isinstance(s, ast.MatchQuery) for s in query.queries
             )
-            return bool_topk_driver(self.reader, branches, k=size, kind="bool")
-        branches = [("dismax", m) for m in q.queries]
-        return bool_topk_driver(
-            self.reader, branches, k=size, kind="dismax", tie=q.tie_breaker
+        else:
+            ok = False
+        return "head" if ok and self.reader.tombstones is None else "flat"
+
+    def _served_topk(
+        self, query: ast.Query, filters: dict | None, size: int, sort: list | None, mode: str
+    ) -> DataFrame | None:
+        """The top-k of the producer _plan_route picks, or None for the flat
+        plan (the flat route, or a search-head driver declining on the
+        data)."""
+        from nixiesearch_spark.query import wand
+
+        route = self._plan_route(query, filters, mode, sort=sort)
+        if route == "wand":
+            # filters and tombstones ride inside the pruned search
+            return wand.wand_topk(
+                self.reader, query.field, query.query, k=size,
+                operator=query.operator, filters=filters,
+            )
+        if route == "flat":
+            return None
+        if sort:
+            return self._sort_search_driver(query, sort, size)
+        if isinstance(query, ast.RRFQuery):
+            window = query.rank_window_size if query.rank_window_size is not None else size
+            return wand.rrf_topk_driver(
+                self.reader, query.retrieve, size=size, window=window, rrf_k=query.k
+            )
+        if isinstance(query, ast.BoolQuery):
+            branches = (
+                [("must", m) for m in query.must]
+                + [("should", m) for m in query.should]
+                + [("must_not", m) for m in query.must_not]
+            )
+            return wand.bool_topk_driver(self.reader, branches, k=size, kind="bool")
+        branches = [("dismax", m) for m in query.queries]
+        return wand.bool_topk_driver(
+            self.reader, branches, k=size, kind="dismax", tie=query.tie_breaker
         )
 
-    def _wand_search(self, q: ast.MatchQuery, filters: dict | None, size: int) -> DataFrame:
-        """Score-ordered match top-k via the packed/WAND serving path —
-        bit-identical to the flat plan (same float32 chain, same tie rules;
-        filters and tombstones ride inside the pruned search)."""
-        from nixiesearch_spark.query.wand import wand_topk
-
-        if self.mapping is not None:
-            self.mapping.require(q.field, "search")
-            if filters is not None:
-                from nixiesearch_spark.query.filters import collect_filter_fields
-
-                for f in collect_filter_fields(filters):
-                    self.mapping.require(f, "filter")
-        return wand_topk(
-            self.reader, q.field, q.query, k=size, operator=q.operator, filters=filters
-        )
+    def _flat_topk(
+        self, query: ast.Query, filters: dict | None, size: int, sort: list | None
+    ) -> DataFrame:
+        """The Catalyst plan's top-k (sorted frames carry ``_rank``)."""
+        if isinstance(query, ast.RRFQuery):
+            return self._rrf(query, filters, size)
+        scored = self._scores(query, filters)
+        if sort:
+            return self._sorted_topk(scored, sort, size)
+        return scored.orderBy(F.desc("score"), F.asc("docid")).limit(size)
 
     def fetch(self, topk: DataFrame, fields: list[str]) -> DataFrame:
         """Doc-fetch join: tiny top-k frame broadcast against the docs table
@@ -350,6 +346,12 @@ class Searcher:
         the top-k collector (RetrieveQuery.scala:88-90). Plans memoize per
         (query, filters, index version) like search() — score frames are
         always lazy, so this is pure compile caching."""
+        self._check_mapping(query, filters)
+        return self._scores(query, filters)
+
+    def _scores(self, query: ast.Query, filters: dict | None = None) -> DataFrame:
+        """score() after its mapping checks: the flat plans of every public
+        entry build on this."""
         key = None
         if self._plan_cache_on:
             key = self._plan_key("score", query, filters)
@@ -375,37 +377,25 @@ class Searcher:
             # the k survivors all satisfy it — a post-filter would return
             # fewer than k)
             return self._score_knn(query, filters)
-        query = self._expand_wildcards(query)
-        if self.mapping is not None:
-            self._validate_query(query)
-        scored = self._score(query)
+        scored = self._score(self._expand_wildcards(query))
         tombs = self.reader.tombstones
         if tombs is not None:
             scored = scored.join(tombs, "docid", "left_anti")
         if filters is not None:
-            if self.mapping is not None:
-                from nixiesearch_spark.query.filters import collect_filter_fields
-
-                for f in collect_filter_fields(filters):
-                    self.mapping.require(f, "filter")
             pred = compile_predicate(filters)
             keep = self.reader.docs.where(pred).select("docid")
             scored = scored.join(keep, "docid", "left_semi")
         return scored
 
-    def _rrf(
-        self, q: ast.RRFQuery, filters: dict | None, size: int, mode: str = "auto"
-    ) -> tuple[DataFrame, bool]:
-        """RRF fusion over retrieve branches (reference RRFQuery.topDocs):
-        each branch retrieves its top ``rank_window_size`` (default = size)
-        WITH the request filters, then ranks fuse as Σ 1/(k + rank). One
-        branch passes through with raw scores (combine's head::Nil case).
-        All-match branches with no filters take the search-head driver
-        kernel on a fresh quantized packed index (rrf_topk_driver — zero
-        Catalyst compiles), else the single-scan fused path
-        (rrf_fuse_matches: one postings scan feeds every branch). Returns
-        (frame, plan-cacheable) — driver results are LocalFrames and not
-        plan-cached."""
+    def _rrf(self, q: ast.RRFQuery, filters: dict | None, size: int) -> DataFrame:
+        """The flat plan of RRF fusion over retrieve branches (reference
+        RRFQuery.topDocs): each branch retrieves its top
+        ``rank_window_size`` (default = size) WITH the request filters, then
+        ranks fuse as Σ 1/(k + rank). One branch passes through with raw
+        scores (combine's head::Nil case). All-match branches with no
+        filters or tombstones take the single-scan fused path
+        (rrf_fuse_matches: one postings scan feeds every branch); the
+        search-head route is rrf_topk_driver (_served_topk)."""
         from nixiesearch_spark.query.rrf import rrf_fuse, rrf_fuse_matches
 
         if not q.retrieve:
@@ -413,35 +403,18 @@ class Searcher:
         window = q.rank_window_size if q.rank_window_size is not None else size
         if len(q.retrieve) == 1:
             return (
-                self.score(q.retrieve[0], filters)
+                self._scores(q.retrieve[0], filters)
                 .orderBy(F.desc("score"), F.asc("docid"))
                 .limit(size)
-            ), True
+            )
         if (
             filters is None
             and self.reader.tombstones is None
             and all(isinstance(s, ast.MatchQuery) for s in q.retrieve)
         ):
-            if self.mapping is not None:
-                # the fast paths must enforce the same field contract as the
-                # per-branch score() route they replace
-                for m in q.retrieve:
-                    self._validate_query(m)
-            from nixiesearch_spark.query.wand import packed_ready, rrf_topk_driver
-
-            if mode == "auto" and packed_ready(self.reader):
-                return (
-                    rrf_topk_driver(
-                        self.reader, q.retrieve, size=size, window=window, rrf_k=q.k
-                    ),
-                    False,
-                )
-            return (
-                rrf_fuse_matches(self, q.retrieve, size=size, window=window, k=q.k),
-                True,
-            )
-        branches = [self.score(s, filters) for s in q.retrieve]
-        return rrf_fuse(branches, size=size, window=window, k=q.k), True
+            return rrf_fuse_matches(self, q.retrieve, size=size, window=window, k=q.k)
+        branches = [self._scores(s, filters) for s in q.retrieve]
+        return rrf_fuse(branches, size=size, window=window, k=q.k)
 
     def _embed_semantic(self, q: ast.SemanticQuery) -> ast.KnnQuery:
         if self.embedder is not None:
@@ -514,11 +487,6 @@ class Searcher:
         if tombs is not None:
             cand = cand.join(tombs, "docid", "left_anti")
         if filters is not None:
-            if self.mapping is not None:
-                from nixiesearch_spark.query.filters import collect_filter_fields
-
-                for f in collect_filter_fields(filters):
-                    self.mapping.require(f, "filter")
             keep = self.reader.docs.where(compile_predicate(filters)).select("docid")
             cand = cand.join(keep, "docid", "left_semi")
         vec = F.col(q.field)
@@ -559,11 +527,6 @@ class Searcher:
         if tombs is not None:
             docs = docs.join(tombs, "docid", "left_anti")
         if filters is not None:
-            if self.mapping is not None:
-                from nixiesearch_spark.query.filters import collect_filter_fields
-
-                for f in collect_filter_fields(filters):
-                    self.mapping.require(f, "filter")
             docs = docs.where(compile_predicate(filters))
         vec = F.col(q.field)
         qv = F.array(*[F.lit(float(x)) for x in q.query_vector])
@@ -630,17 +593,43 @@ class Searcher:
             )
         return q
 
+    def _check_mapping(
+        self, query: ast.Query, filters: dict | None = None,
+        sort: list | None = None, facet: str | None = None,
+    ) -> None:
+        """The mapping's capability checks for one request — the query's
+        searched fields (multi_match patterns expanded), filter fields, sort
+        fields and the facet field. Each public entry runs them once, before
+        any route: an undeclared capability is a user error on every route
+        (reference RetrieveQuery.scala:117-119, Predicate.scala:132-133)."""
+        if self.mapping is None:
+            return
+        self._validate_query(query)
+        if filters is not None:
+            from nixiesearch_spark.query.filters import collect_filter_fields
+
+            for f in collect_filter_fields(filters):
+                self.mapping.require(f, "filter")
+        for item in sort or ():
+            if item[0] not in ("_score", "_doc"):
+                self.mapping.require(item[0], "sort")
+        if facet is not None:
+            self.mapping.require(facet, "facet")
+
     def _validate_query(self, q: ast.Query) -> None:
         if isinstance(q, ast.MatchQuery):
             self.mapping.require(q.field, "search")
         elif isinstance(q, ast.MultiMatchQuery):
-            for f in q.fields:
+            for f in self._expand_wildcards(q).fields:
                 self.mapping.require(f, "search")
         elif isinstance(q, ast.BoolQuery):
             for sub in [*q.must, *q.should, *q.must_not]:
                 self._validate_query(sub)
         elif isinstance(q, ast.DisMaxQuery):
             for sub in q.queries:
+                self._validate_query(sub)
+        elif isinstance(q, ast.RRFQuery):
+            for sub in q.retrieve:
                 self._validate_query(sub)
 
     def term_facet(self, match_set: DataFrame, field: str, size=10) -> DataFrame:
@@ -666,57 +655,86 @@ class Searcher:
         mode: str = "auto",
     ) -> DataFrame:
         """Query-level term facet: counts over the FULL match set (reference
-        FacetsCollector semantics, core/aggregate/TermAggregator.scala).
-        mode="auto" serves unfiltered match queries on a fresh packed index
-        from the search head: the full match set decodes driver-side
-        (wand.match_scores_driver — facet membership needs no top-k) and the
-        facet column rides a pyarrow docid LUT (IndexReader.field_lut), so
-        the whole facet costs zero Spark jobs. Identical (term, count) rows
-        to the cluster plan (tests/test_serving_facet.py); declines (large
-        corpus, remote dir, filters, tombstones) fall back to term_agg over
-        score()."""
-        if isinstance(query, dict) or query is None:
-            query = ast.parse_query(query)
-        if self.mapping is not None:
-            self.mapping.require(field, "facet")
-        if (
-            mode == "auto"
-            and filters is None
-            and isinstance(query, ast.MatchQuery)
-            and self.reader.tombstones is None
-            and self._wand_routable(query)
-        ):
-            out = self._facet_term_driver(query, field, size)
-            if out is not None:
-                return out
-        # RRF facet = union of per-branch match sets then one aggregate
-        # (reference MergedFacetCollector, core/search/
-        # MergedFacetCollector.scala:17-33); all-match-branch RRF rides the
-        # same driver route with the branch match-set memo
-        if isinstance(query, ast.RRFQuery):
-            if not query.retrieve:  # same error the retrieve path raises
-                raise ValueError("rrf requires at least one retrieve query")
-            if self._facet_rrf_routable(query, filters, mode):
-                out = self._facet_term_rrf_driver(query, field, size)
-                if out is not None:
-                    return out
-            from nixiesearch_spark.query.aggs import merged_match_set, term_agg
-
-            merged = merged_match_set(
-                [self.score(b, filters) for b in query.retrieve]
-            )
-            return term_agg(merged, self.reader.docs, field, size)
+        FacetsCollector semantics, core/aggregate/TermAggregator.scala; an
+        RRF facet counts the union of the branch match sets, reference
+        MergedFacetCollector, core/search/MergedFacetCollector.scala:17-33).
+        When _plan_route picks the search head (unfiltered match or
+        all-match RRF on a fresh packed index, no tombstones), the full
+        match set decodes driver-side (wand.match_scores_driver — facet
+        membership needs no top-k) and the facet column rides a pyarrow
+        docid LUT (IndexReader.field_lut), so the whole facet costs zero
+        Spark jobs. Identical (term, count) rows to the cluster plan
+        (tests/test_serving_facet.py); every other request, and a head the
+        data declines (_facet_values), runs term_agg over score()."""
         from nixiesearch_spark.query.aggs import term_agg
 
-        return term_agg(self.score(query, filters), self.reader.docs, field, size)
+        query = self._facet_query(query, field, filters)
+        vals = self._facet_values(query, field, filters, mode)
+        if vals is not None:
+            return self._facet_values_local(vals, field, size)
+        return term_agg(self._flat_match_set(query, filters), self.reader.docs, field, size)
 
-    def _facet_term_rrf_driver(self, q: ast.RRFQuery, field: str, size) -> LocalFrame | None:
-        if self.reader.field_lut(field) is None:  # cheap gate first
+    def facet_range(
+        self,
+        query: ast.Query | dict,
+        field: str,
+        ranges: list,
+        filters: dict | None = None,
+        mode: str = "auto",
+    ) -> DataFrame:
+        """Query-level range facet, routed like facet_term (bucket counts
+        need only match-set membership + the numeric LUT column). Integer
+        columns only on the search head — other dtypes take the cluster
+        plan."""
+        from nixiesearch_spark.query.aggs import range_agg
+
+        query = self._facet_query(query, field, filters)
+        vals = self._facet_values(query, field, filters, mode, numeric=True)
+        if vals is not None:
+            return self._range_values_local(vals, ranges)
+        return range_agg(self._flat_match_set(query, filters), self.reader.docs, field, ranges)
+
+    def _facet_query(self, query, field: str, filters: dict | None) -> ast.Query:
+        """A facet request's parsed query, after its mapping checks."""
+        if isinstance(query, dict) or query is None:
+            query = ast.parse_query(query)
+        if isinstance(query, ast.RRFQuery) and not query.retrieve:
+            # same error the retrieve path raises
+            raise ValueError("rrf requires at least one retrieve query")
+        self._check_mapping(query, filters, facet=field)
+        return query
+
+    def _flat_match_set(self, query: ast.Query, filters: dict | None) -> DataFrame:
+        """The cluster plan's match set of a facet request."""
+        if isinstance(query, ast.RRFQuery):
+            from nixiesearch_spark.query.aggs import merged_match_set
+
+            return merged_match_set([self._scores(b, filters) for b in query.retrieve])
+        return self._scores(query, filters)
+
+    def _facet_values(
+        self, query: ast.Query, field: str, filters: dict | None, mode: str,
+        numeric: bool = False,
+    ):
+        """The facet column's values over the match set, read on the search
+        head (a pandas Series; for RRF, the union of the branch match sets),
+        or None for the cluster plan: the route is flat, or the data
+        declines — no field LUT (or, with ``numeric``, a non-integer
+        column), a match set the ordinal LUT cannot resolve, or docs/packed
+        drift. The LUT is checked before any match-set decode."""
+        if self._plan_route(query, filters, mode, facet=True) != "head":
             return None
-        union = self._union_match_sets_driver(q.retrieve)
-        if union is None:
+        lut = self.reader.field_lut(field)
+        if lut is None or (numeric and lut[1].dtype.kind not in "iu"):
             return None
-        return self._facet_values_local(union, field, size)
+        parts = []
+        for b in query.retrieve if isinstance(query, ast.RRFQuery) else [query]:
+            ms = self._match_set_driver(b)
+            if ms is None:
+                return None
+            parts.append(ms["docid"].to_numpy(np.int64))
+        pos = _lut_positions(lut[0], np.unique(np.concatenate(parts)))
+        return None if pos is None else lut[1].iloc[pos]
 
     MATCH_SET_CACHE_MAX = 8
 
@@ -739,147 +757,36 @@ class Searcher:
             self._ms_cache[key] = ms
         return ms
 
-    def _facet_term_driver(self, q: ast.MatchQuery, field: str, size) -> LocalFrame | None:
-        # cheap gate FIRST: no LUT means the cluster plan runs anyway, so
-        # don't pay the full match-set decode just to find that out
-        if self.reader.field_lut(field) is None:
-            return None
-        ms = self._match_set_driver(q)
-        if ms is None:
-            return None
-        return self._facet_values_local(ms, field, size)
-
-    def _facet_values_local(self, ms, field: str, size) -> LocalFrame | None:
-        """Term-facet counting over a driver-side match frame (docid col):
-        facet values via the field LUT, count-desc/term-asc ties like the
-        cluster agg, returned as a LocalFrame typed from the docs schema
-        (None when the LUT cannot serve)."""
+    def _facet_values_local(self, vals, field: str, size) -> LocalFrame:
+        """Term-facet counts over the match set's facet values, count-desc/
+        term-asc ties like the cluster agg, returned as a LocalFrame typed
+        from the docs schema."""
         from pyspark.sql.types import LongType, StructField, StructType
 
         from nixiesearch_spark.query.aggs import MAX_TERM_FACETS
 
-        lut = self.reader.field_lut(field)
-        if lut is None:
-            return None
         n = MAX_TERM_FACETS if size == "all" else int(size)
-        docids, vals = lut
         ftype = next(
             f.dataType for f in self.reader.docs.schema.fields if f.name == field
         )
         schema = StructType(
             [StructField("term", ftype), StructField("count", LongType(), False)]
         )
-        mdoc = ms["docid"].to_numpy(np.int64)
-        pos = _lut_positions(docids, mdoc)
-        if pos is None:
-            return None
-        if not len(mdoc):
+        if not len(vals):
             return LocalFrame.empty(self.spark, schema)
-        vc = vals.iloc[pos].value_counts(dropna=True)  # matches the isNotNull filter
+        vc = vals.value_counts(dropna=True)  # matches the isNotNull filter
         pdf = vc.rename_axis("term").reset_index(name="count")
         # same tie order as the cluster plan: count desc, term asc
         pdf = pdf.sort_values(["count", "term"], ascending=[False, True], kind="stable").head(n)
         return LocalFrame(self.spark, pdf, schema)
 
-    def facet_range(
-        self,
-        query: ast.Query | dict,
-        field: str,
-        ranges: list,
-        filters: dict | None = None,
-        mode: str = "auto",
-    ) -> DataFrame:
-        """Query-level range facet with the same driver route as
-        facet_term (bucket counts need only match-set membership +
-        the numeric LUT column). Integer columns only on the fast path —
-        other dtypes fall back to the cluster plan."""
-        if isinstance(query, dict) or query is None:
-            query = ast.parse_query(query)
-        if self.mapping is not None:
-            self.mapping.require(field, "facet")
-        if (
-            mode == "auto"
-            and filters is None
-            and isinstance(query, ast.MatchQuery)
-            and self.reader.tombstones is None
-            and self._wand_routable(query)
-        ):
-            out = self._facet_range_driver(query, field, ranges)
-            if out is not None:
-                return out
-        # RRF range facet: union of branch match sets, one bucket count
-        # (MergedFacetCollector semantics, same as facet_term)
-        if isinstance(query, ast.RRFQuery):
-            if not query.retrieve:
-                raise ValueError("rrf requires at least one retrieve query")
-            # cheap gates FIRST (same discipline as every facet driver
-            # route): LUT+dtype before any branch decode
-            if self._facet_rrf_routable(query, filters, mode) and self._range_lut_ok(field):
-                union = self._union_match_sets_driver(query.retrieve)
-                if union is not None:
-                    out = self._range_values_local(union, field, ranges)
-                    if out is not None:
-                        return out
-            from nixiesearch_spark.query.aggs import merged_match_set, range_agg
-
-            merged = merged_match_set(
-                [self.score(b, filters) for b in query.retrieve]
-            )
-            return range_agg(merged, self.reader.docs, field, ranges)
-        from nixiesearch_spark.query.aggs import range_agg
-
-        return range_agg(self.score(query, filters), self.reader.docs, field, ranges)
-
-    def _facet_rrf_routable(self, q: ast.RRFQuery, filters, mode: str) -> bool:
-        """ONE spelling of the RRF facet driver-route guard (term and range
-        share it, so the conditions cannot diverge again)."""
-        return (
-            mode == "auto"
-            and filters is None
-            and self.reader.tombstones is None
-            and all(isinstance(b, ast.MatchQuery) for b in q.retrieve)
-            and all(self._wand_routable(b) for b in q.retrieve)
-        )
-
-    def _range_lut_ok(self, field: str) -> bool:
-        lut = self.reader.field_lut(field)
-        return lut is not None and lut[1].dtype.kind in "iu"
-
-    def _union_match_sets_driver(self, branches: list):
-        """Driver-side union of branch match sets (docid frame) or None."""
+    def _range_values_local(self, vals, ranges: list) -> LocalFrame:
+        """Range-bucket counts over the match set's (integer) facet values
+        as a LocalFrame; an open bound is NaN in the frame and collects as
+        None."""
         import pandas as pd
 
-        parts = []
-        for b in branches:
-            ms = self._match_set_driver(b)
-            if ms is None:
-                return None
-            parts.append(ms[["docid"]])
-        return pd.concat(parts, ignore_index=True).drop_duplicates("docid")
-
-    def _facet_range_driver(self, q: ast.MatchQuery, field: str, ranges: list) -> LocalFrame | None:
-        if not self._range_lut_ok(field):  # cheap gate (incl. dtype) first
-            return None
-        ms = self._match_set_driver(q)
-        if ms is None:
-            return None
-        return self._range_values_local(ms, field, ranges)
-
-    def _range_values_local(self, ms, field: str, ranges: list) -> LocalFrame | None:
-        """Range-bucket counts over a driver-side match frame as a
-        LocalFrame; an open bound is NaN in the frame and collects as None
-        (None when the LUT cannot serve)."""
-        import pandas as pd
-
-        lut = self.reader.field_lut(field)
-        if lut is None or lut[1].dtype.kind not in "iu":
-            return None
-        docids, vals = lut
-        mdoc = ms["docid"].to_numpy(np.int64)
-        pos = _lut_positions(docids, mdoc)
-        if pos is None:
-            return None
-        v = vals.to_numpy()[pos] if len(mdoc) else vals.to_numpy()[:0]
+        v = vals.to_numpy()
         rows = []
         for r in ranges:
             mask = np.ones(len(v), dtype=bool)
@@ -911,17 +818,15 @@ class Searcher:
         as reversed stable pandas sorts (docid-asc tiebreak first) — the
         exact TakeOrderedAndProject semantics including per-key
         missing-first/last — returned as a (docid, score, _rank) LocalFrame.
-        Declines (None) on geo items, float sort
-        columns (their pandas form conflates null and NaN, which Spark
-        orders differently), or columns whose LUT/match-set can't serve
-        driver-side."""
+        Declines (None) on float sort columns (their pandas form conflates
+        null and NaN, which Spark orders differently), or columns whose
+        LUT/match-set can't serve driver-side; geo items never get here
+        (_plan_route)."""
         import pandas as pd
 
         items = []
         for item in sort:
             fld, direction = item[0], item[1]
-            if isinstance(fld, dict):
-                return None
             missing = item[2] if len(item) > 2 else ("last" if direction == "asc" else "first")
             items.append((fld, direction, missing))
         luts = {}

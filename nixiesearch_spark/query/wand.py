@@ -831,11 +831,9 @@ def wand_topk(
     #   handful of parquet row-groups (docs are written sorted by
     #   (shard, bucket, docid)). Plan-compile cost of the literals is
     #   ~1 s, noise at that scale.
-    doc_count = max(
-        (f.get("doc_count", 0) for f in reader.stats.get("fields", {}).values()),
-        default=0,
+    use_lookup = resolve == "lookup" or (
+        resolve == "auto" and reader.doc_count > DRIVER_MAX_ROWS
     )
-    use_lookup = resolve == "lookup" or (resolve == "auto" and doc_count > DRIVER_MAX_ROWS)
     if not use_lookup:
         joined = reader.ordinal_map.join(F.broadcast(local), ["shard", "ordinal"])
         return (

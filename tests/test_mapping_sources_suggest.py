@@ -62,7 +62,9 @@ def test_searcher_enforces_mapping(spark, tmp_path):
         "_id string, title string, price int, cat string",
     )
     d = str(tmp_path / "idx")
-    cfg = IndexConfig(text_fields=("title",), id_cols=("_id",), n_shards=2)
+    # cat is built as a text field, so only the mapping stands between a
+    # request on it and an answer
+    cfg = IndexConfig(text_fields=("title", "cat"), id_cols=("_id",), n_shards=2)
     IndexBuilder(spark, cfg).build(df, d)
     s = Searcher(IndexReader(spark, d), mapping=MAPPING)
     assert s.search(MatchQuery("title", "dress"), size=5).count() == 2
@@ -72,9 +74,29 @@ def test_searcher_enforces_mapping(spark, tmp_path):
         s.search(MatchQuery("title", "dress"), filters={"term": {"cat": "a"}}).count()
     with pytest.raises(MappingError):
         s.search(MatchQuery("title", "dress"), sort=[("cat", "asc")]).count()
+    # searching the unsearchable cat fails on every route, the search-head
+    # ones included, exactly as under mode="flat"
+    rrf_cat = {"rrf": {"retrieve": [{"match": {"title": "dress"}}, {"match": {"cat": "a"}}]}}
+    for mode in ("auto", "flat"):
+        with pytest.raises(MappingError):
+            s.search(MatchQuery("cat", "a"), sort=[("price", "desc")], mode=mode).count()
+        with pytest.raises(MappingError):
+            s.facet_term(MatchQuery("cat", "a"), "price", mode=mode).collect()
+        with pytest.raises(MappingError):
+            s.facet_range(MatchQuery("cat", "a"), "price", [{"lt": 15}], mode=mode).collect()
+        with pytest.raises(MappingError):
+            s.facet_term(rrf_cat, "price", mode=mode).collect()
     # declared-capability paths work
     s.search(MatchQuery("title", "dress"), filters={"range": {"price": {"gte": 15}}}).count()
     s.search(MatchQuery("title", "dress"), sort=[("price", "desc")]).count()
+    rrf_title = {"rrf": {"retrieve": [{"match": {"title": "dress"}},
+                                      {"match": {"title": "red"}}]}}
+    for mode in ("auto", "flat"):
+        assert s.facet_term(MatchQuery("title", "dress"), "price", mode=mode).count() == 2
+        ranges = [{"lt": 15}, {"gte": 15}]
+        got = s.facet_range(MatchQuery("title", "dress"), "price", ranges, mode=mode).collect()
+        assert [r["count"] for r in got] == [1, 1]
+        assert s.facet_term(rrf_title, "price", mode=mode).count() == 2
 
 
 def test_read_ndjson_and_gzip_and_corrupt(spark, tmp_path):

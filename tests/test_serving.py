@@ -285,3 +285,94 @@ def test_match_scores_driver_after_append_with_avgdl_drift(spark, tmp_path):
         assert _pairs(s.search(q, size=10).collect()) == _pairs(
             s.search(q, size=10, mode="flat").collect()
         )
+
+
+@pytest.fixture(scope="module")
+def routed(spark, tmp_path_factory, tiny_corpus_pd):
+    """Readers over one fresh index with an int column, a copy of it with a
+    tombstone, and a copy with an append that was not packed (stale)."""
+    import shutil
+
+    root = tmp_path_factory.mktemp("idxroute")
+    pdf = tiny_corpus_pd.copy()
+    pdf["nlen"] = pdf["content"].str.len().astype("int64")
+    cfg = IndexConfig(text_fields=("content",), n_shards=4, quantize=True, block_size=16)
+    fresh, tomb, stale = (str(root / n) for n in ("fresh", "tomb", "stale"))
+    IndexBuilder(spark, cfg).build(spark.createDataFrame(pdf), fresh)
+    shutil.copytree(fresh, tomb)
+    dead = IndexReader(spark, fresh).docs.select("docid").first()["docid"]
+    spark.createDataFrame([(dead,)], "docid long").write.parquet(tomb + "/tombstones")
+    shutil.copytree(fresh, stale)
+    b = IndexBuilder(spark, cfg)
+    extra = spark.createDataFrame(
+        [("zrepo", "zpath", "zc1", "py", "def import zz_fresh_term", 24)],
+        "repo string, path string, commit string, lang string, content string, nlen long",
+    )
+    b._build_shards(extra, stale, list(range(4)))
+    b.finalize(stale, pack=False)
+    return {"fresh": fresh, "tomb": tomb, "stale": stale}
+
+
+def _dismax(tie):
+    from nixiesearch_spark.query import DisMaxQuery
+
+    return DisMaxQuery(
+        queries=[MatchQuery("content", "def import"), MatchQuery("content", "the return")],
+        tie_breaker=tie,
+    )
+
+
+def _bool():
+    from nixiesearch_spark.query import BoolQuery
+
+    return BoolQuery(must=[MatchQuery("content", "def import")],
+                     should=[MatchQuery("content", "return")])
+
+
+_M = MatchQuery("content", "def import return")
+_FILT = {"range": {"commit": {"gte": "0"}}}
+_SORT = [("nlen", "desc")]
+_RANGES = [{"lt": 500}, {"gte": 500}]
+_MULTI = {"multi_match": {"query": "def import", "fields": ["content"]}}
+
+ROUTE_CASES = [
+    ("match", "fresh", lambda s: s.search(_M), "head"),
+    ("match_sort", "fresh", lambda s: s.search(_M, sort=_SORT), "head"),
+    ("bool", "fresh", lambda s: s.search(_bool()), "head"),
+    ("dis_max_tie_0.3", "fresh", lambda s: s.search(_dismax(0.3)), "head"),
+    ("rrf_2_branches", "fresh", lambda s: s.search(RRF_Q2), "head"),
+    ("facet_term", "fresh", lambda s: s.facet_term(_M, "lang"), "head"),
+    ("facet_range", "fresh", lambda s: s.facet_range(_M, "nlen", _RANGES), "head"),
+    ("facet_rrf", "fresh", lambda s: s.facet_term(RRF_Q2, "lang"), "head"),
+    ("match_filter", "fresh", lambda s: s.search(_M, filters=_FILT), "distributed"),
+    ("match_tombstone", "tomb", lambda s: s.search(_M), "distributed"),
+    ("match_sort_filter", "fresh", lambda s: s.search(_M, filters=_FILT, sort=_SORT), "flat"),
+    ("dis_max_tie_1.5", "fresh", lambda s: s.search(_dismax(1.5)), "flat"),
+    ("bool_filter", "fresh", lambda s: s.search(_bool(), filters=_FILT), "flat"),
+    ("facet_filter", "fresh", lambda s: s.facet_term(_M, "lang", filters=_FILT), "flat"),
+    ("multi_match", "fresh", lambda s: s.search(_MULTI), "flat"),
+    ("match_mode_flat", "fresh", lambda s: s.search(_M, mode="flat"), "flat"),
+    ("bool_mode_flat", "fresh", lambda s: s.search(_bool(), mode="flat"), "flat"),
+    ("rrf_mode_flat", "fresh", lambda s: s.search(RRF_Q2, mode="flat"), "flat"),
+    ("facet_mode_flat", "fresh", lambda s: s.facet_term(_M, "lang", mode="flat"), "flat"),
+    ("match_stale", "stale", lambda s: s.search(_M), "flat"),
+    ("rrf_stale", "stale", lambda s: s.search(RRF_Q2), "flat"),
+    ("facet_stale", "stale", lambda s: s.facet_term(_M, "lang"), "flat"),
+]
+
+
+@pytest.mark.parametrize("name, index, request_fn, route", ROUTE_CASES,
+                         ids=[c[0] for c in ROUTE_CASES])
+def test_auto_routes_are_pinned(spark, routed, name, index, request_fn, route):
+    """Which of the three paths answers each request shape: a LocalFrame is
+    the search head, a plan running the kernel through mapInArrow is the
+    distributed WAND plan, anything else is the flat Catalyst plan."""
+    from nixiesearch_spark.query.wand import LocalFrame
+
+    out = request_fn(Searcher(IndexReader(spark, routed[index]), plan_cache=False))
+    if isinstance(out, LocalFrame):
+        got = "head"
+    else:
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        got = "distributed" if "MapInArrow" in plan else "flat"
+    assert got == route
