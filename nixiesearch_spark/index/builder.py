@@ -53,6 +53,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from contextlib import contextmanager
 from dataclasses import dataclass, field as dc_field
 
 import numpy as np
@@ -158,6 +159,28 @@ class IndexBuilder:
         self.timings[name] = round(self.timings.get(name, 0.0) + (now - t0), 3)
         return now
 
+    @contextmanager
+    def _session_overrides(self, confs: dict | None = None, job: str | None = None):
+        """Set session-wide SQL ``confs`` (and the job description ``job``)
+        for the body, and restore every previous value — the job
+        description too, which the body may relabel — on every exit path:
+        a failed build must not leave its split size, shuffle width, Arrow
+        batch size or job label on the session's later jobs."""
+        confs = confs or {}
+        sc = self.spark.sparkContext
+        prev_job = sc.getLocalProperty("spark.job.description")
+        prev = {k: self.spark.conf.get(k) for k in confs}
+        try:
+            for k, v in confs.items():
+                self.spark.conf.set(k, v)
+            if job is not None:
+                sc.setJobDescription(job)
+            yield
+        finally:
+            for k, v in prev.items():
+                self.spark.conf.set(k, v)
+            sc.setJobDescription(prev_job)
+
     # ---------- docid / shard assignment ----------
 
     def with_docid(self, df: DataFrame) -> DataFrame:
@@ -211,233 +234,224 @@ class IndexBuilder:
         # was a full shuffle of the document payload, paid once per build
         # job. Non-file inputs (createDataFrame) keep the repartition guard.
         self._last_input_bytes = 0  # no stale carry-over between builds
-        prev_mpb = self._tune_input_splits(base, parallelism)
+        split_bytes = self._tune_input_splits(base, parallelism)
+        confs = {}
+        if split_bytes is not None:
+            confs["spark.sql.files.maxPartitionBytes"] = split_bytes
         # initial shuffle-partition count derived from input size (guide
         # §2.2: size partitions, don't inherit a core-count constant): the
         # token shuffle at 8 partitions holds multi-GB agg state per task
         # and spills; a higher INITIAL count is safe under AQE, which only
         # coalesces DOWN to its advisory size. A/B at 120k docs/local[4]:
-        # 156.0 s -> 144.3 s. Restored in the finally.
-        prev_sp = None
-        est_bytes = getattr(self, "_last_input_bytes", 0)
-        if est_bytes:
+        # 156.0 s -> 144.3 s.
+        if self._last_input_bytes:
             sp_conf = "spark.sql.shuffle.partitions"
-            cur_sp = int(self.spark.conf.get(sp_conf))
-            want_sp = min(4096, est_bytes // (16 * 1024 * 1024))
-            if want_sp > cur_sp:
-                prev_sp = str(cur_sp)
-                self.spark.conf.set(sp_conf, str(int(want_sp)))
+            want_sp = min(4096, self._last_input_bytes // (16 * 1024 * 1024))
+            if want_sp > int(self.spark.conf.get(sp_conf)):
+                confs[sp_conf] = str(int(want_sp))
         ordmap = None  # set inside; cleaned up in the finally
-        try:
-            if prev_mpb is None and base.rdd.getNumPartitions() < max(parallelism // 2, 2):
-                # non-file input (or already-fine splits): the .rdd partition
-                # probe costs a full plan->RDD conversion, so it only runs when
-                # split tuning could not size the scan itself
-                base = base.repartition(parallelism * 2)
-            if len(shards) < c.n_shards:
-                base = base.where(F.col("shard").isin(shards))
-            stored = list(c.stored_cols) if c.stored_cols else [
-                x for x in df.columns if x not in ("docid", "shard")
-            ]
-            # dense per-shard ordinals (Lucene segment-local docids): delta+VByte
-            # over uniformly-hashed 64-bit docids compresses nothing (avg gap
-            # ~2^59/df), over dense ordinals the gaps are ~shard_size/df — the
-            # packed table shrinks ~5x. Appends offset by the shard's committed
-            # row count (from lineage) so ordinals never collide.
-            #
-            # The map is computed ONCE on a slim (docid, shard) projection and
-            # broadcast-joined back to the payload rows (guide §8: decide with
-            # small rows, never shuffle the heavy payload). Below the broadcast
-            # bound this removes every full-payload exchange from the build —
-            # the docs and postings jobs both consume input-split partitioning
-            # straight through to their writes. Above the bound (cluster-scale
-            # corpora), and whenever a batch contains DUPLICATE docids, the
-            # old payload-window path is used unchanged: a docid-keyed join
-            # against k duplicate rows would fan out to k*k payload rows and
-            # double-count tf, while the window gives each row its own ordinal
-            # (duplicates within a batch are legitimate — last-write-wins
-            # resolves them at compact()).
-            bases = self._shard_bases(index_dir, shards)
-            ord_cap = int(c.extra.get("ordinal_broadcast_max_rows", DRIVER_MAX_ROWS))
-            ordmap = None
-            # row count first (metadata-only for unfiltered parquet scans) so
-            # the above-cap path never computes, persists, or discards the map
-            n_rows = base.count()
-            if n_rows <= ord_cap:
-                from pyspark import StorageLevel
-
-                ordmap = self._with_ordinals(base.select("docid", "shard"), bases).select(
-                    "docid", "ordinal"
-                ).persist(StorageLevel.MEMORY_AND_DISK)
-                # one agg materializes the cache AND detects duplicate docids
-                stats_row = ordmap.agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.count_distinct(F.col("docid")).alias("nd"),
-                ).collect()[0]
-                if int(stats_row["n"]) == int(stats_row["nd"]):
-                    base = base.join(F.broadcast(ordmap), "docid")
-                else:  # duplicate docids in this batch — window path
-                    ordmap.unpersist(blocking=False)
-                    ordmap = None
-                    base = self._with_ordinals(base, bases)
-            else:  # payload window path: ordinals recomputed per action
-                base = self._with_ordinals(base, bases)
-            base = base.withColumn(
-                "sha256", F.sha2(F.coalesce(F.col(c.text_fields[0]).cast("string"), F.lit("")), 256)
-            )
-            # Lineage metrics ride the write jobs via Observation (computed
-            # inside the same action — zero extra jobs, no persist of the
-            # tokenized frame: recompute beats caching 30M-token arrays, and
-            # at 100 TB caching them is not an option at all).
-            from pyspark.sql import Observation
-
-            per_shard = len(shards) <= 64  # per-shard metric exprs; totals beyond
-            groups = shards if per_shard else [-1]
-
-            def shard_pred(s):
-                return F.lit(True) if s == -1 else (F.col("shard") == s)
-
-            # ---------- docs job: row store only, ZERO tokenization ----------
-            # The docs table stores docid/ordinal/shard/sha + stored fields;
-            # norms live in the postings rows (the only place scoring reads
-            # them), so the expensive analyze pass runs exactly ONCE — in the
-            # postings job below — instead of once per output table.
-            self._mark("prelude", t0)
-            obs_docs = Observation()
-            doc_exprs = [
-                F.sum(F.when(shard_pred(s), 1).otherwise(0)).alias(f"rows__{s}") for s in groups
-            ]
-            docs_out = base.select("docid", "ordinal", "shard", "sha256", *stored).observe(
-                obs_docs, *doc_exprs
-            )
-            # flat write (no partitionBy): hive-partitioning by shard would
-            # explode into tasks×shards files. On the broadcast-ordinal path
-            # rows stay in input order (no exchange at all — the win); shard
-            # row-group stats are loose until a merge() re-clusters, which the
-            # rare compact/swap paths tolerate. On the payload-window fallback
-            # rows arrive sorted by (shard, bucket, docid) as before. Docs
-            # access paths are docid joins + shard column filters, neither
-            # needs directory pruning.
-            # the docs and postings writes are INDEPENDENT actions over the
-            # same inputs — run the docs write on a driver thread so the
-            # postings job's tasks back-fill as the docs tail drains (guide
-            # §2.6: overlap independent jobs; job descriptions/groups are
-            # thread-local so each stays labeled). The join happens right
-            # before the lineage rows, which need both Observations.
-            from pyspark import inheritable_thread_target
-
-            t_ph = time.time()
-
-            def _write_docs():
-                self.spark.sparkContext.setJobDescription("index-build: docs row store")
-                docs_out.write.mode("append").parquet(os.path.join(index_dir, "docs"))
-
-            from concurrent.futures import ThreadPoolExecutor
-
-            pool = ThreadPoolExecutor(max_workers=1)
-            docs_future = pool.submit(inheritable_thread_target(_write_docs))
-
+        with self._session_overrides(confs):
             try:
-                out, obs_len, obs_post = self._postings_plan(
-                    df, base, index_dir, shards, groups, shard_pred
+                if split_bytes is None and base.rdd.getNumPartitions() < max(parallelism // 2, 2):
+                    # non-file input (or already-fine splits): the .rdd partition
+                    # probe costs a full plan->RDD conversion, so it only runs when
+                    # split tuning could not size the scan itself
+                    base = base.repartition(parallelism * 2)
+                if len(shards) < c.n_shards:
+                    base = base.where(F.col("shard").isin(shards))
+                stored = list(c.stored_cols) if c.stored_cols else [
+                    x for x in df.columns if x not in ("docid", "shard")
+                ]
+                # dense per-shard ordinals (Lucene segment-local docids): delta+VByte
+                # over uniformly-hashed 64-bit docids compresses nothing (avg gap
+                # ~2^59/df), over dense ordinals the gaps are ~shard_size/df — the
+                # packed table shrinks ~5x. Appends offset by the shard's committed
+                # row count (from lineage) so ordinals never collide.
+                #
+                # The map is computed ONCE on a slim (docid, shard) projection and
+                # broadcast-joined back to the payload rows (guide §8: decide with
+                # small rows, never shuffle the heavy payload). Below the broadcast
+                # bound this removes every full-payload exchange from the build —
+                # the docs and postings jobs both consume input-split partitioning
+                # straight through to their writes. Above the bound (cluster-scale
+                # corpora), and whenever a batch contains DUPLICATE docids, the
+                # old payload-window path is used unchanged: a docid-keyed join
+                # against k duplicate rows would fan out to k*k payload rows and
+                # double-count tf, while the window gives each row its own ordinal
+                # (duplicates within a batch are legitimate — last-write-wins
+                # resolves them at compact()).
+                bases = self._shard_bases(index_dir, shards)
+                ord_cap = int(c.extra.get("ordinal_broadcast_max_rows", DRIVER_MAX_ROWS))
+                # row count first (metadata-only for unfiltered parquet scans) so
+                # the above-cap path never computes, persists, or discards the map
+                n_rows = base.count()
+                if n_rows <= ord_cap:
+                    from pyspark import StorageLevel
+
+                    ordmap = self._with_ordinals(base.select("docid", "shard"), bases).select(
+                        "docid", "ordinal"
+                    ).persist(StorageLevel.MEMORY_AND_DISK)
+                    # one agg materializes the cache AND detects duplicate docids
+                    stats_row = ordmap.agg(
+                        F.count(F.lit(1)).alias("n"),
+                        F.count_distinct(F.col("docid")).alias("nd"),
+                    ).collect()[0]
+                    if int(stats_row["n"]) == int(stats_row["nd"]):
+                        base = base.join(F.broadcast(ordmap), "docid")
+                    else:  # duplicate docids in this batch — window path
+                        ordmap.unpersist(blocking=False)
+                        ordmap = None
+                        base = self._with_ordinals(base, bases)
+                else:  # payload window path: ordinals recomputed per action
+                    base = self._with_ordinals(base, bases)
+                base = base.withColumn(
+                    "sha256", F.sha2(F.coalesce(F.col(c.text_fields[0]).cast("string"), F.lit("")), 256)
                 )
-                self.spark.sparkContext.setJobDescription("index-build: postings")
-                # snappy for the numeric-heavy postings rows: A/B at 8.9M rows
-                # (bench_extra r6) — write 7.8->5.5-6.2 s, scan-back 1.3->0.8 s,
-                # +12% bytes vs zstd; the text-heavy docs table stays on the
-                # session codec (zstd), where ratio matters more than encode
-                # speed. (lz4 was fastest but Spark's Hadoop-framed lz4 is
-                # unreadable by pyarrow, and lz4_raw does not round-trip
-                # through Spark's own reader without native hadoop libs.)
-                out.write.mode("append").option("compression", "snappy").parquet(
-                    os.path.join(index_dir, "postings")
+                # Lineage metrics ride the write jobs via Observation (computed
+                # inside the same action — zero extra jobs, no persist of the
+                # tokenized frame: recompute beats caching 30M-token arrays, and
+                # at 100 TB caching them is not an option at all).
+                from pyspark.sql import Observation
+
+                per_shard = len(shards) <= 64  # per-shard metric exprs; totals beyond
+                groups = shards if per_shard else [-1]
+
+                def shard_pred(s):
+                    return F.lit(True) if s == -1 else (F.col("shard") == s)
+
+                # ---------- docs job: row store only, ZERO tokenization ----------
+                # The docs table stores docid/ordinal/shard/sha + stored fields;
+                # norms live in the postings rows (the only place scoring reads
+                # them), so the expensive analyze pass runs exactly ONCE — in the
+                # postings job below — instead of once per output table.
+                self._mark("prelude", t0)
+                obs_docs = Observation()
+                doc_exprs = [
+                    F.sum(F.when(shard_pred(s), 1).otherwise(0)).alias(f"rows__{s}") for s in groups
+                ]
+                docs_out = base.select("docid", "ordinal", "shard", "sha256", *stored).observe(
+                    obs_docs, *doc_exprs
                 )
-                t_ph = self._mark("postings_write", t_ph)
-            finally:
-                # joined on EVERY exit path, so a failed build never leaves
-                # the docs write running behind the caller's back
+                # flat write (no partitionBy): hive-partitioning by shard would
+                # explode into tasks×shards files. On the broadcast-ordinal path
+                # rows stay in input order (no exchange at all — the win); shard
+                # row-group stats are loose until a merge() re-clusters, which the
+                # rare compact/swap paths tolerate. On the payload-window fallback
+                # rows arrive sorted by (shard, bucket, docid) as before. Docs
+                # access paths are docid joins + shard column filters, neither
+                # needs directory pruning.
+                # the docs and postings writes are INDEPENDENT actions over the
+                # same inputs — run the docs write on a driver thread so the
+                # postings job's tasks back-fill as the docs tail drains (guide
+                # §2.6: overlap independent jobs; job descriptions/groups are
+                # thread-local so each stays labeled). The join happens right
+                # before the lineage rows, which need both Observations.
+                from pyspark import inheritable_thread_target
+
+                t_ph = time.time()
+
+                def _write_docs():
+                    self.spark.sparkContext.setJobDescription("index-build: docs row store")
+                    docs_out.write.mode("append").parquet(os.path.join(index_dir, "docs"))
+
+                from concurrent.futures import ThreadPoolExecutor
+
+                pool = ThreadPoolExecutor(max_workers=1)
+                docs_future = pool.submit(inheritable_thread_target(_write_docs))
+
                 try:
-                    docs_future.result()  # surface docs-write failures here
+                    out, obs_len, obs_post = self._postings_plan(
+                        df, base, index_dir, shards, groups, shard_pred
+                    )
+                    self.spark.sparkContext.setJobDescription("index-build: postings")
+                    # snappy for the numeric-heavy postings rows: A/B at 8.9M rows
+                    # (bench_extra r6) — write 7.8->5.5-6.2 s, scan-back 1.3->0.8 s,
+                    # +12% bytes vs zstd; the text-heavy docs table stays on the
+                    # session codec (zstd), where ratio matters more than encode
+                    # speed. (lz4 was fastest but Spark's Hadoop-framed lz4 is
+                    # unreadable by pyarrow, and lz4_raw does not round-trip
+                    # through Spark's own reader without native hadoop libs.)
+                    out.write.mode("append").option("compression", "snappy").parquet(
+                        os.path.join(index_dir, "postings")
+                    )
+                    t_ph = self._mark("postings_write", t_ph)
                 finally:
-                    pool.shutdown()
-            t_ph = self._mark("docs_join", t_ph)
-            dvals, lvals = obs_docs.get, obs_len.get
-            if obs_post is not None:
-                pvals = obs_post.get
-            else:  # count from the files the write just made — the dir held
-                # nothing before a full build, so the dir count IS the batch
-                src = self.spark.read.parquet(os.path.join(index_dir, "postings"))
-                pc = {
-                    (int(r["shard"]), r["field"]): int(r["cnt"])
-                    for r in src.groupBy("shard", "field")
-                    .agg(F.count(F.lit(1)).alias("cnt"))
-                    .collect()
-                }
-                pvals = {
-                    f"post__{s}__{f}": sum(
-                        v for (ps, pf), v in pc.items() if pf == f and (s == -1 or ps == s)
-                    )
-                    for s in groups
-                    for f in c.text_fields
-                }
-            wall_ms = int((time.time() - t0) * 1000)
-            rows = []
-            for s in shards:
-                g = s if per_shard else -1
-                for f in c.text_fields:
-                    rows.append(
-                        {
-                            "shard": s,
-                            "field": f,
-                            "rows_in": int(dvals[f"rows__{g}"]) if per_shard else None,
-                            "docs_with_field": int(lvals[f"docs__{g}__{f}"]) if per_shard else None,
-                            "sum_dl": int(lvals[f"dl__{g}__{f}"]) if per_shard else None,
-                            "postings_out": int(pvals[f"post__{g}__{f}"]) if per_shard else None,
-                            "wall_ms": wall_ms,
-                            "status": "committed",
-                            "tokenizer": TOKENIZER_VERSION,
-                        }
-                    )
-            if not per_shard:
-                # totals-only summary row carries the field-level metrics
-                for f in c.text_fields:
-                    rows.append(
-                        {
-                            "shard": -1,
-                            "field": f,
-                            "rows_in": int(dvals["rows__-1"]),
-                            "docs_with_field": int(lvals[f"docs__-1__{f}"]),
-                            "sum_dl": int(lvals[f"dl__-1__{f}"]),
-                            "postings_out": int(pvals[f"post__-1__{f}"]),
-                            "wall_ms": wall_ms,
-                            "status": "summary",
-                            "tokenizer": TOKENIZER_VERSION,
-                        }
-                    )
-            t_ph = self._mark("postings_count", t_ph)
-            lineage = self.spark.createDataFrame(
-                pd.DataFrame(rows),
-                schema=(
-                    "shard int, field string, rows_in long, docs_with_field long, "
-                    "sum_dl long, postings_out long, wall_ms long, status string, "
-                    "tokenizer string"
-                ),
-            )
-            lineage.coalesce(1).write.mode("append").parquet(os.path.join(index_dir, "lineage"))
-            self._mark("lineage_write", t_ph)
-        finally:
-            # session-wide state must be restored even when a write
-            # throws: the shrunken split size would otherwise hit
-            # every later scan, the MEMORY_AND_DISK ordmap would pin
-            # executor storage for the application lifetime, and
-            # later jobs would stay labeled as this build's
-            self.spark.sparkContext.setJobDescription(None)
-            if ordmap is not None:
-                ordmap.unpersist(blocking=False)
-            if prev_mpb is not None:
-                self.spark.conf.set("spark.sql.files.maxPartitionBytes", prev_mpb)
-            if prev_sp is not None:
-                self.spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
+                    # joined on EVERY exit path, so a failed build never leaves
+                    # the docs write running behind the caller's back
+                    try:
+                        docs_future.result()  # surface docs-write failures here
+                    finally:
+                        pool.shutdown()
+                t_ph = self._mark("docs_join", t_ph)
+                dvals, lvals = obs_docs.get, obs_len.get
+                if obs_post is not None:
+                    pvals = obs_post.get
+                else:  # count from the files the write just made — the dir held
+                    # nothing before a full build, so the dir count IS the batch
+                    src = self.spark.read.parquet(os.path.join(index_dir, "postings"))
+                    pc = {
+                        (int(r["shard"]), r["field"]): int(r["cnt"])
+                        for r in src.groupBy("shard", "field")
+                        .agg(F.count(F.lit(1)).alias("cnt"))
+                        .collect()
+                    }
+                    pvals = {
+                        f"post__{s}__{f}": sum(
+                            v for (ps, pf), v in pc.items() if pf == f and (s == -1 or ps == s)
+                        )
+                        for s in groups
+                        for f in c.text_fields
+                    }
+                wall_ms = int((time.time() - t0) * 1000)
+                rows = []
+                for s in shards:
+                    g = s if per_shard else -1
+                    for f in c.text_fields:
+                        rows.append(
+                            {
+                                "shard": s,
+                                "field": f,
+                                "rows_in": int(dvals[f"rows__{g}"]) if per_shard else None,
+                                "docs_with_field": int(lvals[f"docs__{g}__{f}"]) if per_shard else None,
+                                "sum_dl": int(lvals[f"dl__{g}__{f}"]) if per_shard else None,
+                                "postings_out": int(pvals[f"post__{g}__{f}"]) if per_shard else None,
+                                "wall_ms": wall_ms,
+                                "status": "committed",
+                                "tokenizer": TOKENIZER_VERSION,
+                            }
+                        )
+                if not per_shard:
+                    # totals-only summary row carries the field-level metrics
+                    for f in c.text_fields:
+                        rows.append(
+                            {
+                                "shard": -1,
+                                "field": f,
+                                "rows_in": int(dvals["rows__-1"]),
+                                "docs_with_field": int(lvals[f"docs__-1__{f}"]),
+                                "sum_dl": int(lvals[f"dl__-1__{f}"]),
+                                "postings_out": int(pvals[f"post__-1__{f}"]),
+                                "wall_ms": wall_ms,
+                                "status": "summary",
+                                "tokenizer": TOKENIZER_VERSION,
+                            }
+                        )
+                t_ph = self._mark("postings_count", t_ph)
+                lineage = self.spark.createDataFrame(
+                    pd.DataFrame(rows),
+                    schema=(
+                        "shard int, field string, rows_in long, docs_with_field long, "
+                        "sum_dl long, postings_out long, wall_ms long, status string, "
+                        "tokenizer string"
+                    ),
+                )
+                lineage.coalesce(1).write.mode("append").parquet(os.path.join(index_dir, "lineage"))
+                self._mark("lineage_write", t_ph)
+            finally:
+                # the MEMORY_AND_DISK ordmap would otherwise pin executor
+                # storage for the application lifetime
+                if ordmap is not None:
+                    ordmap.unpersist(blocking=False)
 
     def _postings_plan(self, df, base, index_dir, shards, groups, shard_pred):
         """The postings job's plan (no action runs here): tokenize once,
@@ -572,8 +586,9 @@ class IndexBuilder:
         """Size input splits to the corpus so the CPU-bound tokenize stage
         gets ~3 tasks per core even when the input arrives as one big file
         (guide §2.2/§6.1: partitioning derived from input size, not a
-        constant). Returns the previous conf value to restore, or None when
-        the input is not file-based / already splits finely enough."""
+        constant). Returns the maxPartitionBytes value the build should
+        run under, or None when the input is not file-based / already
+        splits finely enough."""
         try:
             files = base.inputFiles()
             total = 0
@@ -594,8 +609,7 @@ class IndexBuilder:
             )
             if want >= prev_bytes:
                 return None  # input already splits at least this finely
-            self.spark.conf.set("spark.sql.files.maxPartitionBytes", str(int(want)))
-            return str(prev)
+            return str(int(want))
         except Exception:  # non-file sources, exotic conf — leave as-is
             return None
 
@@ -761,8 +775,8 @@ class IndexBuilder:
         pack_avgdl, pack_mode, new_files = prev_pack_avgdl, "skip", None
         t_ph = self._mark("finalize_stats", t_ph)
         if do_pack:
-            spark.sparkContext.setJobDescription("index-build: pack")
-            pack_avgdl, pack_mode, new_files = self._pack_or_repack(index_dir, fields)
+            with self._session_overrides(job="index-build: pack"):
+                pack_avgdl, pack_mode, new_files = self._pack_or_repack(index_dir, fields)
         t_ph = self._mark("pack", t_ph)
         stats = {
             "fields": fields,
@@ -779,10 +793,9 @@ class IndexBuilder:
             # packs stay sound under avgdl drift (query/wand.py)
             "pack_avgdl": pack_avgdl,
         }
-        spark.sparkContext.setJobDescription("index-build: dictionary")
-        self._refresh_dictionary(index_dir, pack_mode, new_files)
+        with self._session_overrides(job="index-build: dictionary"):
+            self._refresh_dictionary(index_dir, pack_mode, new_files)
         self._mark("dictionary", t_ph)
-        spark.sparkContext.setJobDescription(None)
         with open(os.path.join(index_dir, "stats.json"), "w") as f:
             json.dump(stats, f, indent=2)
         return stats
@@ -1107,13 +1120,14 @@ class IndexBuilder:
         # the read stage feeding the exchange needs splits too: the
         # postings files (~35 MB each) otherwise bin-pack into a handful
         # of 128 MB scan tasks and serialize the map side at high core
-        # counts — same size-derived split rule as the build's input scan
-        mpb_conf = "spark.sql.files.maxPartitionBytes"
-        prev_mpb = None
+        # counts — same size-derived split rule as the build's input scan.
+        # Bigger Arrow batches for the narrow posting rows (guide §4.2):
+        # fewer kernel invocations and fewer carry splices. Both hold for
+        # the write only, so pandas-UDF analyzers keep the session default
+        confs = {"spark.sql.execution.arrow.maxRecordsPerBatch": "65536"}
         if new_files is None and nbytes > 0:
             want = max(nbytes // max(parallelism * 3, 1), 4 * 1024 * 1024)
-            prev_mpb = self.spark.conf.get(mpb_conf)
-            self.spark.conf.set(mpb_conf, str(int(want)))
+            confs["spark.sql.files.maxPartitionBytes"] = str(int(want))
         arranged = (
             postings.withColumn(
                 "og", F.floor(F.col("ordinal") / F.lit(group_span)).cast("int")
@@ -1123,12 +1137,6 @@ class IndexBuilder:
             .sortWithinPartitions("shard", "field", "term", "og", "ordinal")
         )
         packed = arranged.mapInArrow(pack_batches, schema=PACKED_SCHEMA)
-        # bigger Arrow batches for the narrow posting rows (guide §4.2):
-        # fewer kernel invocations and fewer carry splices; restored after
-        # the write so pandas-UDF analyzers keep the session default
-        arrow_conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
-        prev_arrow = self.spark.conf.get(arrow_conf)
-        self.spark.conf.set(arrow_conf, "65536")
         # og leads the pre-write sort: the dynamic-partitioned write
         # requires rows clustered by its partition column and would insert
         # its OWN (term-order-destroying) sort otherwise — leading with og
@@ -1143,16 +1151,12 @@ class IndexBuilder:
             # overwrite ONLY the og partitions present in this write; every
             # other og dir's files are untouched on disk
             writer = writer.option("partitionOverwriteMode", "dynamic")
-        try:
+        with self._session_overrides(confs):
             # same snappy-for-numeric-tables trade as the postings write; the
             # packed table is also the WAND serving path's hot pyarrow read
             writer.option("compression", "snappy").parquet(
                 os.path.join(index_dir, "packed")
             )
-        finally:
-            self.spark.conf.set(arrow_conf, prev_arrow)
-            if prev_mpb is not None:
-                self.spark.conf.set(mpb_conf, prev_mpb)
 
     # ---------- merge / compaction ----------
 
@@ -1173,7 +1177,9 @@ class IndexBuilder:
         for tbl, keys in sorts.items():
             p = os.path.join(index_dir, tbl)
             tmp = p + ".merging"
-            df = spark.read.parquet(p)
+            # mergeSchema: the rewrite must keep every column of every
+            # batch (see IndexReader.docs)
+            df = spark.read.option("mergeSchema", "true").parquet(p)
             (
                 df.repartition(self.config.n_shards, "shard")
                 .sortWithinPartitions(*keys)
@@ -1251,7 +1257,13 @@ class IndexReader:
     @property
     def docs(self) -> DataFrame:
         if self._docs is None:
-            self._docs = self.spark.read.parquet(os.path.join(self.index_dir, "docs"))
+            # mergeSchema: a pushed batch may lack a stored column (and
+            # carries seqnum, which full-build files lack); single-footer
+            # schema inference would hide such a column for the whole
+            # index. Inference runs one Spark job either way.
+            self._docs = self.spark.read.option("mergeSchema", "true").parquet(
+                os.path.join(self.index_dir, "docs")
+            )
         return self._docs
 
     @property

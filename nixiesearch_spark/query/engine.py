@@ -2,17 +2,23 @@
 
 The Spark lifecycle equivalent of the reference's search path
 (``index/Searcher.scala:115-274``, SURVEY.md §3.1): query JSON → AST →
-DataFrame plan (broadcast query-term stats ⋈ posting scan → per-doc score
-aggregation → TakeOrderedAndProject top-k → optional broadcast doc-fetch
-join) → Catalyst optimizes → distributed execute.
+DataFrame plan (posting scan → per-doc score aggregation →
+TakeOrderedAndProject top-k → optional broadcast doc-fetch join) →
+Catalyst optimizes → distributed execute.
 
-Physical shape of a match query at scale:
-- the postings scan carries ``term IN (...)`` + ``field = ...`` predicates →
-  parquet row-group skip via min/max on the sorted ``term`` column (the
-  analog of Lucene's term-dictionary seek);
-- term weights (float32 idf) and the 256-entry norm cache join via
-  ``broadcast()`` — no shuffle;
-- per-doc score sum is one hash aggregation (map-side partial) on docid;
+Physical shape of a match query at scale — the one-"should"-branch case
+of the fused bool/dis_max plan (``Searcher._fused``), as Lucene compiles a
+match query to a BooleanQuery of its terms:
+- wand._match_plan resolves the query's terms, multiplicities and weights
+  against the dictionary, the same function the search-head and
+  distributed routes use;
+- the postings scan carries ``term IN (...)`` + ``field IN (...)``
+  predicates → parquet row-group skip via min/max on the sorted ``term``
+  column (the analog of Lucene's term-dictionary seek);
+- term weights (float32 idf), multiplicities and the 256-entry norm cache
+  fold in as literal expressions — no join, no shuffle;
+- per-doc score sums (one per branch) are one hash aggregation (map-side
+  partial) on docid;
 - top-k is ``orderBy(desc(score), asc(docid)).limit(k)`` which Catalyst
   executes as TakeOrderedAndProject (per-partition heap + driver merge —
   exactly the "heap-based top-k accumulator" shape, no global sort).
@@ -25,18 +31,15 @@ SQL-oracle cross-checks.
 
 from __future__ import annotations
 
-from collections import Counter
-
 import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nixiesearch_spark import lucene
-from nixiesearch_spark.analysis import analyzer_py
 from nixiesearch_spark.index.builder import IndexReader
 from nixiesearch_spark.query import ast
 from nixiesearch_spark.query.filters import compile_predicate
-from nixiesearch_spark.query.wand import LocalFrame, local_schema
+from nixiesearch_spark.query.wand import LocalFrame, _match_plan, local_schema
 
 K1 = 1.2
 B = 0.75
@@ -56,6 +59,15 @@ def _lut_positions(docids, mdoc):
     if not np.array_equal(docids[pos], mdoc):
         return None
     return pos
+
+
+def _bool_branches(q: ast.BoolQuery) -> list:
+    """A bool query's (role, sub-query) branches: musts, shoulds, must_nots."""
+    return (
+        [("must", m) for m in q.must]
+        + [("should", m) for m in q.should]
+        + [("must_not", m) for m in q.must_not]
+    )
 
 
 class Searcher:
@@ -303,12 +315,7 @@ class Searcher:
                 self.reader, query.retrieve, size=size, window=window, rrf_k=query.k
             )
         if isinstance(query, ast.BoolQuery):
-            branches = (
-                [("must", m) for m in query.must]
-                + [("should", m) for m in query.should]
-                + [("must_not", m) for m in query.must_not]
-            )
-            return wand.bool_topk_driver(self.reader, branches, k=size, kind="bool")
+            return wand.bool_topk_driver(self.reader, _bool_branches(query), k=size, kind="bool")
         branches = [("dismax", m) for m in query.queries]
         return wand.bool_topk_driver(
             self.reader, branches, k=size, kind="dismax", tie=query.tie_breaker
@@ -872,7 +879,7 @@ class Searcher:
 
     def _score(self, q: ast.Query) -> DataFrame:
         if isinstance(q, ast.MatchQuery):
-            return self._score_match(q.field, q.query, q.operator)
+            return self._fused([("should", q)], kind="bool")
         if isinstance(q, ast.MatchAllQuery):
             return self.reader.docs.select(
                 "docid", F.lit(1.0).cast(self._stype).alias("score")
@@ -889,15 +896,8 @@ class Searcher:
                 )
             return self._dis_max([self._score(s) for s in q.queries], q.tie_breaker)
         if isinstance(q, ast.BoolQuery):
-            flat = all(
-                isinstance(s, ast.MatchQuery) for s in [*q.must, *q.should, *q.must_not]
-            )
-            if flat and (q.must or q.should):
-                branches = (
-                    [("must", s) for s in q.must]
-                    + [("should", s) for s in q.should]
-                    + [("must_not", s) for s in q.must_not]
-                )
+            branches = _bool_branches(q)
+            if (q.must or q.should) and all(isinstance(m, ast.MatchQuery) for _, m in branches):
                 return self._fused(branches, kind="bool")
             return self._bool(q)
         raise ValueError(f"unsupported query: {q}")
@@ -905,146 +905,119 @@ class Searcher:
     def _fused(self, branches, kind: str, tie: float = 0.0) -> DataFrame:
         """Branch-fused scoring: ONE postings scan + ONE per-doc aggregation
         for a bool/dis_max whose children are all match queries — instead of
-        N score frames joined pairwise. Per-branch sums round to float32
+        N score frames joined pairwise. A match query is the one-"should"-
+        branch bool (Lucene compiles it to a BooleanQuery of its terms,
+        reference MatchQuery.scala:26-54). Per-branch sums round to float32
         before combination (quantized mode), matching Lucene's nested-scorer
         rounding, so results stay bit-identical to the unfused plan.
-        Physically: postings scan (term IN superset pushed down) ⋈ broadcast
-        (branch, field, term → weight) ⋈ broadcast norm cache → hash agg on
-        docid with per-branch conditional sums. Zero joins between branches.
-        """
+        Physically: postings scan (term IN superset pushed down) → literal
+        (field, term → weight, multiplicity) maps and the norm-cache array →
+        hash agg on docid with per-branch conditional sums. Zero joins.
+
+        Branches resolve through wand._match_plan, the same function the
+        search-head and distributed routes use. ``kind="branches"`` returns
+        (per-doc frame, live branch indexes, plans) for rrf_fuse_matches."""
         quant = self.reader.quantize
-        wrows, metas = [], []
-        for bi, (role, m) in enumerate(branches):
-            terms = analyzer_py(self.reader.field_analyzer(m.field))(m.query)
-            mult = Counter(terms)
-            tstats = self.reader.term_stats(m.field, list(mult))
-            present = [t for t in mult if t in tstats]
-            fs = self.reader.field_stats(m.field)
-            dead = (not present) or (m.operator == "and" and len(present) < len(mult))
-            metas.append(
-                {"role": role, "field": m.field, "op": m.operator, "n": len(present),
-                 "dead": dead}
-            )
-            if dead:
-                continue
-            for t in present:
-                if quant:
-                    w = tstats[t][1]
-                else:
-                    w = float(lucene.idf(tstats[t][0], fs["doc_count"]))
-                wrows.append((bi, m.field, t, float(w), int(mult[t])))
+        plans = [_match_plan(self.reader, m.field, m.query, m.operator, role)
+                 for role, m in branches]
+        live = [i for i, p in enumerate(plans) if p is not None]
         # a dead MUST kills the query; dead should/must_not branches drop out
         # (kind="branches" callers unpack a 3-tuple — keep the shape on the
-        # empty early-returns too)
-        def _empty():
+        # empty early-return too)
+        if any(p is None and role == "must" for (role, _), p in zip(branches, plans)) or not any(
+            plans[i]["role"] in ("must", "should", "dismax") for i in live
+        ):
             e = self._empty_scores()
-            return (e, [], metas) if kind == "branches" else e
-
-        if any(x["dead"] and x["role"] == "must" for x in metas):
-            return _empty()
-        live = [i for i, x in enumerate(metas) if not x["dead"]]
-        if not any(metas[i]["role"] in ("must", "should", "dismax") for i in live):
-            return _empty()
-        fields = sorted({x["field"] for i, x in enumerate(metas) if i in set(live)})
-        all_terms = sorted({r[2] for r in wrows})
+            return (e, [], plans) if kind == "branches" else e
+        fields = sorted({plans[i]["field"] for i in live})
+        all_terms = sorted({t for i in live for t in plans[i]["present"]})
         postings = self.reader.postings.where(
             F.col("field").isin(fields) & F.col("term").isin(all_terms)
         )
         # everything folds in as literal expressions — one scan, one agg,
-        # zero joins/exchanges (same trick as _score_match)
+        # zero joins/exchanges
         ft = F.concat_ws("\x1f", F.col("field"), F.col("term"))
-        if quant:
-            caches = {
-                f: self._norm_cache_arr(f) for f in fields
-            }
-            cache = None
+
+        def per_field(value):
+            out = None
             for f in fields:
-                c = F.element_at(caches[f], F.col("norm") + 1)
-                cache = c if cache is None else F.when(F.col("field") == f, c).otherwise(cache)
+                v = value(f)
+                out = v if out is None else F.when(F.col("field") == f, v).otherwise(out)
+            return out
+
+        if quant:
+            cache = per_field(lambda f: F.element_at(self._norm_cache_arr(f), F.col("norm") + 1))
         else:
-            avg = {f: float(self.reader.field_stats(f)["avgdl"]) for f in fields}
+            avgdl = per_field(lambda f: F.lit(float(self.reader.field_stats(f)["avgdl"])))
 
         def _lit_map(pairs):
             return F.create_map(*[x for kv in pairs for x in (F.lit(kv[0]), F.lit(kv[1]))])
 
         aggs = []
-        for bi in live:
-            rows_b = [r for r in wrows if r[0] == bi]
-            keys = [f"{r[1]}\x1f{r[2]}" for r in rows_b]
-            wmap = _lit_map([(k, float(r[3])) for k, r in zip(keys, rows_b)])
-            mmap = _lit_map([(k, int(r[4])) for k, r in zip(keys, rows_b)])
-            w_b = wmap[ft]
+        for i in live:
+            p = plans[i]
+            keys = [(f"{p['field']}\x1f{t}", t) for t in p["present"]]
+            w_b = _lit_map([(key, float(p["weights"][t])) for key, t in keys])[ft]
+            mult = _lit_map([(key, p["mults"][t]) for key, t in keys])[ft]
             is_b = w_b.isNotNull()
             if quant:
+                # float32 op chain identical to BM25Scorer.score:
+                # w - w / (1f + freq * cache[norm]). Spark evaluates float
+                # arithmetic in double; casting after every op restores IEEE
+                # float32 rounding (exact for *, +, - since a double op over
+                # two float32s is exact before the cast).
                 wf = w_b.cast("float")
                 prod = (F.col("tf").cast("float") * cache).cast("float")
                 denom = (F.lit(1.0).cast("float") + prod).cast("float")
                 contrib = ((wf - (wf / denom).cast("float")).cast("float")).cast("double")
             else:
+                # unquantized: the norm column holds the exact doc length
                 dl = F.col("norm").cast("double")
                 tf = F.col("tf").cast("double")
-                avgdl = None
-                for f in fields:
-                    a = F.lit(avg[f])
-                    avgdl = a if avgdl is None else F.when(F.col("field") == f, a).otherwise(avgdl)
                 contrib = w_b * tf / (tf + K1 * (1 - B + B * dl / avgdl))
-            weighted = mmap[ft].cast("double") * contrib
-            s = F.sum(F.when(is_b, weighted))
+            s = F.sum(F.when(is_b, mult.cast("double") * contrib))
             if quant:
                 s = s.cast("float")  # per-branch float32 like a nested scorer
-            aggs.append(s.alias(f"_s{bi}"))
-            aggs.append(F.count(F.when(is_b, F.lit(1))).alias(f"_n{bi}"))
+            aggs.append(s.alias(f"_s{i}"))
+            aggs.append(F.count(F.when(is_b, F.lit(1))).alias(f"_n{i}"))
         per_doc = postings.groupBy("docid").agg(*aggs)
         if kind == "branches":
-            return per_doc, live, metas
-        cond = F.lit(True)
-        score = None
+            return per_doc, live, plans
+        # a branch matches a doc when it holds the plan's required term
+        # count: every present term under AND, any one under OR
+        hit = {i: F.col(f"_n{i}") >= (plans[i]["n_required"] or 1) for i in live}
+        branch = {i: F.col(f"_s{i}").cast("double") for i in live}
+
+        def any_hit(ids):
+            out = None
+            for i in ids:
+                out = hit[i] if out is None else (out | hit[i])
+            return out
+
         if kind == "bool":
-            musts = [i for i in live if metas[i]["role"] == "must"]
-            shoulds = [i for i in live if metas[i]["role"] == "should"]
-            nots = [i for i in live if metas[i]["role"] == "must_not"]
+            musts, shoulds, nots = (
+                [i for i in live if plans[i]["role"] == role]
+                for role in ("must", "should", "must_not")
+            )
+            cond = F.lit(True)
             for i in musts:
-                need = metas[i]["n"] if metas[i]["op"] == "and" else 1
-                cond = cond & (F.col(f"_n{i}") >= need)
+                cond = cond & hit[i]
             for i in nots:
                 # a must_not sub-query excludes a doc only when the sub-query
-                # MATCHES it — for operator='and' that means ALL its terms
-                # match (need = n), not any one of them (Lucene MUST_NOT wraps
-                # the whole sub-scorer; parity with the unfused _bool path)
-                need = metas[i]["n"] if metas[i]["op"] == "and" else 1
-                cond = cond & (F.col(f"_n{i}") < need)
-            if not musts and shoulds:
-                ok = None
-                for i in shoulds:
-                    need = metas[i]["n"] if metas[i]["op"] == "and" else 1
-                    c = F.col(f"_n{i}") >= need
-                    ok = c if ok is None else (ok | c)
-                cond = cond & ok
-            parts = []
-            for i in musts:
-                parts.append(F.col(f"_s{i}").cast("double"))
-            for i in shoulds:
-                need = metas[i]["n"] if metas[i]["op"] == "and" else 1
-                parts.append(
-                    F.when(F.col(f"_n{i}") >= need, F.col(f"_s{i}").cast("double")).otherwise(0.0)
-                )
+                # MATCHES it — under AND, all its terms (Lucene MUST_NOT
+                # wraps the whole sub-scorer; parity with the unfused _bool)
+                cond = cond & ~hit[i]
+            if not musts:
+                cond = cond & any_hit(shoulds)
+            parts = [branch[i] for i in musts] + [
+                F.when(hit[i], branch[i]).otherwise(0.0) for i in shoulds
+            ]
             score = parts[0]
             for p in parts[1:]:
                 score = score + p
         else:  # dismax
-            ds = [i for i in live]
-            vals = []
-            for i in ds:
-                need = metas[i]["n"] if metas[i]["op"] == "and" else 1
-                vals.append(
-                    F.when(F.col(f"_n{i}") >= need, F.col(f"_s{i}").cast("double"))
-                )
-            ok = None
-            for i in ds:
-                need = metas[i]["n"] if metas[i]["op"] == "and" else 1
-                c = F.col(f"_n{i}") >= need
-                ok = c if ok is None else (ok | c)
-            cond = cond & ok
+            cond = any_hit(live)
+            vals = [F.when(hit[i], branch[i]) for i in live]
             filled_max = [F.coalesce(v, F.lit(float("-inf"))) for v in vals]
             mx = F.greatest(*filled_max) if len(vals) > 1 else filled_max[0]
             total = None
@@ -1071,63 +1044,6 @@ class Searcher:
                 "array<float>"
             )
         return self._cache_df[key]
-
-    def _score_match(self, field: str, text: str, operator: str = "or") -> DataFrame:
-        # analyze the query with the FIELD's analyzer — the same invariant
-        # the reference keeps (Indexer.scala:207 == MatchQuery.scala:43-49)
-        terms = analyzer_py(self.reader.field_analyzer(field))(text)
-        if not terms:
-            return self._empty_scores()
-        mult = Counter(terms)
-        tstats = self.reader.term_stats(field, list(mult))
-        present = [t for t in mult if t in tstats]
-        if not present or (operator == "and" and len(present) < len(mult)):
-            return self._empty_scores()
-        fs = self.reader.field_stats(field)
-        postings = self.reader.postings.where(
-            (F.col("field") == field) & F.col("term").isin(present)
-        )
-        # term weights and multiplicities fold in as literal map lookups —
-        # no broadcast exchanges, no per-query createDataFrame: the whole
-        # match query is ONE scan + ONE aggregation.
-        def _lit_map(pairs):
-            return F.create_map(*[x for kv in pairs for x in (F.lit(kv[0]), F.lit(kv[1]))])
-
-        mult_col = (
-            _lit_map([(t, int(mult[t])) for t in present])[F.col("term")]
-            if any(mult[t] > 1 for t in present)
-            else F.lit(1)
-        )
-        if self.reader.quantize:
-            wcol = _lit_map([(t, float(tstats[t][1])) for t in present])[F.col("term")].cast(
-                "float"
-            )
-            cache = F.element_at(self._norm_cache_arr(field), F.col("norm") + 1)
-            # float32 op chain identical to BM25Scorer.score:
-            # w - w / (1f + freq * cache[norm]).
-            # Spark evaluates float arithmetic in double; casting after every
-            # op restores IEEE float32 rounding (exact for *, +, - since a
-            # double op over two float32s is exact before the cast).
-            prod = (F.col("tf").cast("float") * cache).cast("float")
-            denom = (F.lit(1.0).cast("float") + prod).cast("float")
-            frac = (wcol / denom).cast("float")
-            contrib = (wcol - frac).cast("float")
-            score = F.sum(mult_col.cast("double") * contrib.cast("double")).cast("float")
-        else:
-            wcol = _lit_map(
-                [(t, float(lucene.idf(tstats[t][0], fs["doc_count"]))) for t in present]
-            )[F.col("term")]
-            # unquantized: norm column holds the exact doc length
-            dl = F.col("norm").cast("double")
-            tf = F.col("tf").cast("double")
-            contrib = wcol * tf / (tf + K1 * (1 - B + B * dl / fs["avgdl"]))
-            score = F.sum(mult_col * contrib)  # keep double
-        agg = postings.groupBy("docid").agg(
-            score.alias("score"), F.count(F.lit(1)).alias("_nt")
-        )
-        if operator == "and":
-            agg = agg.where(F.col("_nt") == len(present))
-        return agg.select("docid", "score")
 
     def _bool(self, q: ast.BoolQuery) -> DataFrame:
         """Lucene BooleanQuery semantics: doc matches all musts and (if no

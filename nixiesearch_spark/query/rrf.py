@@ -71,19 +71,17 @@ def rrf_fuse_matches(searcher, matches, size: int = 10, window: int = 100,
     round-trip to materialize the k fused rows first, breaking plan
     composability (a downstream facet would re-plan from a literal frame).
     """
-    per_doc, live, metas = searcher._fused(
+    per_doc, live, plans = searcher._fused(
         [("dismax", m) for m in matches], kind="branches"
     )
     if not live:
         return searcher.spark.createDataFrame([], "docid long, score double")
     per_doc = searcher._track_persisted(per_doc)
-    tops = []
-    for i in live:
-        need = metas[i]["n"] if metas[i]["op"] == "and" else 1
-        tops.append(
-            per_doc.where(F.col(f"_n{i}") >= need)
-            .select("docid", F.col(f"_s{i}").cast("double").alias("score"))
-            .orderBy(F.desc("score"), F.asc("docid"))
-            .limit(window)
-        )
+    tops = [
+        per_doc.where(F.col(f"_n{i}") >= (plans[i]["n_required"] or 1))
+        .select("docid", F.col(f"_s{i}").cast("double").alias("score"))
+        .orderBy(F.desc("score"), F.asc("docid"))
+        .limit(window)
+        for i in live
+    ]
     return _fuse_ranked(tops, size, k)

@@ -507,8 +507,7 @@ def _wand_topk_driver(reader: IndexReader, plan: dict, k: int, n_stripes: int) -
     non-local storage), ONE kernel call scores every shard in-process, and
     the ordinal→docid resolve hits the driver LUT. Same kernel, same tie
     semantics → bit-identical to the distributed plan."""
-    blocks = reader.fetch_packed(plan["field"], plan["present"])
-    keys, scores = _shard_topk(blocks, [plan], k, n_stripes)
+    keys, scores = _shard_topk(_fetch_blocks(reader, [plan]), [plan], k, n_stripes)
     return _topk_frame(reader, keys, scores, k)
 
 
@@ -528,8 +527,7 @@ def match_scores_driver(
     plan = _match_plan(reader, field, text, operator)
     if plan is None:
         return empty
-    blocks = reader.fetch_packed(field, plan["present"])
-    keys, scores = _shard_topk(blocks, [plan], 1 << 60, 1)
+    keys, scores = _shard_topk(_fetch_blocks(reader, [plan]), [plan], 1 << 60, 1)
     if not len(keys):
         return empty
     docids = reader.ordinal_lookup(keys)
@@ -542,23 +540,31 @@ def _match_plan(
     reader: IndexReader, field: str, text: str, operator: str = "or", role: str = "should"
 ):
     """Resolve a match query's terms/weights/bounds against the dictionary
-    (driver-side, zero jobs on a local index) into a kernel branch of
-    ``role``. None = provably-empty query (no known terms, or an AND with a
-    missing term)."""
+    (driver-side, zero jobs on a local index) into a branch of ``role`` —
+    the one resolution of a match query for the kernel routes and the flat
+    plan (engine.Searcher._fused). None = provably-empty query (no known
+    terms, or an AND with a missing term)."""
     terms = analyzer_py(reader.field_analyzer(field))(text)
     mult = Counter(terms)
     tstats = reader.term_stats(field, list(mult))
     present = [t for t in mult if t in tstats]
     if not present or (operator == "and" and len(present) < len(mult)):
         return None
-    avgdl_now = float(reader.field_stats(field)["avgdl"])
+    fs = reader.field_stats(field)
+    avgdl_now = float(fs["avgdl"])
     pack_avgdl = (reader.stats.get("pack_avgdl") or {}).get(field)
     return {
         "role": role,
         "field": field,
         "present": present,
         "dfs": {t: int(tstats[t][0]) for t in present},
-        "weights": {t: tstats[t][1] for t in present},
+        # the float32 Lucene weight on a quantized index; the float64 idf
+        # of the flat plan's double-precision chain otherwise
+        "weights": {
+            t: tstats[t][1] if reader.quantize
+            else float(lucene.idf(tstats[t][0], fs["doc_count"]))
+            for t in present
+        },
         "mults": {t: int(mult[t]) for t in present},
         "n_required": len(present) if operator == "and" else 0,
         # see wand_topk: exact scoring uses avgdl_now; stored block bounds
@@ -566,6 +572,25 @@ def _match_plan(
         "cache": lucene.norm_cache(np.float32(avgdl_now)),
         "bound_scale": max(1.0, avgdl_now / float(pack_avgdl)) if pack_avgdl else 1.0,
     }
+
+
+def _fetch_blocks(reader: IndexReader, plans: list) -> pa.Table:
+    """The packed blocks of every plan's present terms: one
+    IndexReader.fetch_packed per field, fields in first-seen order. Blocks
+    of several fields carry a "field" column, which the kernel then keys
+    its slots by."""
+    by_field: dict[str, set] = {}
+    for p in plans:
+        by_field.setdefault(p["field"], set()).update(p["present"])
+    tables = [reader.fetch_packed(f, sorted(ts)) for f, ts in by_field.items()]
+    if len(tables) == 1:
+        return tables[0]
+    tables = [
+        t.append_column("field", pa.array([f] * len(t), pa.string()))
+        for f, t in zip(by_field, tables)
+    ]
+    # promote: an empty Spark-fallback fetch carries null-typed columns
+    return pa.concat_tables(tables, promote_options="default")
 
 
 def _est_blocks(reader: IndexReader, plans: list) -> int:
@@ -610,14 +635,8 @@ def rrf_topk_driver(
     empty = LocalFrame.empty(reader.spark, RRF_SCHEMA)
     if not live:
         return empty
-    by_field: dict[str, set] = {}
-    for p in live:
-        by_field.setdefault(p["field"], set()).update(p["present"])
-    fetched = {f: reader.fetch_packed(f, sorted(ts)) for f, ts in by_field.items()}
-    cands = [
-        _shard_topk(fetched[p["field"]], [p], window, n_stripes)
-        for p in live
-    ]
+    blocks = _fetch_blocks(reader, live)
+    cands = [_shard_topk(blocks, [p], window, n_stripes) for p in live]
     cands = [c for c in cands if len(c[0])]
     if not cands:
         return empty
@@ -669,15 +688,7 @@ def bool_topk_driver(
         return empty
     if _est_blocks(reader, live) > driver_max_blocks:
         return None
-    by_field: dict[str, set] = {}
-    for p in live:
-        by_field.setdefault(p["field"], set()).update(p["present"])
-    tables = []
-    for f, ts in by_field.items():
-        t = reader.fetch_packed(f, sorted(ts))  # projects the field away
-        tables.append(t.append_column("field", pa.array([f] * len(t), pa.string())))
-    # promote: an empty Spark-fallback fetch carries null-typed columns
-    blocks = pa.concat_tables(tables, promote_options="default")
+    blocks = _fetch_blocks(reader, live)
     keys, scores = _shard_topk(blocks, live, k, n_stripes, kind, float(tie))
     return _topk_frame(reader, keys, scores, k)
 

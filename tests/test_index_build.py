@@ -118,8 +118,7 @@ def test_failed_postings_plan_joins_docs_write_and_restores_conf(spark, tmp_path
 
     def tune(self, base, parallelism):  # what a large file input does
         self._last_input_bytes = 2 * int(before[1]) * 16 * 1024 * 1024
-        spark.conf.set(mpb, str(4 * 1024 * 1024))
-        return before[0]
+        return str(4 * 1024 * 1024)
 
     def boom(self, *a, **kw):
         raise RuntimeError("injected postings-plan failure")
@@ -134,3 +133,67 @@ def test_failed_postings_plan_joins_docs_write_and_restores_conf(spark, tmp_path
     assert pools[0].futures and all(f.done() for f in pools[0].futures)
     assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
     assert (spark.conf.get(mpb), spark.conf.get(sp)) == before
+
+
+def test_failed_pack_restores_conf_and_job_description(spark, tmp_path, monkeypatch):
+    """Fault injection: when the pack plan raises, finalize must restore
+    the split size and Arrow batch size _pack overrides and the job
+    description the caller had before."""
+    d = str(tmp_path / "idx")
+    b = IndexBuilder(spark, IndexConfig(text_fields=("content",), n_shards=2))
+    b.build(spark.createDataFrame(make_corpus(40, seed=6)), d)
+    os.remove(os.path.join(d, "packed_manifest.json"))  # force a full re-pack
+
+    def boom(self, *a, **kw):
+        raise RuntimeError("injected pack failure")
+
+    monkeypatch.setattr(type(spark.range(1)), "mapInArrow", boom)
+    confs = ("spark.sql.files.maxPartitionBytes",
+             "spark.sql.execution.arrow.maxRecordsPerBatch")
+    before = [spark.conf.get(k) for k in confs]
+    sc = spark.sparkContext
+    sc.setJobDescription("caller job")
+    try:
+        with pytest.raises(RuntimeError, match="injected"):
+            b.finalize(d)
+        assert [spark.conf.get(k) for k in confs] == before
+        assert sc.getLocalProperty("spark.job.description") == "caller job"
+    finally:
+        sc.setJobDescription(None)
+
+
+def test_pushed_batch_missing_a_stored_column_keeps_it_visible(spark, tmp_path, tiny_corpus_pd):
+    """The base build stores ``lang``; a pushed batch lacks it and adds
+    ``tag``. Every stored column stays visible whichever docs file schema
+    inference reads first, so facets on both answer under both routes."""
+    import pandas as pd
+
+    from nixiesearch_spark.streaming import IncrementalIndexer
+
+    d = str(tmp_path / "idx")
+    cfg = IndexConfig(text_fields=("content",), n_shards=4)
+    IndexBuilder(spark, cfg).build(spark.createDataFrame(tiny_corpus_pd), d)
+    extra = pd.DataFrame(
+        {
+            "repo": ["pushed"] * 6,
+            "path": [f"p{i}" for i in range(6)],
+            "commit": ["c"] * 6,
+            "content": ["def import return"] * 6,
+            "tag": ["a", "a", "a", "a", "b", "b"],
+        }
+    )
+    inc = IncrementalIndexer(spark, cfg, d)
+    inc.process_batch(spark.createDataFrame(extra), batch_id=1)
+    q = MatchQuery("content", "def")
+    langs = []
+    for step in ("pushed", "merged"):  # merge() rewrites the docs table
+        s = Searcher(IndexReader(spark, d))
+        for mode in ("auto", "flat"):
+            tags = {r["term"]: r["count"] for r in s.facet_term(q, "tag", mode=mode).collect()}
+            assert tags == {"a": 4, "b": 2}, (step, mode)
+            langs.append(
+                [(r["term"], r["count"]) for r in s.facet_term(q, "lang", mode=mode).collect()]
+            )
+        if step == "pushed":
+            inc.builder.merge(d)
+    assert langs[0] and all(x == langs[0] for x in langs)

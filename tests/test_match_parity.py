@@ -47,13 +47,22 @@ QUERIES = [
 ]
 
 
-@pytest.mark.parametrize("text,op", QUERIES)
-def test_match_rank_and_score_identical(built, text, op):
+# "auto" serves a match from the packed index on the search head; "flat"
+# forces the Catalyst plan — both must equal the oracle
+MODES = ("auto", "flat")
+
+
+@pytest.mark.parametrize(
+    "text,op,mode",
+    [pytest.param(t, o, "auto", id=f"{t}-{o}") for t, o in QUERIES]
+    + [pytest.param(t, o, "flat", id=f"{t}-{o}-flat") for t, o in QUERIES],
+)
+def test_match_rank_and_score_identical(built, text, op, mode):
     reader, oracle, _ = built
     searcher = Searcher(reader)
     for k in (1, 10, 100):
         expected = score_match(oracle, text.split(), op, k)
-        got = searcher.search(MatchQuery("content", text, op), size=k).collect()
+        got = searcher.search(MatchQuery("content", text, op), size=k, mode=mode).collect()
         got_pairs = [(r["docid"], r["score"]) for r in got]
         assert [g[0] for g in got_pairs] == [e[0] for e in expected], (
             f"rank mismatch for {text!r} op={op} k={k}"
@@ -130,13 +139,14 @@ def test_fused_bool_dismax_equal_unfused(built):
         if isinstance(q, A.BoolQuery):
             generic = s._bool(q)
         else:
-            generic = s._dis_max([s._score_match(m.field, m.query, m.operator) for m in q.queries], q.tie_breaker)
+            generic = s._dis_max([s._score(m) for m in q.queries], q.tie_breaker)
         a = sorted((r["docid"], np.float32(r["score"])) for r in fused.collect())
         b = sorted((r["docid"], np.float32(r["score"])) for r in generic.collect())
         assert a == b, f"fused != generic for {q}"
 
 
-def test_random_query_fuzz_vs_oracle(built):
+@pytest.mark.parametrize("mode", MODES)
+def test_random_query_fuzz_vs_oracle(built, mode):
     """Property-style sweep: random OR/AND bags of mixed-DF terms must be
     rank- and float32-score-identical to the oracle (beyond the fixed
     query list)."""
@@ -155,7 +165,7 @@ def test_random_query_fuzz_vs_oracle(built):
         k = rng.choice([3, 10, 25])
         text = " ".join(terms)
         expected = score_match(oracle, terms, op, k)
-        got = searcher.search(MatchQuery("content", text, op), size=k).collect()
+        got = searcher.search(MatchQuery("content", text, op), size=k, mode=mode).collect()
         assert [r["docid"] for r in got] == [e[0] for e in expected], (text, op, k)
         for r, e in zip(got, expected):
             assert np.float32(r["score"]) == np.float32(e[1]), (text, op, k)

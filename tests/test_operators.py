@@ -16,6 +16,7 @@ from nixiesearch_spark.query import (
     MatchAllQuery,
     MatchQuery,
     MultiMatchQuery,
+    RRFQuery,
     Searcher,
     parse_query,
 )
@@ -404,3 +405,24 @@ def test_rrf_fused_equals_generic(s):
     ga = [(r["docid"], round(r["score"], 12)) for r in generic]
     fa = [(r["docid"], round(r["score"], 12)) for r in fused]
     assert ga == fa
+
+
+def test_cross_field_head_equals_flat(s):
+    """bool, dis_max and rrf over branches on two fields: the search-head
+    drivers (one packed fetch per field) answer exactly like the flat plan."""
+    from nixiesearch_spark.query.wand import LocalFrame
+
+    t, d = MatchQuery("title", "red dress"), MatchQuery("desc", "red pajama jeans")
+    queries = [
+        BoolQuery(must=[t], should=[d]),
+        BoolQuery(should=[t, MatchQuery("desc", "dress", "and")]),
+        DisMaxQuery(queries=[t, d], tie_breaker=0.3),
+        RRFQuery(retrieve=[t, d], k=60.0),
+    ]
+    for q in queries:
+        head = s.search(q, size=10)
+        assert isinstance(head, LocalFrame), q
+        flat = s.search(q, size=10, mode="flat")
+        a = [(r["docid"], np.float32(r["score"])) for r in head.collect()]
+        b = [(r["docid"], np.float32(r["score"])) for r in flat.collect()]
+        assert a == b and a, q
