@@ -73,6 +73,7 @@ from pyspark.sql.types import (
 from nixiesearch_spark import lucene
 from nixiesearch_spark.analysis import analyzer_col
 from nixiesearch_spark.index import codec
+from nixiesearch_spark.index.segment import PACKED_FETCH_SCHEMA, HeadSegment
 
 # Python workers must run the pack/WAND closures even when this package is
 # not on the executors' import path (e.g. a host-created SparkSession with a
@@ -90,14 +91,9 @@ except Exception:  # pragma: no cover - best effort on older pyspark
 
 TOKENIZER_VERSION = "ascii-standard-v1"
 # Largest row count the driver holds for one table: the broadcast ordinal
-# map at build time, the field LUT, and the search head's ordinal resolve.
-# Above it those steps take their cluster-side plans.
+# map at build time, the field LUT, and the distributed WAND plan's
+# ordinal resolve. Above it those steps take their cluster-side plans.
 DRIVER_MAX_ROWS = 5_000_000
-# Largest corpus whose (shard, ordinal) → docid map the search head pulls
-# into memory (two sorted int64 arrays, ~16 B per doc): IndexReader.ordinal_lookup
-DRIVER_MAX_ORDINAL_ROWS = 50_000_000
-# (shard << KEY_SHIFT) | ordinal: one int64 key per document across shards
-KEY_SHIFT = 40
 
 
 @dataclass
@@ -1203,6 +1199,8 @@ class IndexReader:
         self._docs = None
         self._packed = None
         self._dictionary = None
+        self._tombstones = None  # (tombstone_token(), DataFrame)
+        self.head_segment = HeadSegment(self)
 
     @property
     def quantize(self) -> bool:
@@ -1272,14 +1270,30 @@ class IndexReader:
             self._packed = self.spark.read.parquet(os.path.join(self.index_dir, "packed"))
         return self._packed
 
+    def tombstone_token(self) -> tuple | None:
+        """The tombstone dir's (mtime, sorted file listing), or None when it
+        has none: every delete appends a file, so the token moves with each
+        delete while the seqnum stays."""
+        path = os.path.join(self.index_dir, "tombstones")
+        try:
+            # mtime alone is too coarse on 1s-granularity filesystems (two
+            # deletes in one tick would collide) — fold in the file listing
+            return (os.path.getmtime(path), tuple(sorted(os.listdir(path))))
+        except OSError:
+            return None
+
     @property
     def tombstones(self):
         """Deleted docids awaiting compaction (DELETE /doc/{id} analog,
-        reference ``api/IndexModifyRoute.scala:21-35``); None if none."""
-        path = os.path.join(self.index_dir, "tombstones")
-        if not os.path.isdir(path):
+        reference ``api/IndexModifyRoute.scala:21-35``); None if none.
+        Read once per tombstone_token."""
+        token = self.tombstone_token()
+        if token is None:
             return None
-        return self.spark.read.parquet(path)
+        if self._tombstones is None or self._tombstones[0] != token:
+            path = os.path.join(self.index_dir, "tombstones")
+            self._tombstones = (token, self.spark.read.parquet(path))
+        return self._tombstones[1]
 
     @property
     def dictionary(self) -> DataFrame:
@@ -1296,21 +1310,22 @@ class IndexReader:
             self._ordmap = self.docs.select("shard", "ordinal", "docid")
         return self._ordmap
 
-    # ---------- search-head local reads (zero Spark jobs) ----------
+    # ---------- search-head reads (zero Spark jobs) ----------
     #
     # The serving floor on a warm index is Catalyst plan compile, not
-    # execution (BENCH.md r3: ~85% of a fresh query). Point lookups into the
-    # packed/dictionary tables don't need a distributed plan at all — the
-    # search head reads the parquet files directly with pyarrow, exactly the
-    # way the reference's searcher reads its own Lucene segment files
-    # (index/Searcher.scala:115-274 operates on an open IndexReader, not a
-    # cluster job). Dictionary files are sorted by term, so parquet
-    # row-group min/max stats prune the term_stats read; every packed file
-    # is ONE row group holding all its terms, so fetch_packed's read prunes
-    # nothing and filters the whole packed table. Falls back to the Spark
-    # path automatically when the index is not on a local filesystem (a real
-    # deployment can mount object storage or keep head-local replicas — the
-    # same deal Lucene makes with its directory abstraction).
+    # execution (BENCH.md r3: ~85% of a fresh query), so the search head
+    # reads the index itself, the way the reference's searcher works on an
+    # open IndexReader over its own segment files
+    # (index/Searcher.scala:115-274), never through a cluster job.
+    # _local_dataset opens a table for pyarrow. The head's three reads —
+    # fetch_packed, term_stats, ordinal_lookup — do not scan it per
+    # request: they cut their rows by searchsorted out of the reader's
+    # head_segment (index/segment.py), which reads the packed, dictionary
+    # and ordinal columns once. Where pyarrow cannot open the storage
+    # (_local_dataset returns None) the segment loads once through Spark
+    # instead — a real deployment can mount object storage or keep
+    # head-local replicas, the same deal Lucene makes with its directory
+    # abstraction. field_lut reads its stored column the same way.
 
     def _local_dataset(self, table: str):
         if not hasattr(self, "_pa_ds"):
@@ -1328,53 +1343,24 @@ class IndexReader:
             self._pa_ds[table] = ds
         return self._pa_ds[table]
 
-    PACKED_FETCH_COLS = (
-        "shard", "term", "block_id", "block_last",
-        "doc_gaps", "tfs", "norms", "max_impact",
-    )
+    PACKED_FETCH_COLS = tuple(PACKED_FETCH_SCHEMA.names)
 
     def fetch_packed(self, field: str, terms: list[str]):
-        """The query's matched packed blocks as a pyarrow Table — pyarrow
-        local read (no Spark job) when possible, else one Spark toPandas."""
-        import pyarrow as pa
+        """The packed blocks of ``terms`` in ``field`` as a pyarrow Table
+        with the PACKED_FETCH_COLS columns: terms in sorted order, each
+        term's rows in the order a scan of the packed files gives them.
+        Absent terms and fields cut nothing."""
+        blocks, idx = self.head_segment.packed
+        return blocks.take(idx.rows(idx.find(field, terms)))
 
-        ds = self._local_dataset("packed")
-        if ds is not None:
-            import pyarrow.dataset as pads
-
-            flt = (pads.field("field") == field) & pads.field("term").isin(list(terms))
-            return ds.to_table(columns=list(self.PACKED_FETCH_COLS), filter=flt)
-        pdf = (
-            self.packed.where((F.col("field") == field) & F.col("term").isin(list(terms)))
-            .select(*self.PACKED_FETCH_COLS)
-            .toPandas()
-        )
-        return pa.Table.from_pandas(pdf, preserve_index=False)
-
-    def ordinal_lookup(self, keys: np.ndarray) -> np.ndarray | None:
+    def ordinal_lookup(self, keys: np.ndarray) -> np.ndarray:
         """Resolve segmented keys ``(shard << KEY_SHIFT) | ordinal`` → docid
-        driver-side, zero Spark jobs after a one-time pull (search-head WAND
-        path, query/wand.py). Returns docids aligned with ``keys``.
-
-        The map is two sorted numpy arrays (composite key, docid) — ~16 B
-        per doc, lazily built once per reader. Above DRIVER_MAX_ORDINAL_ROWS
-        (50M) docs the pull is refused (returns None) and the caller falls back to the pushed
-        point-lookup SQL path; on a real deployment that threshold is the
-        search head's memory budget, the same trade Lucene makes keeping
-        its docid maps segment-local."""
-        if getattr(self, "_ordlut", None) is None:
-            if self.doc_count > DRIVER_MAX_ORDINAL_ROWS:
-                self._ordlut = False
-            else:
-                pdf = self.ordinal_map.toPandas()
-                lut_keys = (
-                    pdf["shard"].to_numpy(np.int64) << np.int64(KEY_SHIFT)
-                ) | pdf["ordinal"].to_numpy(np.int64)
-                order = np.argsort(lut_keys)
-                self._ordlut = (lut_keys[order], pdf["docid"].to_numpy(np.int64)[order])
-        if self._ordlut is False:
-            return None
-        lut_keys, docids = self._ordlut
+        on the search head, aligned with ``keys``: a searchsorted into the
+        head segment's sorted ordinal map (two int64 arrays, ~16 B per
+        doc, read with pyarrow from the docs table's shard, ordinal and
+        docid columns on first use). A key missing from the map
+        (packed/docs drift) raises KeyError."""
+        lut_keys, docids = self.head_segment.ordinals
         keys = np.asarray(keys, dtype=np.int64)
         if not len(keys):
             return np.empty(0, dtype=np.int64)
@@ -1390,9 +1376,7 @@ class IndexReader:
         (docids int64 ndarray, values pandas Series aligned) or None when
         the docs dir isn't locally readable or the corpus exceeds
         DRIVER_MAX_ROWS docs (the search-head memory trade — callers fall
-        back to the cluster plan, same deal as ordinal_lookup's
-        DRIVER_MAX_ORDINAL_ROWS bound; the value column is wider than an
-        8-byte docid, hence the smaller cap)."""
+        back to the cluster plan)."""
         if getattr(self, "_flut", None) is None:
             self._flut = {}
         if field not in self._flut:
@@ -1422,42 +1406,29 @@ class IndexReader:
         return self
 
     def term_stats(self, field: str, terms: list[str]) -> dict[str, tuple[int, float]]:
-        """{term: (df, float32 weight)} for query terms — tiny driver lookup,
-        the analog of Lucene's TermStates resolution. Memoized per reader
-        (absent terms memoize as None so repeats skip the scan too)."""
+        """{term: (df, float32 weight)} for the query terms the dictionary
+        holds — the analog of Lucene's TermStates resolution. Cut out of the
+        head segment's resident (field, term, df) columns while the segment
+        fits HEAD_SEGMENT_MAX_BYTES; above it, a filtered read of just these
+        terms (pyarrow, pruned by the term-sorted files' row-group stats;
+        else one Spark collect), so no route holds the whole dictionary."""
         if not terms:
             return {}
-        if not hasattr(self, "_term_memo"):
-            self._term_memo = {}
-        need = [t for t in set(terms) if (field, t) not in self._term_memo]
-        if need:
-            ds = self._local_dataset("dictionary")
-            if ds is not None:
-                # search-head read: row-group stats on the term-sorted files
-                # prune to a few pages; zero Spark jobs, zero plan compiles
-                import pyarrow.dataset as pads
+        if self.head_segment.fits():
+            idx, dfs = self.head_segment.dictionary
+            pairs = [(idx.terms[k], dfs[k]) for k in idx.find(field, terms)]
+        elif (ds := self._local_dataset("dictionary")) is not None:
+            import pyarrow.dataset as pads
 
-                pdf = ds.to_table(
-                    columns=["term", "df"],
-                    filter=(pads.field("field") == field)
-                    & pads.field("term").isin(need),
-                ).to_pandas()
-                pairs = list(zip(pdf["term"], pdf["df"]))
-            else:
-                pairs = [
-                    (r["term"], r["df"])
-                    for r in self.dictionary.where(
-                        (F.col("field") == field) & F.col("term").isin(need)
-                    ).collect()
-                ]
-            dc = self.field_stats(field)["doc_count"]
-            found = {
-                t: (int(df), float(lucene.term_weight(df, dc))) for t, df in pairs
-            }
-            for t in need:
-                self._term_memo[(field, t)] = found.get(t)
-        return {
-            t: self._term_memo[(field, t)]
-            for t in set(terms)
-            if self._term_memo.get((field, t)) is not None
-        }
+            tbl = ds.to_table(
+                columns=["term", "df"],
+                filter=(pads.field("field") == field) & pads.field("term").isin(list(set(terms))),
+            )
+            pairs = zip(tbl.column("term").to_pylist(), tbl.column("df").to_pylist())
+        else:
+            rows = self.dictionary.where(
+                (F.col("field") == field) & F.col("term").isin(list(set(terms)))
+            ).collect()
+            pairs = [(r["term"], r["df"]) for r in rows]
+        dc = self.field_stats(field)["doc_count"]
+        return {t: (int(df), float(lucene.term_weight(int(df), dc))) for t, df in pairs}

@@ -29,8 +29,9 @@ def _line(name: str, value, labels: dict | None = None) -> str:
 
 def export_prometheus(reader, searcher=None, labels: dict | None = None) -> str:
     """Render index (and optional searcher) metrics in Prometheus text
-    exposition format. Only driver-held state is read — stats.json and the
-    filesystem — so the export itself costs zero Spark jobs. ``labels``
+    exposition format. Only driver-held state is read — stats.json, the
+    filesystem and the reader's head segment counters — so the export
+    itself costs zero Spark jobs. ``labels``
     (e.g. ``{"index": name}``) is merged into EVERY sample — required when
     one scrape concatenates several indexes, or the repeated metric names
     would be duplicate samples Prometheus rejects."""
@@ -70,6 +71,20 @@ def export_prometheus(reader, searcher=None, labels: dict | None = None) -> str:
         out.append("# HELP nixiesearch_index_size_bytes index size on disk")
         out.append("# TYPE nixiesearch_index_size_bytes gauge")
         out.append(_l("nixiesearch_index_size_bytes", reader.size_on_disk()))
+
+    seg = reader.head_segment
+    out.append(
+        "# HELP nixiesearch_head_segment_bytes bytes the search head's resident "
+        "segment holds (0 until a head request loads it)"
+    )
+    out.append("# TYPE nixiesearch_head_segment_bytes gauge")
+    out.append(_l("nixiesearch_head_segment_bytes", seg.nbytes))
+    out.append(
+        "# HELP nixiesearch_head_segment_load_seconds time spent loading the "
+        "resident segment's parts"
+    )
+    out.append("# TYPE nixiesearch_head_segment_load_seconds gauge")
+    out.append(_l("nixiesearch_head_segment_load_seconds", round(seg.load_s, 6)))
 
     if searcher is not None:
         c = getattr(searcher, "counters", {})

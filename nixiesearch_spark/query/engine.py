@@ -139,25 +139,17 @@ class Searcher:
     PLAN_CACHE_MAX = 256
 
     def _index_version(self) -> tuple | None:
-        """Cache-invalidation token: stats seqnum + tombstone-dir mtime (a
-        delete between queries must evict every cached plan). On a
-        NON-local index dir the mtime probe can't see mutations at all —
-        return None and the callers skip plan caching entirely (correctness
-        over speed; local file: deployments, including spark-submit ones,
-        keep the cache)."""
+        """Cache-invalidation token: stats seqnum + the reader's
+        tombstone_token (a delete between queries must evict every cached
+        plan). On a NON-local index dir the token can't see mutations at
+        all — return None and the callers skip plan caching entirely
+        (correctness over speed; local file: deployments, including
+        spark-submit ones, keep the cache)."""
         import os as _os
 
         if not _os.path.isdir(self.reader.index_dir):
             return None  # object-store / remote index — mtime can't be probed
-        tpath = _os.path.join(self.reader.index_dir, "tombstones")
-        try:
-            # mtime alone is too coarse on 1s-granularity filesystems (two
-            # deletes in one tick would collide) — fold in the file listing
-            names = sorted(_os.listdir(tpath))
-            tver = (_os.path.getmtime(tpath), tuple(names))
-        except OSError:
-            tver = None  # local dir, no tombstones yet
-        return (self.reader.stats.get("seqnum"), tver)
+        return (self.reader.stats.get("seqnum"), self.reader.tombstone_token())
 
     def _plan_key(self, *parts) -> tuple | None:
         """None = caching unavailable (non-probeable index dir)."""
@@ -252,11 +244,12 @@ class Searcher:
         - "flat": the Catalyst plan.
 
         Checks, in order: mode, a fresh packed index, a score-ordered match
-        search, filters, the query shape, tombstones (last: reading them is
-        a Spark read when they exist). The mapping checks have already run.
-        A head driver may still decline on the data by returning None (the
-        ordinal and field LUT doc-count bounds, DRIVER_MAX_BLOCKS,
-        docs/packed drift); the caller then serves the flat plan."""
+        search, filters, the query shape, the head segment's size bound
+        (HEAD_SEGMENT_MAX_BYTES, estimated from parquet footers; wand_topk
+        checks it for a match), tombstones. The mapping checks have already
+        run. A head driver may still decline on the data by returning None
+        (the field LUT doc-count bound, DRIVER_MAX_BLOCKS, docs/packed
+        drift); the caller then serves the flat plan."""
         from nixiesearch_spark.query import wand
 
         if mode != "auto" or not wand.packed_ready(self.reader):
@@ -288,6 +281,7 @@ class Searcher:
             )
         else:
             ok = False
+        ok = ok and self.reader.head_segment.fits()
         return "head" if ok and self.reader.tombstones is None else "flat"
 
     def _served_topk(
@@ -727,19 +721,17 @@ class Searcher:
         head (a pandas Series; for RRF, the union of the branch match sets),
         or None for the cluster plan: the route is flat, or the data
         declines — no field LUT (or, with ``numeric``, a non-integer
-        column), a match set the ordinal LUT cannot resolve, or docs/packed
-        drift. The LUT is checked before any match-set decode."""
+        column), or docs/packed drift. The LUT is checked before any
+        match-set decode."""
         if self._plan_route(query, filters, mode, facet=True) != "head":
             return None
         lut = self.reader.field_lut(field)
         if lut is None or (numeric and lut[1].dtype.kind not in "iu"):
             return None
-        parts = []
-        for b in query.retrieve if isinstance(query, ast.RRFQuery) else [query]:
-            ms = self._match_set_driver(b)
-            if ms is None:
-                return None
-            parts.append(ms["docid"].to_numpy(np.int64))
+        parts = [
+            self._match_set_driver(b)["docid"].to_numpy(np.int64)
+            for b in (query.retrieve if isinstance(query, ast.RRFQuery) else [query])
+        ]
         pos = _lut_positions(lut[0], np.unique(np.concatenate(parts)))
         return None if pos is None else lut[1].iloc[pos]
 
@@ -758,7 +750,7 @@ class Searcher:
             if hit is not None:
                 return hit
         ms = match_scores_driver(self.reader, q.field, q.query, q.operator)
-        if ms is not None and key is not None:
+        if key is not None:
             if key not in self._ms_cache and len(self._ms_cache) >= self.MATCH_SET_CACHE_MAX:
                 self._ms_cache.pop(next(iter(self._ms_cache)))
             self._ms_cache[key] = ms
@@ -846,10 +838,7 @@ class Searcher:
             if lut[1].dtype.kind == "f":
                 return None
             luts[fld] = lut
-        ms = self._match_set_driver(q)
-        if ms is None:
-            return None
-        df = ms.copy()
+        df = self._match_set_driver(q).copy()
         mdoc = df["docid"].to_numpy(np.int64)
         for fld, (docids, vals) in luts.items():
             pos = _lut_positions(docids, mdoc)

@@ -101,7 +101,8 @@ from pyspark.sql.types import (
 from nixiesearch_spark import lucene
 from nixiesearch_spark.analysis import analyzer_py
 from nixiesearch_spark.index import codec
-from nixiesearch_spark.index.builder import DRIVER_MAX_ROWS, KEY_SHIFT, IndexReader
+from nixiesearch_spark.index.builder import DRIVER_MAX_ROWS, IndexReader
+from nixiesearch_spark.index.segment import KEY_SHIFT
 
 # Python workers must run the pack/WAND closures even when this package is
 # not on the executors' import path (e.g. a host-created SparkSession with a
@@ -467,62 +468,39 @@ def packed_ready(reader: IndexReader) -> bool:
     return _packed_unready(reader) is None
 
 
-def _resolve_keys(reader: IndexReader, keys: np.ndarray) -> np.ndarray:
-    """Segmented keys → docids. Driver LUT when the corpus fits (zero jobs
-    after warmup); above that, pushed point-lookup predicates against the
-    ordinal map (parquet row-group pruned)."""
-    docids = reader.ordinal_lookup(keys)
-    if docids is not None:
-        return docids
-    shard, ords = keys >> KEY_SHIFT, keys & ORD_MASK
-    pred = None
-    for s in np.unique(shard):
-        p = (F.col("shard") == int(s)) & F.col("ordinal").isin(
-            [int(x) for x in ords[shard == s]]
-        )
-        pred = p if pred is None else (pred | p)
-    omap = {
-        (int(r["shard"]) << KEY_SHIFT) | int(r["ordinal"]): int(r["docid"])
-        for r in reader.ordinal_map.where(pred).collect()
-    }
-    return np.array([omap[int(x)] for x in keys], dtype=np.int64)
-
-
 def _topk_frame(reader: IndexReader, keys: np.ndarray, scores: np.ndarray, k: int) -> LocalFrame:
     """Kernel candidates → the global top-k under (score desc, docid asc)
     as a LocalFrame: the answer stays on the driver, and the API reads it
     without a JVM round trip."""
     if not len(keys):
         return LocalFrame.empty(reader.spark, FINAL_SCHEMA)
-    docids = _resolve_keys(reader, keys)
+    docids = reader.ordinal_lookup(keys)
     o = np.lexsort((docids, -scores.astype(np.float64)))[:k]
     out = pd.DataFrame({"docid": docids[o], "score": scores[o]})
     return LocalFrame(reader.spark, out, FINAL_SCHEMA)
 
 
 def _wand_topk_driver(reader: IndexReader, plan: dict, k: int, n_stripes: int) -> LocalFrame:
-    """Search-head WAND: the query's matched blocks come from a direct
-    pyarrow read of the packed parquet (zero Spark jobs, zero plan
-    compiles; IndexReader.fetch_packed falls back to one Spark read on
-    non-local storage), ONE kernel call scores every shard in-process, and
-    the ordinal→docid resolve hits the driver LUT. Same kernel, same tie
-    semantics → bit-identical to the distributed plan."""
+    """Search-head WAND: the query's matched blocks are cut out of the
+    reader's resident head segment (IndexReader.fetch_packed; zero Spark
+    jobs, zero plan compiles), ONE kernel call scores every shard
+    in-process, and IndexReader.ordinal_lookup resolves the top-k keys from
+    the segment's ordinal map. Same kernel, same tie semantics →
+    bit-identical to the distributed plan."""
     keys, scores = _shard_topk(_fetch_blocks(reader, [plan]), [plan], k, n_stripes)
     return _topk_frame(reader, keys, scores, k)
 
 
 def match_scores_driver(
     reader: IndexReader, field: str, text: str, operator: str = "or"
-) -> "pd.DataFrame | None":
+) -> pd.DataFrame:
     """FULL match-set (docid, score float32) decoded on the search head —
     the driver analog of engine.score() for a match query, feeding facet
     and sort-by-field serving. One kernel call with an unreachable k (no
     θ ever set, one stripe per shard → plain decode-all), so the float32
-    score chain is the exact WAND/flat chain. Returns None when the packed
-    path or the driver ordinal LUT is unavailable (callers fall back to
-    the cluster plan); tombstones must be handled by the caller (decline)."""
-    if not packed_ready(reader):
-        return None
+    score chain is the exact WAND/flat chain. Requires
+    ``packed_ready(reader)``; the caller's route decision has checked it
+    and the head segment bound, and declines on tombstones."""
     empty = pd.DataFrame({"docid": np.empty(0, np.int64), "score": np.empty(0, np.float32)})
     plan = _match_plan(reader, field, text, operator)
     if plan is None:
@@ -530,10 +508,7 @@ def match_scores_driver(
     keys, scores = _shard_topk(_fetch_blocks(reader, [plan]), [plan], 1 << 60, 1)
     if not len(keys):
         return empty
-    docids = reader.ordinal_lookup(keys)
-    if docids is None:  # corpus too big for the driver map → cluster plan
-        return None
-    return pd.DataFrame({"docid": docids, "score": scores})
+    return pd.DataFrame({"docid": reader.ordinal_lookup(keys), "score": scores})
 
 
 def _match_plan(
@@ -585,12 +560,10 @@ def _fetch_blocks(reader: IndexReader, plans: list) -> pa.Table:
     tables = [reader.fetch_packed(f, sorted(ts)) for f, ts in by_field.items()]
     if len(tables) == 1:
         return tables[0]
-    tables = [
+    return pa.concat_tables([
         t.append_column("field", pa.array([f] * len(t), pa.string()))
         for f, t in zip(by_field, tables)
-    ]
-    # promote: an empty Spark-fallback fetch carries null-typed columns
-    return pa.concat_tables(tables, promote_options="default")
+    ])
 
 
 def _est_blocks(reader: IndexReader, plans: list) -> int:
@@ -641,7 +614,7 @@ def rrf_topk_driver(
     if not cands:
         return empty
     keys = np.unique(np.concatenate([c[0] for c in cands]))
-    docid_of = _resolve_keys(reader, keys)
+    docid_of = reader.ordinal_lookup(keys)
     docs, contribs = [], []
     for bkeys, scores in cands:
         docids = docid_of[np.searchsorted(keys, bkeys)]
@@ -718,10 +691,11 @@ def wand_topk(
 
     ``mode``: physical strategy — "distributed" | "driver" | "auto". The
     driver path is the search-head pattern (the reference's coordinator
-    searching Lucene segments in-process): when the dictionary says the
-    query's matched blocks are small (Σ df/block_size ≤ driver_max_blocks,
-    known BEFORE any job), the matched blocks are read on the driver, ONE
-    kernel call scores every shard, and the ordinal LUT resolves just the
+    searching Lucene segments in-process): when the reader's head segment
+    fits HEAD_SEGMENT_MAX_BYTES and the dictionary says the query's matched
+    blocks are small (Σ df/block_size ≤ driver_max_blocks, known BEFORE any
+    job), the matched blocks are cut from the segment on the driver, ONE
+    kernel call scores every shard, and the segment's ordinal map resolves the
     global top-k, returned as a LocalFrame. That replaces the repartition
     exchange + python-worker round-trip + broadcast-join job (~0.5 s of
     pure scheduling at any data size). High-df queries — where block
@@ -769,7 +743,11 @@ def wand_topk(
     # HINT, never a license to drop the masks
     if fframe is None and (
         mode == "driver"
-        or (mode == "auto" and _est_blocks(reader, [plan]) <= driver_max_blocks)
+        or (
+            mode == "auto"
+            and reader.head_segment.fits()
+            and _est_blocks(reader, [plan]) <= driver_max_blocks
+        )
     ):
         return _wand_topk_driver(reader, plan, k, n_stripes)
 

@@ -12,11 +12,25 @@ def test_export_prometheus(spark, tmp_path, tiny_corpus_pd):
     cfg = IndexConfig(text_fields=("content",), n_shards=4, quantize=True, block_size=16)
     IndexBuilder(spark, cfg).build(spark.createDataFrame(tiny_corpus_pd), d)
     reader = IndexReader(spark, d)
+    assert "nixiesearch_head_segment_bytes 0\n" in export_prometheus(reader)
+    assert "nixiesearch_head_segment_load_seconds 0.0\n" in export_prometheus(reader)
     s = Searcher(reader)
     s.search(MatchQuery("content", "def import"), size=5).collect()  # driver route
     s.search(MatchQuery("content", "def import"), size=5, mode="flat")
     s.search(MatchQuery("content", "def import"), size=5, mode="flat")  # cache hit
-    text = export_prometheus(reader, s)
+    sc = spark.sparkContext
+    sc.setJobGroup("metrics-export", "metrics export")
+    try:
+        text = export_prometheus(reader, s)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert not sc.statusTracker().getJobIdsForGroup("metrics-export")
+    seg = reader.head_segment
+    assert seg.nbytes > 0 and seg.load_s > 0
+    assert f"nixiesearch_head_segment_bytes {seg.nbytes}" in text
+    assert "nixiesearch_head_segment_load_seconds" in text
     assert 'nixiesearch_index_docs{field="content"} 300' in text
     assert "nixiesearch_index_seqnum" in text
     assert "nixiesearch_index_size_bytes" in text

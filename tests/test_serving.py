@@ -4,6 +4,8 @@ results identical to the pure-Catalyst plan it replaces."""
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pytest
 
@@ -376,3 +378,31 @@ def test_auto_routes_are_pinned(spark, routed, name, index, request_fn, route):
         plan = out._jdf.queryExecution().executedPlan().toString()
         got = "distributed" if "MapInArrow" in plan else "flat"
     assert got == route
+
+
+HEAD_CASES = [c for c in ROUTE_CASES if c[3] == "head"]
+
+
+@pytest.mark.parametrize("name, index, request_fn, route", HEAD_CASES,
+                         ids=[c[0] for c in HEAD_CASES])
+def test_head_segment_bound_declines(spark, routed, monkeypatch, name, index, request_fn, route):
+    """Above HEAD_SEGMENT_MAX_BYTES every head shape declines — a match to
+    the distributed plan, the others to the flat plan — with the answer of
+    mode="flat", and no part of the segment loads: term stats come from a
+    filtered read of just the query's terms."""
+    from nixiesearch_spark.index import segment
+    from nixiesearch_spark.query.wand import LocalFrame
+
+    monkeypatch.setattr(segment, "HEAD_SEGMENT_MAX_BYTES", 0)
+    r = IndexReader(spark, routed[index])
+    out = request_fn(Searcher(r, plan_cache=False))
+    assert not isinstance(out, LocalFrame)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert ("MapInArrow" in plan) == (name == "match")
+    flat = Searcher(r, plan_cache=False)
+    for m in ("search", "facet_term", "facet_range"):
+        monkeypatch.setattr(flat, m, functools.partial(getattr(flat, m), mode="flat"))
+    assert [tuple(x) for x in out.collect()] == [tuple(x) for x in request_fn(flat).collect()]
+    seg = r.head_segment
+    assert seg._packed is None and seg._dictionary is None and seg._ordinals is None
+    assert seg.nbytes == 0

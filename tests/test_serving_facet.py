@@ -235,10 +235,11 @@ def test_driver_bounds_force_cluster_fallback(built, monkeypatch):
     assert not _is_local(sorted_out)
     monkeypatch.undo()
 
-    # ordinal LUT refused (corpus "too big") → match-set decode falls back
-    monkeypatch.setattr(
-        type(built), "ordinal_lookup", lambda self, pairs: None, raising=True
-    )
+    # head segment over its bound (corpus "too big") → match-set decode
+    # falls back
+    from nixiesearch_spark.index import segment
+
+    monkeypatch.setattr(segment, "HEAD_SEGMENT_MAX_BYTES", 0)
     s2 = Searcher(built, plan_cache=False)
     out2 = s2.facet_term(q, "lang", 3)
     assert not _is_local(out2)

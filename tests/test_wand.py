@@ -319,18 +319,22 @@ def test_distributed_filtered_and_tombstoned_identity(striped, spark, tmp_path):
 
 
 def test_spark_fetch_fallback_identity(striped, monkeypatch):
-    """Non-local storage: fetch_packed reads through Spark instead of
+    """Non-local storage: the head segment loads through Spark instead of
     pyarrow; the search-head kernels must answer identically."""
     from nixiesearch_spark.query import BoolQuery
     from nixiesearch_spark.query.wand import bool_topk_driver
 
     monkeypatch.setattr(type(striped), "_local_dataset", lambda self, table: None)
+    # a fresh reader: striped's segment may already be loaded with pyarrow
+    remote = IndexReader(striped.spark, striped.index_dir)
+    assert remote.head_segment._packed is None
     for text in ("zzrare common", "tiedoc", "nosuchterm_xyz"):
-        got = wand_topk(striped, "content", text, k=6, n_stripes=4, mode="driver").collect()
+        got = wand_topk(remote, "content", text, k=6, n_stripes=4, mode="driver").collect()
         assert _bits(got) == _bits(_flat(striped, text, 6)), text
     q = BoolQuery(should=[MatchQuery("content", "zzrare")],
                   must_not=[MatchQuery("content", "pad")])
     got = bool_topk_driver(
-        striped, [("should", q.should[0]), ("must_not", q.must_not[0])], k=6, n_stripes=4
+        remote, [("should", q.should[0]), ("must_not", q.must_not[0])], k=6, n_stripes=4
     ).collect()
     assert _bits(got) == _bits(Searcher(striped).search(q, size=6, mode="flat").collect())
+    assert remote.head_segment._packed is not None
