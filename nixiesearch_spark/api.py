@@ -13,9 +13,11 @@ legacy underscore forms are served, like ``MainRoute.scala``):
 - ``POST /v1/index/{i}/search`` (+ ``_search``)  → SearchRoute.scala:60
 - ``POST /v1/index/{i}/suggest`` (+ ``_suggest``)→ SearchRoute.scala:64
 - ``POST /v1/index/{i}`` (+ ``_index``)          → IndexModifyRoute.scala:24
-  — the REST push source: NDJSON or a JSON array of documents, indexed
-  through IncrementalIndexer.process_batch (commit-after-batch, same
-  exactly-once semantics as the file/kafka streaming sources)
+  — the REST push source: NDJSON or a JSON array of documents, validated
+  as createDataFrame would (no Spark job) and indexed through
+  IncrementalIndexer.process_batch, which builds it on the driver when it
+  can (commit-after-batch, same exactly-once semantics as the file/kafka
+  streaming sources)
 - ``POST /v1/index/{i}/flush`` (+ ``_flush``)    → IndexModifyRoute.scala:22
 - ``POST /v1/index/{i}/merge`` (+ ``_merge``)    → IndexModifyRoute.scala:23
 - ``POST /v1/index/{i}/delete`` (+ ``_delete``)  → IndexModifyRoute.scala:25
@@ -159,24 +161,25 @@ class IndexHandle:
         counter from the table's own max so API pushes order correctly
         after (and interleaved with) streaming batches."""
         if self._next_batch is None:
-            import pyspark.sql.functions as F
+            from nixiesearch_spark.index.parquet_files import column_max
 
-            base = 0
-            try:
-                # mergeSchema: the docs dir is schema-evolved (full-build
-                # files lack seqnum, pushed batches carry it) and parquet
-                # schema inference samples ONE footer in listing order —
-                # without merging, seqnum can silently vanish and the batch
-                # counter would restart, breaking monotonicity
-                docs = self.spark.read.option("mergeSchema", "true").parquet(
-                    os.path.join(self.index_dir, "docs")
-                )
-                if "seqnum" in docs.columns:
-                    got = docs.agg(F.max("seqnum")).first()[0]
-                    base = int(got) if got is not None else 0
-            except Exception:  # empty dir — first batch
-                base = 0
-            self._next_batch = base + 1
+            # the docs dir is schema-evolved (full-build files lack seqnum,
+            # pushed batches carry it): the footers' seqnum statistics give
+            # the max over the files that have the column, with no Spark job
+            path = os.path.join(self.index_dir, "docs")
+            readable, got = column_max(path, "seqnum")
+            if not readable:  # storage pyarrow cannot open: one Spark agg
+                got = None
+                try:
+                    import pyspark.sql.functions as F
+
+                    # mergeSchema: single-footer inference may drop seqnum
+                    docs = self.spark.read.option("mergeSchema", "true").parquet(path)
+                    if "seqnum" in docs.columns:
+                        got = docs.agg(F.max("seqnum")).first()[0]
+                except Exception:  # empty dir — first batch
+                    got = None
+            self._next_batch = (int(got) if got is not None else 0) + 1
         else:
             self._next_batch += 1
         return self._next_batch
@@ -485,6 +488,8 @@ class SearchServer:
         }
 
     def _index_docs(self, h: IndexHandle, body: bytes, content_type: str) -> dict:
+        from nixiesearch_spark.streaming.incremental import LocalBatch
+
         t0 = time.monotonic()
         docs = _parse_docs(body, content_type)
         indexer = h.indexer()
@@ -500,10 +505,10 @@ class SearchServer:
             else:
                 h._push_schema = self.spark.createDataFrame(docs).schema
         try:
-            df = self.spark.createDataFrame(docs, schema=h._push_schema)
+            batch = LocalBatch.of(docs, h._push_schema)
         except Exception as e:
             raise ApiError(400, f"documents do not fit the index schema: {e}")
-        indexer.process_batch(df, h.next_batch_id())
+        indexer.process_batch(batch, h.next_batch_id())
         return {
             "status": "ok",
             "docs": len(docs),
@@ -518,7 +523,8 @@ class SearchServer:
             try:
                 with self.lock:
                     text = export_prometheus(
-                        h.reader(), h._searcher, labels={"index": name}
+                        h.reader(), h._searcher, labels={"index": name},
+                        indexer=h._indexer,
                     )
             except ApiError:
                 continue  # not yet committed — skip, like an empty registry

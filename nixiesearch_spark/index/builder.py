@@ -142,6 +142,22 @@ PACKED_SCHEMA = StructType(
 )
 
 
+# one row per (shard, field) per committed batch (IndexBuilder._lineage_rows)
+LINEAGE_SCHEMA = StructType(
+    [
+        StructField("shard", IntegerType()),
+        StructField("field", StringType()),
+        StructField("rows_in", LongType()),
+        StructField("docs_with_field", LongType()),
+        StructField("sum_dl", LongType()),
+        StructField("postings_out", LongType()),
+        StructField("wall_ms", LongType()),
+        StructField("status", StringType()),
+        StructField("tokenizer", StringType()),
+    ]
+)
+
+
 class IndexBuilder:
     def __init__(self, spark: SparkSession, config: IndexConfig | None = None):
         self.spark = spark
@@ -246,7 +262,9 @@ class IndexBuilder:
             if want_sp > int(self.spark.conf.get(sp_conf)):
                 confs[sp_conf] = str(int(want_sp))
         ordmap = None  # set inside; cleaned up in the finally
-        with self._session_overrides(confs):
+        # the prelude's jobs (ordinal bases, row count, ordinal map) carry
+        # this label; the writes below set their own
+        with self._session_overrides(confs, job="index-build: prelude"):
             try:
                 if split_bytes is None and base.rdd.getNumPartitions() < max(parallelism // 2, 2):
                     # non-file input (or already-fine splits): the .rdd partition
@@ -309,8 +327,7 @@ class IndexBuilder:
                 # at 100 TB caching them is not an option at all).
                 from pyspark.sql import Observation
 
-                per_shard = len(shards) <= 64  # per-shard metric exprs; totals beyond
-                groups = shards if per_shard else [-1]
+                groups = self._lineage_groups(shards)
 
                 def shard_pred(s):
                     return F.lit(True) if s == -1 else (F.col("shard") == s)
@@ -399,48 +416,9 @@ class IndexBuilder:
                         for f in c.text_fields
                     }
                 wall_ms = int((time.time() - t0) * 1000)
-                rows = []
-                for s in shards:
-                    g = s if per_shard else -1
-                    for f in c.text_fields:
-                        rows.append(
-                            {
-                                "shard": s,
-                                "field": f,
-                                "rows_in": int(dvals[f"rows__{g}"]) if per_shard else None,
-                                "docs_with_field": int(lvals[f"docs__{g}__{f}"]) if per_shard else None,
-                                "sum_dl": int(lvals[f"dl__{g}__{f}"]) if per_shard else None,
-                                "postings_out": int(pvals[f"post__{g}__{f}"]) if per_shard else None,
-                                "wall_ms": wall_ms,
-                                "status": "committed",
-                                "tokenizer": TOKENIZER_VERSION,
-                            }
-                        )
-                if not per_shard:
-                    # totals-only summary row carries the field-level metrics
-                    for f in c.text_fields:
-                        rows.append(
-                            {
-                                "shard": -1,
-                                "field": f,
-                                "rows_in": int(dvals["rows__-1"]),
-                                "docs_with_field": int(lvals[f"docs__-1__{f}"]),
-                                "sum_dl": int(lvals[f"dl__-1__{f}"]),
-                                "postings_out": int(pvals[f"post__-1__{f}"]),
-                                "wall_ms": wall_ms,
-                                "status": "summary",
-                                "tokenizer": TOKENIZER_VERSION,
-                            }
-                        )
+                rows = self._lineage_rows(shards, {**dvals, **lvals, **pvals}, wall_ms)
                 t_ph = self._mark("postings_count", t_ph)
-                lineage = self.spark.createDataFrame(
-                    pd.DataFrame(rows),
-                    schema=(
-                        "shard int, field string, rows_in long, docs_with_field long, "
-                        "sum_dl long, postings_out long, wall_ms long, status string, "
-                        "tokenizer string"
-                    ),
-                )
+                lineage = self.spark.createDataFrame(pd.DataFrame(rows), schema=LINEAGE_SCHEMA)
                 lineage.coalesce(1).write.mode("append").parquet(os.path.join(index_dir, "lineage"))
                 self._mark("lineage_write", t_ph)
             finally:
@@ -448,6 +426,43 @@ class IndexBuilder:
                 # storage for the application lifetime
                 if ordmap is not None:
                     ordmap.unpersist(blocking=False)
+
+    @staticmethod
+    def _lineage_groups(shards: list[int]) -> list[int]:
+        """The shard groups a batch's lineage metrics are counted over:
+        each shard, or -1 (all rows) past 64 shards, where per-shard
+        metric expressions would swamp the write jobs."""
+        return shards if len(shards) <= 64 else [-1]
+
+    def _lineage_rows(self, shards: list[int], vals: dict, wall_ms: int) -> list[dict]:
+        """A batch's lineage rows from its metrics ``vals``, keyed
+        ``rows__{g}``, ``docs__{g}__{f}``, ``dl__{g}__{f}`` and
+        ``post__{g}__{f}`` over _lineage_groups: one committed row per
+        (shard, field), plus a totals summary row per field when the
+        metrics are totals only."""
+        groups = self._lineage_groups(shards)
+        per_shard = groups != [-1]
+
+        def row(s, g, f, status):
+            return {
+                "shard": s,
+                "field": f,
+                "rows_in": int(vals[f"rows__{g}"]),
+                "docs_with_field": int(vals[f"docs__{g}__{f}"]),
+                "sum_dl": int(vals[f"dl__{g}__{f}"]),
+                "postings_out": int(vals[f"post__{g}__{f}"]),
+                "wall_ms": wall_ms,
+                "status": status,
+                "tokenizer": TOKENIZER_VERSION,
+            }
+
+        fields = self.config.text_fields
+        if per_shard:
+            return [row(s, s, f, "committed") for s in shards for f in fields]
+        blank = {"rows_in": None, "docs_with_field": None, "sum_dl": None, "postings_out": None}
+        return [{**row(s, -1, f, "committed"), **blank} for s in shards for f in fields] + [
+            row(-1, -1, f, "summary") for f in fields
+        ]
 
     def _postings_plan(self, df, base, index_dir, shards, groups, shard_pred):
         """The postings job's plan (no action runs here): tokenize once,
@@ -623,10 +638,10 @@ class IndexBuilder:
         collect, all one job.
 
         Ordinals stay a pure function of the data (docid → bucket → rank by
-        docid), so the docs write and the later postings recompute assign
-        identical ordinals regardless of input partitioning, and re-runs are
-        deterministic (north rule). Appends stay collision-free via the
-        per-shard lineage ``bases`` offset.
+        docid, then by the text fields), so the docs write and the later
+        postings recompute assign identical ordinals regardless of input
+        partitioning, and re-runs are deterministic (north rule). Appends
+        stay collision-free via the per-shard lineage ``bases`` offset.
         """
         from pyspark.sql import Window
 
@@ -645,7 +660,12 @@ class IndexBuilder:
         offsets = counts.select(
             "shard", "_hb", F.coalesce(F.sum("_c").over(w_pre), F.lit(0)).alias("_off")
         )
-        w_rank = Window.partitionBy("shard", "_hb").orderBy("docid")
+        # duplicate docids tie on docid: break the tie on the text fields,
+        # all the postings depend on, so the docs action and the postings
+        # action give equal rows equal ordinals (the driver push sorts the
+        # same way, index/driver_push.py)
+        ties = [f for f in self.config.text_fields if f in base.columns]
+        w_rank = Window.partitionBy("shard", "_hb").orderBy("docid", *ties)
         return (
             base.join(F.broadcast(offsets), ["shard", "_hb"], "left")
             .join(F.broadcast(base_df), "shard", "left")
@@ -744,37 +764,59 @@ class IndexBuilder:
         always fresh, and WAND refuses a stale packed table via the
         ``packed_seqnum`` guard instead of silently missing new docs."""
         c = self.config
-        spark = self.spark
         t_ph = time.time()
-        lin = spark.read.parquet(os.path.join(index_dir, "lineage"))
-        rows = (
-            lin.groupBy("field")
-            .agg(F.sum("docs_with_field").alias("doc_count"), F.sum("sum_dl").alias("sum_ttf"))
-            .collect()
-        )
-        fields = {}
-        for r in rows:
-            dc, ttf = int(r["doc_count"]), int(r["sum_ttf"])
-            avgdl = (
-                float(lucene.avg_field_length(ttf, dc)) if c.quantize else (ttf / dc if dc else 0.0)
+        with self._session_overrides(job="index-build: finalize stats"):
+            lin = self.spark.read.parquet(os.path.join(index_dir, "lineage"))
+            rows = (
+                lin.groupBy("field")
+                .agg(F.sum("docs_with_field").alias("doc_count"), F.sum("sum_dl").alias("sum_ttf"))
+                .collect()
             )
-            fields[r["field"]] = {"doc_count": dc, "sum_ttf": ttf, "avgdl": avgdl}
+        fields = self._field_stats((r["field"], r["doc_count"], r["sum_ttf"]) for r in rows)
         seqnum = int(time.time() * 1000)
-        prev_stats_path = os.path.join(index_dir, "stats.json")
-        prev_stats: dict = {}
-        if os.path.exists(prev_stats_path):
-            with open(prev_stats_path) as f:
-                prev_stats = json.load(f)
-        prev_packed = prev_stats.get("packed_seqnum")
-        prev_pack_avgdl = prev_stats.get("pack_avgdl")
+        prev_stats = self._read_stats(index_dir)
         do_pack = c.quantize and pack
-        pack_avgdl, pack_mode, new_files = prev_pack_avgdl, "skip", None
+        pack_avgdl, pack_mode, new_files = prev_stats.get("pack_avgdl"), "skip", None
         t_ph = self._mark("finalize_stats", t_ph)
         if do_pack:
             with self._session_overrides(job="index-build: pack"):
                 pack_avgdl, pack_mode, new_files = self._pack_or_repack(index_dir, fields)
         t_ph = self._mark("pack", t_ph)
-        stats = {
+        packed_seqnum = seqnum if do_pack else prev_stats.get("packed_seqnum")
+        stats = self._stats_doc(fields, seqnum, packed_seqnum, pack_avgdl)
+        with self._session_overrides(job="index-build: dictionary"):
+            self._refresh_dictionary(index_dir, pack_mode, new_files)
+        self._mark("dictionary", t_ph)
+        with open(os.path.join(index_dir, "stats.json"), "w") as f:
+            json.dump(stats, f, indent=2)
+        return stats
+
+    @staticmethod
+    def _read_stats(index_dir: str) -> dict:
+        path = os.path.join(index_dir, "stats.json")
+        if not os.path.exists(path):
+            return {}
+        with open(path) as f:
+            return json.load(f)
+
+    def _field_stats(self, rows) -> dict:
+        """stats.json's per-field block from (field, doc_count, sum_ttf)
+        lineage sums."""
+        fields = {}
+        for fld, dc, ttf in rows:
+            dc, ttf = int(dc), int(ttf)
+            avgdl = (
+                float(lucene.avg_field_length(ttf, dc))
+                if self.config.quantize
+                else (ttf / dc if dc else 0.0)
+            )
+            fields[fld] = {"doc_count": dc, "sum_ttf": ttf, "avgdl": avgdl}
+        return fields
+
+    def _stats_doc(self, fields: dict, seqnum: int, packed_seqnum, pack_avgdl) -> dict:
+        """The stats.json manifest both build paths commit last."""
+        c = self.config
+        return {
             "fields": fields,
             "analyzers": {f: c.analyzers.get(f, "standard") for f in c.text_fields},
             "quantize": c.quantize,
@@ -783,18 +825,12 @@ class IndexBuilder:
             "tokenizer": TOKENIZER_VERSION,
             "seqnum": seqnum,
             # seqnum the packed table was built at; < seqnum ⇒ WAND stale
-            "packed_seqnum": seqnum if do_pack else prev_packed,
+            "packed_seqnum": packed_seqnum,
             # avgdl the packed max_impact bounds were computed at: WAND
             # scales bounds by max(1, avgdl_now / pack_avgdl) so incremental
             # packs stay sound under avgdl drift (query/wand.py)
             "pack_avgdl": pack_avgdl,
         }
-        with self._session_overrides(job="index-build: dictionary"):
-            self._refresh_dictionary(index_dir, pack_mode, new_files)
-        self._mark("dictionary", t_ph)
-        with open(os.path.join(index_dir, "stats.json"), "w") as f:
-            json.dump(stats, f, indent=2)
-        return stats
 
     def _refresh_dictionary(self, index_dir: str, pack_mode: str, new_files) -> None:
         """term → (df, cf) table. Full modes aggregate packed block rows
@@ -884,9 +920,25 @@ class IndexBuilder:
         Returns (pack_avgdl_by_field, mode, new_file_paths) with mode one of
         "full" | "incremental" | "noop".
         """
+        mode, manifest, new_files = self._pack_plan(index_dir, fields)
+        if mode != "noop":
+            self._pack(index_dir, manifest["pack_avgdl"], manifest["group_span"], new_files)
+            with open(os.path.join(index_dir, "packed_manifest.json"), "w") as f:
+                json.dump(manifest, f)
+        return manifest["pack_avgdl"], mode, new_files
+
+    def _pack_plan(self, index_dir: str, fields: dict, adding: tuple = ()):
+        """(mode, manifest, new_files): how _pack_or_repack packs the
+        postings table as it lists now, decided from the manifest and the
+        file listing alone — the driver push (index/driver_push.py) takes
+        the same decision. ``manifest`` is the one to write after the pack;
+        its ``pack_avgdl`` is what the packed bounds use. ``new_files`` are
+        the absolute paths an "incremental" pack folds in (else None).
+        ``adding`` lists postings files about to be written, to decide
+        before writing them."""
         man_path = os.path.join(index_dir, "packed_manifest.json")
         proot = os.path.join(index_dir, "postings")
-        cur = self._postings_files(index_dir)
+        cur = sorted({*self._postings_files(index_dir), *adding})
         span = self.config.block_size * int(self.config.extra.get("pack_group_blocks", 256))
         cur_avgdl = {f: s["avgdl"] for f, s in fields.items()}
         manifest = None
@@ -900,20 +952,12 @@ class IndexBuilder:
             and all(f in manifest.get("pack_avgdl", {}) for f in cur_avgdl)
         ):
             new_rel = sorted(set(cur) - set(manifest["files"]))
-            pack_avgdl = manifest["pack_avgdl"]
             if not new_rel:
-                return pack_avgdl, "noop", None
+                return "noop", manifest, None
             if len(new_rel) <= max(2, len(cur) // 2):
                 new_abs = [os.path.join(proot, f) for f in new_rel]
-                self._pack(index_dir, pack_avgdl, span, new_files=new_abs)
-                manifest["files"] = cur
-                with open(man_path, "w") as f:
-                    json.dump(manifest, f)
-                return pack_avgdl, "incremental", new_abs
-        self._pack(index_dir, cur_avgdl, span)
-        with open(man_path, "w") as f:
-            json.dump({"files": cur, "pack_avgdl": cur_avgdl, "group_span": span}, f)
-        return cur_avgdl, "full", None
+                return "incremental", {**manifest, "files": cur}, new_abs
+        return "full", {"files": cur, "pack_avgdl": cur_avgdl, "group_span": span}, None
 
     def _pack(
         self,
@@ -929,10 +973,11 @@ class IndexBuilder:
         sort — a sort-based exchange, measured 3-4x faster than the former
         ``collect_list`` ObjectHashAggregate at 8.9M postings (bench_extra
         r6), and it spills gracefully instead of building per-group arrays
-        in agg memory. mapInPandas walks the sorted stream, carrying the
-        trailing (possibly batch-straddling) group between Arrow batches,
-        and VByte-encodes whole batches with bulk numpy. Quantized-only:
-        the norm byte is what WAND decodes.
+        in agg memory. mapInArrow runs codec.pack_batches over the sorted
+        stream (the driver push's re-pack runs the same function), carrying
+        the trailing (possibly batch-straddling) group between Arrow
+        batches and VByte-encoding whole batches with bulk numpy.
+        Quantized-only: the norm byte is what WAND decodes.
 
         Giant-term guard: a stopword's postings in one shard are
         O(shard_docs). The shuffle key therefore includes the ordinal-range
@@ -947,120 +992,6 @@ class IndexBuilder:
         caches = {
             f: lucene.norm_cache(np.float32(a)) for f, a in avgdl_by_field.items()
         }
-
-        def _group_starts(rb) -> np.ndarray:
-            """Row indices where a new (shard, og, field, term) group
-            begins, via Arrow vectorized neighbor comparison — the string
-            columns never materialize as Python objects."""
-            import pyarrow.compute as pc
-
-            n = rb.num_rows
-            if n == 1:
-                return np.array([0], dtype=np.int64)
-            cols = {nm: rb.column(i) for i, nm in enumerate(rb.schema.names)}
-
-            def neq(a):
-                return pc.not_equal(a.slice(1), a.slice(0, n - 1))
-
-            ch = pc.or_(
-                pc.or_(neq(cols["shard"]), neq(cols["og"])),
-                pc.or_(neq(cols["field"]), neq(cols["term"])),
-            ).to_numpy(zero_copy_only=False)
-            newgrp = np.empty(n, dtype=bool)
-            newgrp[0] = True
-            newgrp[1:] = ch
-            return np.flatnonzero(newgrp)
-
-        def encode_region(rb, gstart: np.ndarray):
-            """VByte-encode an Arrow batch of complete, sorted groups into
-            one PACKED_SCHEMA batch. Binary columns are built zero-copy
-            from (offsets, value-buffer) pairs — no per-block Python."""
-            import pyarrow as pa
-            import pyarrow.compute as pc
-
-            n = rb.num_rows
-            cols = {nm: rb.column(i) for i, nm in enumerate(rb.schema.names)}
-            docids = cols["ordinal"].to_numpy()
-            tfs = cols["tf"].to_numpy().astype(np.int64)
-            norms = cols["norm"].to_numpy().astype(np.int64)
-            glen = np.diff(np.append(gstart, n))
-            pos_in_grp = np.arange(n) - np.repeat(gstart, glen)
-            bstart = np.flatnonzero(pos_in_grp % block_size == 0)
-            bend = np.append(bstart[1:], n)
-            impact = np.empty(n, dtype=np.float32)
-            for fld in pc.unique(cols["field"]).to_pylist():
-                m = pc.equal(cols["field"], fld).to_numpy(zero_copy_only=False)
-                impact[m] = lucene.bm25_contrib(
-                    np.float32(1.0), tfs[m].astype(np.float32), norms[m], caches[fld]
-                )
-            gaps = np.empty(n, dtype=np.int64)
-            gaps[0] = 0
-            gaps[1:] = docids[1:] - docids[:-1]
-            gaps[bstart] = codec.zigzag_encode(docids[bstart])
-            enc_g, len_g = codec.vbyte_encode_with_lengths(gaps)
-            enc_t, len_t = codec.vbyte_encode_with_lengths(tfs - 1)
-            off_g = np.concatenate([[0], np.cumsum(len_g)])
-            off_t = np.concatenate([[0], np.cumsum(len_t)])
-            bounds = np.append(bstart, n)
-            nb = len(bstart)
-
-            def binary_col(values: np.ndarray, offsets: np.ndarray):
-                return pa.Array.from_buffers(
-                    pa.binary(),
-                    nb,
-                    [None, pa.py_buffer(offsets.astype(np.int32)),
-                     pa.py_buffer(np.ascontiguousarray(values))],
-                )
-
-            bmax = np.maximum.reduceat(impact.astype(np.float64), bstart)
-            btf = np.add.reduceat(tfs, bstart)
-            idx = pa.array(bstart, type=pa.int64())
-            return pa.RecordBatch.from_arrays(
-                [
-                    pc.take(cols["shard"], idx),
-                    pc.take(cols["field"], idx),
-                    pc.take(cols["term"], idx),
-                    pa.array(docids[bstart], type=pa.int64()),
-                    pa.array(docids[bend - 1], type=pa.int64()),
-                    pa.array((bend - bstart).astype(np.int32)),
-                    binary_col(np.frombuffer(enc_g, dtype=np.uint8), off_g[bounds]),
-                    binary_col(np.frombuffer(enc_t, dtype=np.uint8), off_t[bounds]),
-                    binary_col(norms.astype(np.uint8), bounds),
-                    pa.array(np.float32(bmax)),
-                    pa.array(btf, type=pa.int64()),
-                    pc.take(cols["og"], idx),
-                ],
-                names=[
-                    "shard", "field", "term", "block_id", "block_last", "n",
-                    "doc_gaps", "tfs", "norms", "max_impact", "tf_sum", "og",
-                ],
-            )
-
-        def pack_batches(batches):
-            import pyarrow as pa
-
-            carry = None
-            for rb in batches:
-                if carry is not None:
-                    rb = (
-                        pa.Table.from_batches([carry, rb])
-                        .combine_chunks()
-                        .to_batches()[0]
-                    )
-                    carry = None
-                if rb.num_rows == 0:
-                    continue
-                gstart = _group_starts(rb)
-                last = int(gstart[-1])
-                if last == 0:
-                    carry = rb  # whole batch is one group — keep growing
-                    continue
-                # hold back the trailing group — it may continue in the
-                # next batch (carry is bounded by the og sub-group span)
-                carry = rb.slice(last)
-                yield encode_region(rb.slice(0, last), gstart[:-1])
-            if carry is not None and carry.num_rows:
-                yield encode_region(carry, _group_starts(carry))
 
         postings = self.spark.read.parquet(os.path.join(index_dir, "postings"))
         if new_files is not None:
@@ -1132,7 +1063,9 @@ class IndexBuilder:
             .repartition(nparts, "shard", "field", "term", "og")
             .sortWithinPartitions("shard", "field", "term", "og", "ordinal")
         )
-        packed = arranged.mapInArrow(pack_batches, schema=PACKED_SCHEMA)
+        packed = arranged.mapInArrow(
+            lambda it: codec.pack_batches(it, block_size, caches), schema=PACKED_SCHEMA
+        )
         # og leads the pre-write sort: the dynamic-partitioned write
         # requires rows clustered by its partition column and would insert
         # its OWN (term-order-destroying) sort otherwise — leading with og
@@ -1255,13 +1188,20 @@ class IndexReader:
     @property
     def docs(self) -> DataFrame:
         if self._docs is None:
-            # mergeSchema: a pushed batch may lack a stored column (and
-            # carries seqnum, which full-build files lack); single-footer
-            # schema inference would hide such a column for the whole
-            # index. Inference runs one Spark job either way.
-            self._docs = self.spark.read.option("mergeSchema", "true").parquet(
-                os.path.join(self.index_dir, "docs")
-            )
+            # a pushed batch may lack a stored column (and carries seqnum,
+            # which full-build files lack); single-footer schema inference
+            # would hide such a column for the whole index. The schema is
+            # merged from every file's footer with pyarrow (no Spark job);
+            # where pyarrow cannot open the storage, mergeSchema infers it
+            # in one job.
+            from nixiesearch_spark.index.parquet_files import footer_schema
+
+            path = os.path.join(self.index_dir, "docs")
+            schema = footer_schema(path) if self._local_dataset("docs") is not None else None
+            if schema is not None:
+                self._docs = self.spark.read.schema(schema).parquet(path)
+            else:
+                self._docs = self.spark.read.option("mergeSchema", "true").parquet(path)
         return self._docs
 
     @property

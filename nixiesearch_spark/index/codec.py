@@ -173,3 +173,129 @@ def decode_posting_blocks(
     tf = vbyte_decode(b"".join(tfs), total) + 1
     nm = np.frombuffer(b"".join(norms), dtype=np.uint8).astype(np.int64)
     return docids, tf, nm
+
+
+# ---------- packing sorted posting rows into blocks ----------
+#
+# Shared by both build paths: the Spark pack's mapInArrow kernel
+# (IndexBuilder._pack) and the driver push's re-pack (index/driver_push.py)
+# feed these the same sorted (shard, field, term, og, ordinal, tf, norm)
+# rows, so both write the same blocks.
+
+
+def group_starts(rb) -> np.ndarray:
+    """Row indices where a new (shard, og, field, term) group begins, via
+    Arrow vectorized neighbor comparison — the string columns never
+    materialize as Python objects."""
+    import pyarrow.compute as pc
+
+    n = rb.num_rows
+    if n == 1:
+        return np.array([0], dtype=np.int64)
+    cols = {nm: rb.column(i) for i, nm in enumerate(rb.schema.names)}
+
+    def neq(a):
+        return pc.not_equal(a.slice(1), a.slice(0, n - 1))
+
+    ch = pc.or_(
+        pc.or_(neq(cols["shard"]), neq(cols["og"])),
+        pc.or_(neq(cols["field"]), neq(cols["term"])),
+    ).to_numpy(zero_copy_only=False)
+    newgrp = np.empty(n, dtype=bool)
+    newgrp[0] = True
+    newgrp[1:] = ch
+    return np.flatnonzero(newgrp)
+
+
+def encode_region(rb, gstart: np.ndarray, block_size: int, caches: dict):
+    """VByte-encode an Arrow batch of complete, sorted groups into one
+    packed batch (builder.PACKED_SCHEMA). ``caches`` maps each field to
+    its ``lucene.norm_cache``. Binary columns are built zero-copy from
+    (offsets, value-buffer) pairs — no per-block Python."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from nixiesearch_spark import lucene
+
+    n = rb.num_rows
+    cols = {nm: rb.column(i) for i, nm in enumerate(rb.schema.names)}
+    docids = cols["ordinal"].to_numpy()
+    tfs = cols["tf"].to_numpy().astype(np.int64)
+    norms = cols["norm"].to_numpy().astype(np.int64)
+    glen = np.diff(np.append(gstart, n))
+    pos_in_grp = np.arange(n) - np.repeat(gstart, glen)
+    bstart = np.flatnonzero(pos_in_grp % block_size == 0)
+    bend = np.append(bstart[1:], n)
+    impact = np.empty(n, dtype=np.float32)
+    for fld in pc.unique(cols["field"]).to_pylist():
+        m = pc.equal(cols["field"], fld).to_numpy(zero_copy_only=False)
+        impact[m] = lucene.bm25_contrib(
+            np.float32(1.0), tfs[m].astype(np.float32), norms[m], caches[fld]
+        )
+    gaps = np.empty(n, dtype=np.int64)
+    gaps[0] = 0
+    gaps[1:] = docids[1:] - docids[:-1]
+    gaps[bstart] = zigzag_encode(docids[bstart])
+    enc_g, len_g = vbyte_encode_with_lengths(gaps)
+    enc_t, len_t = vbyte_encode_with_lengths(tfs - 1)
+    off_g = np.concatenate([[0], np.cumsum(len_g)])
+    off_t = np.concatenate([[0], np.cumsum(len_t)])
+    bounds = np.append(bstart, n)
+    nb = len(bstart)
+
+    def binary_col(values: np.ndarray, offsets: np.ndarray):
+        return pa.Array.from_buffers(
+            pa.binary(),
+            nb,
+            [None, pa.py_buffer(offsets.astype(np.int32)),
+             pa.py_buffer(np.ascontiguousarray(values))],
+        )
+
+    bmax = np.maximum.reduceat(impact.astype(np.float64), bstart)
+    btf = np.add.reduceat(tfs, bstart)
+    idx = pa.array(bstart, type=pa.int64())
+    return pa.RecordBatch.from_arrays(
+        [
+            pc.take(cols["shard"], idx),
+            pc.take(cols["field"], idx),
+            pc.take(cols["term"], idx),
+            pa.array(docids[bstart], type=pa.int64()),
+            pa.array(docids[bend - 1], type=pa.int64()),
+            pa.array((bend - bstart).astype(np.int32)),
+            binary_col(np.frombuffer(enc_g, dtype=np.uint8), off_g[bounds]),
+            binary_col(np.frombuffer(enc_t, dtype=np.uint8), off_t[bounds]),
+            binary_col(norms.astype(np.uint8), bounds),
+            pa.array(np.float32(bmax)),
+            pa.array(btf, type=pa.int64()),
+            pc.take(cols["og"], idx),
+        ],
+        names=[
+            "shard", "field", "term", "block_id", "block_last", "n",
+            "doc_gaps", "tfs", "norms", "max_impact", "tf_sum", "og",
+        ],
+    )
+
+
+def pack_batches(batches, block_size: int, caches: dict):
+    """Packed batches for a stream of Arrow batches sorted by (shard,
+    field, term, og, ordinal). The trailing group of each batch may
+    continue in the next one, so it is carried over (the carry is bounded
+    by the og sub-group span)."""
+    import pyarrow as pa
+
+    carry = None
+    for rb in batches:
+        if carry is not None:
+            rb = pa.Table.from_batches([carry, rb]).combine_chunks().to_batches()[0]
+            carry = None
+        if rb.num_rows == 0:
+            continue
+        gstart = group_starts(rb)
+        last = int(gstart[-1])
+        if last == 0:
+            carry = rb  # whole batch is one group — keep growing
+            continue
+        carry = rb.slice(last)
+        yield encode_region(rb.slice(0, last), gstart[:-1], block_size, caches)
+    if carry is not None and carry.num_rows:
+        yield encode_region(carry, group_starts(carry), block_size, caches)

@@ -27,14 +27,16 @@ def _line(name: str, value, labels: dict | None = None) -> str:
     return f"{name} {value}"
 
 
-def export_prometheus(reader, searcher=None, labels: dict | None = None) -> str:
+def export_prometheus(reader, searcher=None, labels: dict | None = None, indexer=None) -> str:
     """Render index (and optional searcher) metrics in Prometheus text
     exposition format. Only driver-held state is read — stats.json, the
     filesystem and the reader's head segment counters — so the export
     itself costs zero Spark jobs. ``labels``
     (e.g. ``{"index": name}``) is merged into EVERY sample — required when
     one scrape concatenates several indexes, or the repeated metric names
-    would be duplicate samples Prometheus rejects."""
+    would be duplicate samples Prometheus rejects. Pass the write path's
+    IncrementalIndexer as ``indexer`` to count its batches by build path
+    and, for the Spark path, by the reason the driver path declined."""
     base = dict(labels or {})
 
     def _l(name, value, extra=None):
@@ -101,5 +103,16 @@ def export_prometheus(reader, searcher=None, labels: dict | None = None) -> str:
         out.append("# HELP nixiesearch_plan_cache_hits_total compiled-plan cache hits")
         out.append("# TYPE nixiesearch_plan_cache_hits_total counter")
         out.append(_l("nixiesearch_plan_cache_hits_total", c.get("plan_cache_hits", 0)))
+
+    if indexer is not None:
+        out.append(
+            "# HELP nixiesearch_pushes_total batches indexed, by build path "
+            "(driver or spark) and the reason the driver path declined"
+        )
+        out.append("# TYPE nixiesearch_pushes_total counter")
+        for key, n in sorted(indexer.pushes.items()):
+            path, _, reason = key.partition(":")
+            out.append(_l("nixiesearch_pushes_total", n,
+                          {"path": path, **({"reason": reason} if reason else {})}))
 
     return "\n".join(out) + "\n"

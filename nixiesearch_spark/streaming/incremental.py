@@ -15,6 +15,9 @@ Spark-native shape:
 - each micro-batch appends delta docs + postings tagged with ``seqnum`` =
   batch_id (exactly-once per batch via the streaming checkpoint — stronger
   than the reference's commitAsync);
+- a REST push (``LocalBatch``) is built on the driver in zero Spark jobs
+  (``index/driver_push.py``), the analog of the reference indexing a push
+  in-process into its open IndexWriter; it writes the same tables;
 - ``compact()`` is the flush/merge analog: shard-scoped last-write-wins
   upsert + physical tombstone removal — only files holding touched shards'
   rows are replaced, survivors keep their ordinals (no re-tokenize).
@@ -28,10 +31,12 @@ from __future__ import annotations
 import glob
 import os
 import shutil
+from collections import Counter
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType, _create_converter, _make_type_verifier
 
 from nixiesearch_spark.index.builder import IndexBuilder, IndexConfig
 
@@ -57,7 +62,36 @@ class MergePolicy:
         return n_files >= max(self.min_files, self.segments_per_tier * n_shards)
 
 
+@dataclass
+class LocalBatch:
+    """A batch held in the driver's memory, as the REST push source parses
+    it: the documents, the schema they are indexed with, and their rows in
+    the internal form ``spark.createDataFrame(docs, schema=schema)`` holds
+    them. Build it with ``of``."""
+
+    docs: list
+    schema: StructType
+    rows: list
+
+    @classmethod
+    def of(cls, docs: list, schema: StructType) -> "LocalBatch":
+        """Validate ``docs`` against ``schema`` with the verifier, the
+        converter and the internal form createDataFrame runs on a local
+        list — in Python, no Spark job — so it rejects exactly the batches
+        createDataFrame rejects, with the same errors."""
+        verify, convert = _make_type_verifier(schema), _create_converter(schema)
+        rows = []
+        for d in docs:
+            verify(d)
+            rows.append(schema.toInternal(convert(d)))
+        return cls(docs, schema, rows)
+
+
 class IncrementalIndexer:
+    """The write path of one index: batches appended by ``process_batch``
+    (Spark or driver build, chosen per batch), deletes as tombstones,
+    ``compact()`` for physical upserts, and the merge policy."""
+
     def __init__(
         self,
         spark: SparkSession,
@@ -78,6 +112,9 @@ class IncrementalIndexer:
         self.builder = IndexBuilder(spark, config)
         self.merge_policy = merge_policy or MergePolicy(kind="none")
         self.pack_each_batch = pack_each_batch
+        # processed batches: "driver", or "spark:<reason>" with the reason
+        # the driver path declined ("dataframe" for a DataFrame batch)
+        self.pushes: Counter = Counter()
 
     # ---------- micro-batch sink ----------
 
@@ -87,19 +124,45 @@ class IncrementalIndexer:
                       recursive=True)
         )
 
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """foreachBatch body: append this batch's docs + postings delta with
-        seqnum=batch_id, then refresh derived tables (stats/dictionary/packed).
-        A merge policy may then fold the accumulated small files
-        (commit-then-compact, like the reference's flush + merge scheduling).
+    def process_batch(self, batch: DataFrame | LocalBatch, batch_id: int) -> None:
+        """Append one batch — docs + postings delta with seqnum=batch_id —
+        then refresh the derived tables (stats, dictionary, packed). A
+        merge policy may then fold the accumulated small files
+        (commit-then-compact, like the reference's flush + merge
+        scheduling).
+
+        ``batch`` is a DataFrame (the foreachBatch body) or a LocalBatch
+        (a REST push). This is the one place the build path is chosen: a
+        LocalBatch the driver can write bit for bit is built on the driver
+        with pyarrow and numpy in zero Spark jobs (index/driver_push.py);
+        every other batch, and each shape DriverPush.decline names, takes
+        the Spark push. ``pushes`` counts batches by path and reason.
         """
-        if batch_df.isEmpty():
-            return
+        from nixiesearch_spark.index.driver_push import DriverPush
+
+        if isinstance(batch, LocalBatch):
+            driver = DriverPush(self, batch, batch_id)
+            reason = driver.decline()
+            if reason is None:
+                self.pushes["driver"] += 1
+                driver.run()
+                self._maybe_merge()
+                return
+            batch_df = self.spark.createDataFrame(batch.docs, schema=batch.schema)
+        else:
+            reason, batch_df = "dataframe", batch
+            with self.builder._session_overrides(job="index-build: prelude"):
+                if batch_df.isEmpty():
+                    return
+        self.pushes[f"spark:{reason}"] += 1
         # explicit long: a python-int lit under 2^31 becomes INT32, and one
         # index must never mix parquet physical types for one column
         tagged = batch_df.withColumn("seqnum", F.lit(int(batch_id)).cast("long"))
         self.builder._build_shards(tagged, self.index_dir, list(range(self.config.n_shards)))
         self.builder.finalize(self.index_dir, pack=self.pack_each_batch)
+        self._maybe_merge()
+
+    def _maybe_merge(self) -> None:
         if self.merge_policy.should_merge(self._postings_file_count(), self.config.n_shards):
             self.builder.merge(self.index_dir)  # merge() re-finalizes with pack
 
@@ -255,7 +318,7 @@ class IncrementalIndexer:
         self._swap_rows_in_place("postings", touched, kept_post)
         self._swap_rows_in_place("docs", touched, survivors)
         if removed:
-            from nixiesearch_spark.index.builder import TOKENIZER_VERSION
+            from nixiesearch_spark.index.builder import LINEAGE_SCHEMA, TOKENIZER_VERSION
 
             wall = int(time.time() * 1000) % 1_000_000
             rows = [
@@ -274,14 +337,7 @@ class IncrementalIndexer:
             ]
             import pandas as pd
 
-            adj = spark.createDataFrame(
-                pd.DataFrame(rows),
-                schema=(
-                    "shard int, field string, rows_in long, docs_with_field long, "
-                    "sum_dl long, postings_out long, wall_ms long, status string, "
-                    "tokenizer string"
-                ),
-            )
+            adj = spark.createDataFrame(pd.DataFrame(rows), schema=LINEAGE_SCHEMA)
             adj.coalesce(1).write.mode("append").parquet(os.path.join(idx, "lineage"))
         if tombs is not None:
             shutil.rmtree(tomb_path, ignore_errors=True)

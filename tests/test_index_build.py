@@ -75,7 +75,8 @@ def test_duplicate_docids_in_batch_keep_per_row_ordinals(spark, tmp_path):
             "path": ["p", "p", "q"],   # rows 0,1 share (repo,path,commit)
             "commit": ["c", "c", "c"],
             "lang": ["py", "py", "py"],
-            "content": ["hello world", "hello world", "other text"],
+            # the duplicates differ in text: the window ranks them by it
+            "content": ["hello world", "hello there", "other text"],
         }
     )
     cfg = IndexConfig(text_fields=("content",), n_shards=4)
@@ -88,6 +89,11 @@ def test_duplicate_docids_in_batch_keep_per_row_ordinals(spark, tmp_path):
     # the two duplicate rows carry distinct ordinals (append-safe)
     dup = docs.where("path = 'p'").toPandas()
     assert len(set(dup["ordinal"])) == 2
+    # the docs action and the postings action give each duplicate the
+    # same ordinal: its postings are its own text's terms
+    for _, row in dup.iterrows():
+        mine = post[(post["shard"] == row["shard"]) & (post["ordinal"] == row["ordinal"])]
+        assert set(mine["term"]) == set(row["content"].split())
 
 
 def test_failed_postings_plan_joins_docs_write_and_restores_conf(spark, tmp_path, monkeypatch):
