@@ -41,14 +41,9 @@ ARROW_TYPES = {
     BooleanType: pa.bool_(),
     BinaryType: pa.binary(),
 }
-# spark.sql.parquet.compression.codec → (pyarrow codec, Spark's file suffix)
-CODECS = {
-    "zstd": ("zstd", ".zstd"),
-    "snappy": ("snappy", ".snappy"),
-    "gzip": ("gzip", ".gz"),
-    "none": ("none", ""),
-    "uncompressed": ("none", ""),
-}
+# the index's codecs (spark.sql.parquet.compression.codec for docs,
+# lineage and dictionary; snappy for postings and packed) → Spark's suffix
+CODECS = {"zstd": ".zstd", "snappy": ".snappy"}
 # parquet-mr's default zstd level, which Spark's writes use
 _ZSTD_LEVEL = 3
 
@@ -125,7 +120,7 @@ def column_max(path: str, column: str):
 
 def part_name(codec: str) -> str:
     """A new file name as Spark names its write tasks' output."""
-    return f"part-00000-{uuid.uuid4()}-c000{CODECS[codec][1]}.parquet"
+    return f"part-00000-{uuid.uuid4()}-c000{CODECS[codec]}.parquet"
 
 
 def write_parquet(columns: dict, schema: StructType, path: str, codec: str,
@@ -153,13 +148,12 @@ def write_parquet(columns: dict, schema: StructType, path: str, codec: str,
         [arrow_col(columns[f.name], arrow.field(f.name).type) for f in schema.fields],
         schema=arrow,
     )
-    pa_codec = CODECS[codec][0]
     name = name or part_name(codec)
     os.makedirs(path, exist_ok=True)
     tmp = os.path.join(path, "." + name)
     pq.write_table(
-        table, tmp, compression=pa_codec, store_schema=False,
-        compression_level=_ZSTD_LEVEL if pa_codec == "zstd" else None,
+        table, tmp, compression=codec, store_schema=False,
+        compression_level=_ZSTD_LEVEL if codec == "zstd" else None,
     )
     os.replace(tmp, os.path.join(path, name))
     return name

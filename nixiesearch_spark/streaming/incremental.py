@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType, _create_converter, _make_type_verifier
 
 from nixiesearch_spark.index.builder import IndexBuilder, IndexConfig
+from nixiesearch_spark.index.driver_push import DriverPush
 
 
 @dataclass
@@ -138,8 +139,6 @@ class IncrementalIndexer:
         every other batch, and each shape DriverPush.decline names, takes
         the Spark push. ``pushes`` counts batches by path and reason.
         """
-        from nixiesearch_spark.index.driver_push import DriverPush
-
         if isinstance(batch, LocalBatch):
             driver = DriverPush(self, batch, batch_id)
             reason = driver.decline()
