@@ -335,3 +335,54 @@ def test_reopened_docs_schema_reads_footers_not_a_spark_job(spark, base, monkeyp
     monkeypatch.setattr(parquet_files, "footer_schema", lambda path: None)
     merged = first_filtered_jobs("docs-merge-schema")
     assert merged - footers == 1
+
+
+def test_batch_validation_matches_create_dataframe(spark, base, tmp_path):
+    """LocalBatch.of accepts and rejects what createDataFrame does, and a
+    rejected REST push is a 400 that starts no Spark job."""
+    from nixiesearch_spark.api import ApiError, SearchServer
+
+    docs = [{**x, "stars": i, "w": 0.5} for i, x in enumerate(_batch_docs("v"))]
+    schema = _schema(spark, docs)
+    row = {"repo": "r", "path": "p", "commit": "c", "content": "x", "title": "t",
+           "stars": 1, "w": 0.5}
+    cases = [
+        [{**row, "stars": "many"}],
+        [{**row, "stars": 1.5}],
+        [{**row, "stars": 2**64}],
+        [{**row, "w": 1}],
+        [{**row, "content": 5}],  # coerced to "5", not rejected
+        [{k: v for k, v in row.items() if k != "title"}],
+        [{**row, "extra": 1}],
+    ]
+    rejected = 0
+    for batch in cases:
+        want = got = None
+        try:
+            spark.createDataFrame(batch, schema=schema)
+        except Exception as e:
+            want = type(e)
+        try:
+            LocalBatch.of(batch, schema)
+        except Exception as e:
+            got = type(e)
+        assert got == want, batch
+        rejected += want is not None
+    assert rejected == 4
+    d = str(tmp_path / "idx")
+    shutil.copytree(base, d)
+    srv = SearchServer(spark, port=0).add_index("x", d, config=CFG)
+    ok = "\n".join(json.dumps(x) for x in docs).encode()
+    assert srv.handle("POST", "/v1/index/x", ok, {"Content-Type": "application/x-ndjson"})[0] == 200
+    assert srv.indexes["x"]._indexer.pushes == {"driver": 1}  # long and double columns too
+    sc = spark.sparkContext
+    sc.setJobGroup("driver-push-reject", "push")
+    try:
+        with pytest.raises(ApiError) as err:
+            srv.handle("POST", "/v1/index/x", json.dumps(cases[0][0]).encode(), {})
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert err.value.status == 400
+    assert list(sc.statusTracker().getJobIdsForGroup("driver-push-reject")) == []
+    srv.httpd.server_close()
