@@ -58,6 +58,7 @@ from dataclasses import dataclass, field as dc_field
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -90,9 +91,10 @@ except Exception:  # pragma: no cover - best effort on older pyspark
     pass
 
 TOKENIZER_VERSION = "ascii-standard-v1"
-# Largest row count the driver holds for one table: the broadcast ordinal
-# map at build time, the field LUT, and the distributed WAND plan's
-# ordinal resolve. Above it those steps take their cluster-side plans.
+# Largest row count the driver holds for one table: the ordinal map that
+# a build broadcasts, the rows a driver push re-packs
+# (index/driver_push.py) and the HNSW graph the driver searches
+# (pipeline/hnsw.py). Above it those steps take their cluster-side plans.
 DRIVER_MAX_ROWS = 5_000_000
 
 
@@ -1265,7 +1267,8 @@ class IndexReader:
     # (_local_dataset returns None) the segment loads once through Spark
     # instead — a real deployment can mount object storage or keep
     # head-local replicas, the same deal Lucene makes with its directory
-    # abstraction. field_lut reads its stored column the same way.
+    # abstraction. field_lut cuts stored columns out of the same segment,
+    # which reads them only with pyarrow: there facets and sorts go flat.
 
     def _local_dataset(self, table: str):
         if not hasattr(self, "_pa_ds"):
@@ -1300,41 +1303,16 @@ class IndexReader:
         doc, read with pyarrow from the docs table's shard, ordinal and
         docid columns on first use). A key missing from the map
         (packed/docs drift) raises KeyError."""
-        lut_keys, docids = self.head_segment.ordinals
-        keys = np.asarray(keys, dtype=np.int64)
-        if not len(keys):
-            return np.empty(0, dtype=np.int64)
-        pos = np.minimum(np.searchsorted(lut_keys, keys), max(len(lut_keys) - 1, 0))
-        if not len(lut_keys) or not np.array_equal(lut_keys[pos], keys):
-            raise KeyError("packed ordinals missing from the ordinal map")
-        return docids[pos]
+        seg = self.head_segment
+        return seg.ordinals[1][seg.positions(keys)]
 
-    def field_lut(self, field: str):
-        """docid → stored-field value arrays for driver-side facet/sort
-        serving: a pyarrow local read of just (docid, field) from the docs
-        table, sorted by docid, memoized per field. Returns
-        (docids int64 ndarray, values pandas Series aligned) or None when
-        the docs dir isn't locally readable or the corpus exceeds
-        DRIVER_MAX_ROWS docs (the search-head memory trade — callers fall
-        back to the cluster plan)."""
-        if getattr(self, "_flut", None) is None:
-            self._flut = {}
-        if field not in self._flut:
-            lut = None
-            ds = self._local_dataset("docs") if self.doc_count <= DRIVER_MAX_ROWS else None
-            if ds is not None:
-                try:
-                    import numpy as np
-
-                    tbl = ds.to_table(columns=["docid", field])
-                    pdf = tbl.to_pandas()
-                    order = np.argsort(pdf["docid"].to_numpy(np.int64), kind="stable")
-                    pdf = pdf.iloc[order].reset_index(drop=True)
-                    lut = (pdf["docid"].to_numpy(np.int64), pdf[field])
-                except Exception:
-                    lut = None
-            self._flut[field] = lut
-        return self._flut[field]
+    def field_lut(self, field: str, keys: np.ndarray) -> pa.Array:
+        """Stored column ``field`` at segmented ``keys``, aligned with them:
+        the head segment's column cut at the rows ordinal_lookup finds
+        (a missing key raises KeyError), loaded on first use."""
+        seg = self.head_segment
+        vals = seg.column(field).take(seg.positions(keys))
+        return vals.dictionary_decode() if pa.types.is_dictionary(vals.type) else vals
 
     def persist_hot(self):
         """Pin serving tables in memory (warm-searcher mode for latency

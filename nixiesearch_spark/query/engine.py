@@ -32,6 +32,8 @@ SQL-oracle cross-checks.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -44,21 +46,6 @@ from nixiesearch_spark.query.wand import LocalFrame, _match_plan, local_schema
 K1 = 1.2
 B = 0.75
 SCORE_SCHEMA = "docid long, score float"
-
-
-def _lut_positions(docids, mdoc):
-    """Positions of match-set docids inside the sorted field-LUT docids —
-    None unless EVERY docid is present (a packed/docs drift would otherwise
-    silently read a neighboring doc's value; callers decline to the
-    cluster plan instead, mirroring ordinal_lookup's membership check)."""
-    if len(mdoc) == 0:
-        return np.empty(0, dtype=np.int64)
-    if len(docids) == 0:
-        return None
-    pos = np.minimum(np.searchsorted(docids, mdoc), len(docids) - 1)
-    if not np.array_equal(docids[pos], mdoc):
-        return None
-    return pos
 
 
 def _bool_branches(q: ast.BoolQuery) -> list:
@@ -196,11 +183,12 @@ class Searcher:
         distributed under filters or tombstones), no filters, a query shape
         a search-head driver serves (sort-by-field over one match query,
         all-match rrf with ≥ 2 branches, all-match bool, all-match dis_max
-        with tie_breaker ≤ 1), no tombstones. A search-head driver may
-        still decline on the data (driver size bounds, docs/packed drift);
-        the flat plan then serves. Every fast path is bit-identical to the
-        flat plan (tests/test_wand.py, tests/test_serving.py). "flat"
-        forces the pure-Catalyst plan everywhere."""
+        with tie_breaker ≤ 1), no float sort key, the head segment's bound
+        with the sort columns, no tombstones. bool_topk_driver may still
+        decline above wand.DRIVER_MAX_BLOCKS; the flat plan then serves.
+        Every fast path is bit-identical to the flat plan
+        (tests/test_wand.py, tests/test_serving.py). "flat" forces the
+        pure-Catalyst plan everywhere."""
         if isinstance(query, dict) or query is None:
             query = ast.parse_query(query)
         if isinstance(query, ast.RRFQuery) and sort:
@@ -216,7 +204,7 @@ class Searcher:
                 self.counters["plan_cache_hits"] += 1
                 return hit
         topk = self._served_topk(query, filters, size, sort, mode)
-        if topk is None:  # the flat route, or a driver declined on the data
+        if topk is None:  # the flat route, or bool_topk_driver's block bound
             topk = self._flat_topk(query, filters, size, sort)
         else:  # served off the flat plan: never plan-cached
             self.counters["autorouted"] += 1
@@ -231,10 +219,11 @@ class Searcher:
 
     def _plan_route(
         self, query: ast.Query, filters: dict | None, mode: str,
-        sort: list | None = None, facet: bool = False,
+        sort: list | None = None, facet: str | None = None, ranged: bool = False,
     ) -> str:
         """The one route decision for search(), facet_term() and
-        facet_range() (``facet=True``): which producer serves the request —
+        facet_range() (``facet``: the facet column; ``ranged``: a range
+        facet): which producer serves the request —
 
         - "head": a search-head driver (bool_topk_driver, rrf_topk_driver,
           or the full match set of _match_set_driver for sort-by-field and
@@ -244,18 +233,19 @@ class Searcher:
         - "flat": the Catalyst plan.
 
         Checks, in order: mode, a fresh packed index, a score-ordered match
-        search, filters, the query shape, the head segment's size bound
-        (HEAD_SEGMENT_MAX_BYTES, estimated from parquet footers; wand_topk
-        checks it for a match), tombstones. The mapping checks have already
-        run. A head driver may still decline on the data by returning None
-        (the field LUT doc-count bound, DRIVER_MAX_BLOCKS, docs/packed
-        drift); the caller then serves the flat plan."""
+        search, filters, the query shape, the column types in the docs
+        footers (no float sort key: pandas orders NaN as null, Spark apart;
+        an integer range-facet column), the head segment's size bound with
+        those columns (HEAD_SEGMENT_MAX_BYTES, estimated from footers;
+        wand_topk checks it for a match), tombstones — zero Spark jobs, after
+        the mapping checks. Only bool_topk_driver may still decline, above
+        wand.DRIVER_MAX_BLOCKS; the caller then serves the flat plan."""
         from nixiesearch_spark.query import wand
 
         if mode != "auto" or not wand.packed_ready(self.reader):
             return "flat"
         match = isinstance(query, ast.MatchQuery)
-        if match and not sort and not facet:
+        if match and not sort and facet is None:
             return "wand"
         if filters is not None:
             return "flat"
@@ -263,9 +253,9 @@ class Searcher:
             # a one-branch rrf search passes the branch's raw scores through
             # the flat plan; a facet needs only the branch match sets
             ok = all(isinstance(b, ast.MatchQuery) for b in query.retrieve) and (
-                len(query.retrieve) > (0 if facet else 1)
+                len(query.retrieve) > (0 if facet is not None else 1)
             )
-        elif sort or facet:
+        elif sort or facet is not None:
             # the full match set of one match query; geo sort items need
             # the distance expression of the flat plan
             ok = match and not any(isinstance(item[0], dict) for item in sort or ())
@@ -281,15 +271,25 @@ class Searcher:
             )
         else:
             ok = False
-        ok = ok and self.reader.head_segment.fits()
+        seg, cols = self.reader.head_segment, []
+        if ok:
+            cols = [facet] if facet is not None else [
+                item[0] for item in sort or () if item[0] not in ("_score", "_doc")
+            ]
+            types = [seg.column_type(c) for c in cols]
+            ok = all(
+                t is not None
+                and (pa.types.is_integer(t) if ranged else not (sort and pa.types.is_floating(t)))
+                for t in types
+            )
+        ok = ok and seg.fits(cols)
         return "head" if ok and self.reader.tombstones is None else "flat"
 
     def _served_topk(
         self, query: ast.Query, filters: dict | None, size: int, sort: list | None, mode: str
     ) -> DataFrame | None:
         """The top-k of the producer _plan_route picks, or None for the flat
-        plan (the flat route, or a search-head driver declining on the
-        data)."""
+        plan (the flat route, or bool_topk_driver's block bound)."""
         from nixiesearch_spark.query import wand
 
         route = self._plan_route(query, filters, mode, sort=sort)
@@ -660,19 +660,18 @@ class Searcher:
         RRF facet counts the union of the branch match sets, reference
         MergedFacetCollector, core/search/MergedFacetCollector.scala:17-33).
         When _plan_route picks the search head (unfiltered match or
-        all-match RRF on a fresh packed index, no tombstones), the full
-        match set decodes driver-side (wand.match_scores_driver — facet
-        membership needs no top-k) and the facet column rides a pyarrow
-        docid LUT (IndexReader.field_lut), so the whole facet costs zero
-        Spark jobs. Identical (term, count) rows to the cluster plan
-        (tests/test_serving_facet.py); every other request, and a head the
-        data declines (_facet_values), runs term_agg over score()."""
+        all-match RRF on a fresh packed index, no tombstones, the segment
+        within its bound with the facet column), the full match set decodes
+        driver-side (wand.match_scores_driver — facet membership needs no
+        top-k) and the facet column is cut from the head segment
+        (IndexReader.field_lut): zero Spark jobs, the cluster plan's
+        (term, count) rows (tests/test_serving_facet.py). Every other
+        request runs term_agg over score()."""
         from nixiesearch_spark.query.aggs import term_agg
 
         query = self._facet_query(query, field, filters)
-        vals = self._facet_values(query, field, filters, mode)
-        if vals is not None:
-            return self._facet_values_local(vals, field, size)
+        if self._plan_route(query, filters, mode, facet=field) == "head":
+            return self._facet_values_local(self._facet_values(query, field), field, size)
         return term_agg(self._flat_match_set(query, filters), self.reader.docs, field, size)
 
     def facet_range(
@@ -684,15 +683,13 @@ class Searcher:
         mode: str = "auto",
     ) -> DataFrame:
         """Query-level range facet, routed like facet_term (bucket counts
-        need only match-set membership + the numeric LUT column). Integer
-        columns only on the search head — other dtypes take the cluster
-        plan."""
+        need only match-set membership + the column); on the search head
+        for integer columns only (by their type in the docs footers)."""
         from nixiesearch_spark.query.aggs import range_agg
 
         query = self._facet_query(query, field, filters)
-        vals = self._facet_values(query, field, filters, mode, numeric=True)
-        if vals is not None:
-            return self._range_values_local(vals, ranges)
+        if self._plan_route(query, filters, mode, facet=field, ranged=True) == "head":
+            return self._range_values_local(self._facet_values(query, field), ranges)
         return range_agg(self._flat_match_set(query, filters), self.reader.docs, field, ranges)
 
     def _facet_query(self, query, field: str, filters: dict | None) -> ast.Query:
@@ -713,27 +710,17 @@ class Searcher:
             return merged_match_set([self._scores(b, filters) for b in query.retrieve])
         return self._scores(query, filters)
 
-    def _facet_values(
-        self, query: ast.Query, field: str, filters: dict | None, mode: str,
-        numeric: bool = False,
-    ):
-        """The facet column's values over the match set, read on the search
-        head (a pandas Series; for RRF, the union of the branch match sets),
-        or None for the cluster plan: the route is flat, or the data
-        declines — no field LUT (or, with ``numeric``, a non-integer
-        column), or docs/packed drift. The LUT is checked before any
-        match-set decode."""
-        if self._plan_route(query, filters, mode, facet=True) != "head":
-            return None
-        lut = self.reader.field_lut(field)
-        if lut is None or (numeric and lut[1].dtype.kind not in "iu"):
-            return None
+    def _facet_values(self, query: ast.Query, field: str) -> pa.Array:
+        """The facet column over the head's match set (for RRF, the union of
+        the branch match sets), one value per distinct docid."""
         parts = [
-            self._match_set_driver(b)["docid"].to_numpy(np.int64)
+            self._match_set_driver(b)
             for b in (query.retrieve if isinstance(query, ast.RRFQuery) else [query])
         ]
-        pos = _lut_positions(lut[0], np.unique(np.concatenate(parts)))
-        return None if pos is None else lut[1].iloc[pos]
+        docids = np.concatenate([p["docid"].to_numpy(np.int64) for p in parts])
+        keys = np.concatenate([p["key"].to_numpy(np.int64) for p in parts])
+        _, first = np.unique(docids, return_index=True)
+        return self.reader.field_lut(field, keys[first])
 
     MATCH_SET_CACHE_MAX = 8
 
@@ -756,39 +743,36 @@ class Searcher:
             self._ms_cache[key] = ms
         return ms
 
-    def _facet_values_local(self, vals, field: str, size) -> LocalFrame:
-        """Term-facet counts over the match set's facet values, count-desc/
-        term-asc ties like the cluster agg, returned as a LocalFrame typed
-        from the docs schema."""
+    def _facet_values_local(self, vals: pa.Array, field: str, size) -> LocalFrame:
+        """Term-facet counts over the match set's facet values, nulls
+        dropped and count-desc/term-asc ties like the cluster agg, returned
+        as a LocalFrame typed from the docs schema."""
         from pyspark.sql.types import LongType, StructField, StructType
 
         from nixiesearch_spark.query.aggs import MAX_TERM_FACETS
 
         n = MAX_TERM_FACETS if size == "all" else int(size)
-        ftype = next(
-            f.dataType for f in self.reader.docs.schema.fields if f.name == field
-        )
+        ftype = self.reader.docs.schema[field].dataType
         schema = StructType(
             [StructField("term", ftype), StructField("count", LongType(), False)]
         )
-        if not len(vals):
-            return LocalFrame.empty(self.spark, schema)
-        vc = vals.value_counts(dropna=True)  # matches the isNotNull filter
+        vc = pc.drop_null(vals).to_pandas().value_counts()  # the isNotNull filter
         pdf = vc.rename_axis("term").reset_index(name="count")
         # same tie order as the cluster plan: count desc, term asc
         pdf = pdf.sort_values(["count", "term"], ascending=[False, True], kind="stable").head(n)
         return LocalFrame(self.spark, pdf, schema)
 
-    def _range_values_local(self, vals, ranges: list) -> LocalFrame:
+    def _range_values_local(self, vals: pa.Array, ranges: list) -> LocalFrame:
         """Range-bucket counts over the match set's (integer) facet values
-        as a LocalFrame; an open bound is NaN in the frame and collects as
-        None."""
+        as a LocalFrame; a null is in no bucket (range_agg's isNotNull). An
+        open bound is NaN in the frame and collects as None."""
         import pandas as pd
 
-        v = vals.to_numpy()
+        valid = vals.is_valid().to_numpy(zero_copy_only=False)
+        v = pc.fill_null(vals, 0).to_numpy()
         rows = []
         for r in ranges:
-            mask = np.ones(len(v), dtype=bool)
+            mask = valid.copy()
             if "gt" in r:
                 mask &= v > r["gt"]
             if "gte" in r:
@@ -811,16 +795,14 @@ class Searcher:
             self.spark, pdf, local_schema("range_from double, range_to double, count long")
         )
 
-    def _sort_search_driver(self, q: ast.MatchQuery, sort: list, size: int) -> LocalFrame | None:
+    def _sort_search_driver(self, q: ast.MatchQuery, sort: list, size: int) -> LocalFrame:
         """Search-head sort-by-field: full match set decoded driver-side,
-        sort columns via the pyarrow docid LUT, the multi-key order applied
-        as reversed stable pandas sorts (docid-asc tiebreak first) — the
-        exact TakeOrderedAndProject semantics including per-key
-        missing-first/last — returned as a (docid, score, _rank) LocalFrame.
-        Declines (None) on float sort columns (their pandas form conflates
-        null and NaN, which Spark orders differently), or columns whose
-        LUT/match-set can't serve driver-side; geo items never get here
-        (_plan_route)."""
+        sort columns cut from the head segment at the match set's keys, the
+        multi-key order applied as reversed stable pandas sorts (docid-asc
+        tiebreak first) — the exact TakeOrderedAndProject semantics
+        including per-key missing-first/last — returned as a (docid, score,
+        _rank) LocalFrame. _plan_route keeps float sort columns and geo
+        items on the flat plan."""
         import pandas as pd
 
         items = []
@@ -828,23 +810,12 @@ class Searcher:
             fld, direction = item[0], item[1]
             missing = item[2] if len(item) > 2 else ("last" if direction == "asc" else "first")
             items.append((fld, direction, missing))
-        luts = {}
-        for fld, _, _ in items:
-            if fld in ("_score", "_doc"):
-                continue
-            lut = self.reader.field_lut(fld)
-            if lut is None:
-                return None
-            if lut[1].dtype.kind == "f":
-                return None
-            luts[fld] = lut
         df = self._match_set_driver(q).copy()
-        mdoc = df["docid"].to_numpy(np.int64)
-        for fld, (docids, vals) in luts.items():
-            pos = _lut_positions(docids, mdoc)
-            if pos is None:
-                return None
-            df[fld] = vals.iloc[pos].reset_index(drop=True)
+        keys = df["key"].to_numpy(np.int64)
+        for fld in {fld for fld, _, _ in items} - {"_score", "_doc"}:
+            # an integer column with nulls stays exact, as Python ints
+            vals = self.reader.field_lut(fld, keys)
+            df[fld] = vals.to_pandas(integer_object_nulls=True).to_numpy()
         df = df.sort_values("docid", ascending=True, kind="stable")
         for fld, direction, missing in reversed(items):
             col = "score" if fld == "_score" else ("docid" if fld == "_doc" else fld)

@@ -101,7 +101,7 @@ from pyspark.sql.types import (
 from nixiesearch_spark import lucene
 from nixiesearch_spark.analysis import analyzer_py
 from nixiesearch_spark.index import codec
-from nixiesearch_spark.index.builder import DRIVER_MAX_ROWS, IndexReader
+from nixiesearch_spark.index.builder import IndexReader
 from nixiesearch_spark.index.segment import KEY_SHIFT
 
 # Python workers must run the pack/WAND closures even when this package is
@@ -494,21 +494,23 @@ def _wand_topk_driver(reader: IndexReader, plan: dict, k: int, n_stripes: int) -
 def match_scores_driver(
     reader: IndexReader, field: str, text: str, operator: str = "or"
 ) -> pd.DataFrame:
-    """FULL match-set (docid, score float32) decoded on the search head —
+    """FULL match-set (docid, score float32, segmented key) decoded on the
+    search head —
     the driver analog of engine.score() for a match query, feeding facet
     and sort-by-field serving. One kernel call with an unreachable k (no
     θ ever set, one stripe per shard → plain decode-all), so the float32
     score chain is the exact WAND/flat chain. Requires
     ``packed_ready(reader)``; the caller's route decision has checked it
     and the head segment bound, and declines on tombstones."""
-    empty = pd.DataFrame({"docid": np.empty(0, np.int64), "score": np.empty(0, np.float32)})
+    none = np.empty(0, np.int64)
+    empty = pd.DataFrame({"docid": none, "score": none.astype(np.float32), "key": none})
     plan = _match_plan(reader, field, text, operator)
     if plan is None:
         return empty
     keys, scores = _shard_topk(_fetch_blocks(reader, [plan]), [plan], 1 << 60, 1)
     if not len(keys):
         return empty
-    return pd.DataFrame({"docid": reader.ordinal_lookup(keys), "score": scores})
+    return pd.DataFrame({"docid": reader.ordinal_lookup(keys), "score": scores, "key": keys})
 
 
 def _match_plan(
@@ -673,7 +675,6 @@ def wand_topk(
     k: int = 10,
     n_stripes: int = 32,
     operator: str = "or",
-    resolve: str = "auto",
     filters: dict | None = None,
     mode: str = "auto",
     driver_max_blocks: int = DRIVER_MAX_BLOCKS,
@@ -681,8 +682,6 @@ def wand_topk(
     """Block-max WAND match top-k over the packed table.
     ``operator="and"`` requires every query term per doc (conjunction is
     applied inside the stripe scorer; the OR upper bounds stay valid).
-    ``resolve``: ordinal→docid strategy — "join" | "lookup" | "auto"
-    (lookup above DRIVER_MAX_ROWS docs; see inline rationale).
     ``filters``: same predicate dict as the flat Searcher — applied inside
     the pruned search as an allowed-key mask (module docstring); results
     are bit-identical to ``Searcher.search(..., filters=...)``. Tombstones
@@ -808,46 +807,11 @@ def wand_topk(
         matched = matched.unionByName(fpad)
     nsh = int(reader.stats.get("n_shards", 32))
     local = matched.repartition(nsh, "shard").mapInArrow(run, schema=TOPK_SCHEMA)
-    # map shard-local ordinals back to global docids. Two physical
-    # strategies with identical results:
-    # - "join": broadcast the tiny candidate frame against the
-    #   (shard, ordinal, docid) map — one job, minimal plan, fastest when
-    #   the map fits a cached scan (sandbox scale);
-    # - "lookup": collect the ≈k-per-partition candidates and fold them into
-    #   pushable point predicates (OR of shard = s AND ordinal IN (...))
-    #   + a literal score map — at 10^9+ docs the join side would scan the
-    #   WHOLE docs-derived map per query, while the predicates prune to a
-    #   handful of parquet row-groups (docs are written sorted by
-    #   (shard, bucket, docid)). Plan-compile cost of the literals is
-    #   ~1 s, noise at that scale.
-    use_lookup = resolve == "lookup" or (
-        resolve == "auto" and reader.doc_count > DRIVER_MAX_ROWS
+    # map shard-local ordinals back to global docids: broadcast the tiny
+    # candidate frame against the (shard, ordinal, docid) map
+    joined = reader.ordinal_map.join(F.broadcast(local), ["shard", "ordinal"])
+    return (
+        joined.select("docid", "score")
+        .orderBy(F.desc("score"), F.asc("docid"))
+        .limit(k)
     )
-    if not use_lookup:
-        joined = reader.ordinal_map.join(F.broadcast(local), ["shard", "ordinal"])
-        return (
-            joined.select("docid", "score")
-            .orderBy(F.desc("score"), F.asc("docid"))
-            .limit(k)
-        )
-    rows = local.collect()
-    if not rows:
-        return LocalFrame.empty(spark, FINAL_SCHEMA)
-    by_shard: dict[int, list[int]] = {}
-    smap: dict[str, float] = {}
-    for r in rows:
-        by_shard.setdefault(int(r["shard"]), []).append(int(r["ordinal"]))
-        smap[f"{int(r['shard'])}_{int(r['ordinal'])}"] = float(r["score"])
-    pred = None
-    for s, ords in by_shard.items():
-        p = (F.col("shard") == s) & F.col("ordinal").isin(ords)
-        pred = p if pred is None else (pred | p)
-    score_map = F.create_map(
-        *[x for kv in smap.items() for x in (F.lit(kv[0]), F.lit(kv[1]))]
-    )
-    key = F.concat_ws("_", F.col("shard"), F.col("ordinal"))
-    out = (
-        reader.ordinal_map.where(pred)
-        .select("docid", score_map[key].cast("float").alias("score"))
-    )
-    return out.orderBy(F.desc("score"), F.asc("docid")).limit(k)

@@ -28,6 +28,8 @@ def two_fields(spark, tmp_path_factory):
     """A 240-doc index over two text fields, and the batch to push to it."""
     full = make_corpus(260, seed=11)
     full.insert(0, "doc_id", range(260))
+    # an int column with nulls beside make_corpus's string columns
+    full["stars"] = pd.array([None if i % 4 == 0 else i % 50 for i in range(260)], dtype="Int64")
     d = str(tmp_path_factory.mktemp("seg") / "idx")
     IndexBuilder(spark, CFG).build(spark.createDataFrame(full.iloc[:240]), d)
     extra = full.iloc[240:].copy()
@@ -87,7 +89,17 @@ def test_segment_cuts_equal_filtered_scan(spark, two_fields):
     hits = Searcher(r2).search(MatchQuery("content", MARKER), size=10)
     assert isinstance(hits, LocalFrame)
     assert sorted(x["docid"] for x in hits.collect()) == sorted(extra["doc_id"].iloc[:3])
-    assert r2.head_segment.estimate_bytes() >= r2.head_segment.nbytes > 0
+    seg = r2.head_segment
+    assert seg.estimate_bytes() >= seg.nbytes > 0
+    # stored columns: each key's value is its docs row's, and the estimate
+    # still bounds the segment with a string and an int-with-nulls column
+    docs = pads.dataset(d + "/docs", format="parquet").to_table().to_pandas()
+    keys = (docs["shard"].to_numpy(np.int64) << 40) | docs["ordinal"].to_numpy(np.int64)
+    for field in ("lang", "stars"):
+        got = r2.field_lut(field, keys).to_pylist()
+        assert got == [None if pd.isna(v) else v for v in docs[field]]
+    assert docs["stars"].isna().any() and set(seg._columns) == {"lang", "stars"}
+    assert seg.estimate_bytes() >= seg.nbytes
 
 
 def test_spark_loaded_segment_equals_pyarrow_loaded(spark, two_fields, monkeypatch):
@@ -116,6 +128,20 @@ def test_spark_loaded_segment_equals_pyarrow_loaded(spark, two_fields, monkeypat
         assert r.head_segment.estimate_bytes() >= r.head_segment.nbytes
 
 
+def test_unreadable_storage_keeps_facets_and_sorts_flat(spark, two_fields, monkeypatch):
+    """Storage pyarrow cannot open has no footers to bound a column by: a
+    facet and a sort take the flat plan and load no column."""
+    d, _ = two_fields
+    monkeypatch.setattr(IndexReader, "_local_dataset", lambda self, table: None)
+    r = IndexReader(spark, d)
+    s = Searcher(r, plan_cache=False)
+    q = MatchQuery("content", "def import return")
+    for out in (s.facet_term(q, "lang"), s.search(q, size=5, sort=[("lang", "asc")])):
+        assert not isinstance(out, LocalFrame)
+    assert isinstance(s.search(q, size=5), LocalFrame)  # the segment loads through Spark
+    assert not r.head_segment._columns
+
+
 def _jobs_of(spark, fn):
     """(fn's result, Spark jobs it started), read from the status tracker
     under a job group of its own."""
@@ -132,6 +158,8 @@ def _jobs_of(spark, fn):
 
 
 def test_cold_head_request_starts_no_spark_job(spark, two_fields):
+    """A cold match, term facet, range facet and sort each run on the head
+    in zero Spark jobs, each loading what it reads, with the flat answer."""
     d, _ = two_fields
     r = IndexReader(spark, d)
     s = Searcher(r)
@@ -144,6 +172,17 @@ def test_cold_head_request_starts_no_spark_job(spark, two_fields):
     assert [(x["docid"], np.float32(x["score"])) for x in rows] == [
         (x["docid"], np.float32(x["score"])) for x in flat
     ]
+    sort = [("stars", "asc", "first"), ("lang", "desc")]
+    for request, col in (
+        (lambda s, **kw: s.facet_term(q, "lang", **kw), "lang"),
+        (lambda s, **kw: s.facet_range(q, "stars", [{"lt": 20}, {"gte": 20}], **kw), "stars"),
+        (lambda s, **kw: s.search(q, size=9, sort=sort, **kw), None),
+    ):
+        before = r.head_segment.nbytes
+        rows, jobs = _jobs_of(spark, lambda: request(s).collect())
+        assert jobs == 0
+        assert col is None or (col in r.head_segment._columns and r.head_segment.nbytes > before)
+        assert [tuple(x) for x in rows] == [tuple(x) for x in request(s, mode="flat").collect()]
 
 
 def test_tombstones_read_once_per_delete(spark, tmp_path, monkeypatch):

@@ -289,17 +289,38 @@ def test_match_scores_driver_after_append_with_avgdl_drift(spark, tmp_path):
         )
 
 
+_GAP_ROWS = [
+    ("zrepo", f"zpath{i}", f"zc{i}", "py", f"def import return zzgap{i}", 24 + i,
+     ("t1", "t2", None)[i % 3], (None if i % 4 == 0 else 100 * i))
+    for i in range(12)
+]
+
+
 @pytest.fixture(scope="module")
 def routed(spark, tmp_path_factory, tiny_corpus_pd):
-    """Readers over one fresh index with an int column, a copy of it with a
-    tombstone, and a copy with an append that was not packed (stale)."""
+    """Readers over one fresh index with an int column, a float column and
+    an int column holding nulls; a copy of it with a tombstone; a copy with
+    an append that was not packed (stale); and a copy with a packed append
+    that brings a string and an int column the first docs file lacks
+    (gap)."""
+    import glob
+    import os
     import shutil
+
+    import pandas as pd
+    import pyarrow.parquet as pq
+
+    from nixiesearch_spark.streaming import IncrementalIndexer
 
     root = tmp_path_factory.mktemp("idxroute")
     pdf = tiny_corpus_pd.copy()
     pdf["nlen"] = pdf["content"].str.len().astype("int64")
+    pdf["ratio"] = pdf["nlen"] / 7.0
+    pdf["nlen_null"] = pd.array(
+        [None if i % 5 == 0 else n for i, n in enumerate(pdf["nlen"])], dtype="Int64"
+    )
     cfg = IndexConfig(text_fields=("content",), n_shards=4, quantize=True, block_size=16)
-    fresh, tomb, stale = (str(root / n) for n in ("fresh", "tomb", "stale"))
+    fresh, tomb, stale, gap = (str(root / n) for n in ("fresh", "tomb", "stale", "gap"))
     IndexBuilder(spark, cfg).build(spark.createDataFrame(pdf), fresh)
     shutil.copytree(fresh, tomb)
     dead = IndexReader(spark, fresh).docs.select("docid").first()["docid"]
@@ -312,7 +333,20 @@ def routed(spark, tmp_path_factory, tiny_corpus_pd):
     )
     b._build_shards(extra, stale, list(range(4)))
     b.finalize(stale, pack=False)
-    return {"fresh": fresh, "tomb": tomb, "stale": stale}
+    shutil.copytree(fresh, gap)
+    pushed = spark.createDataFrame(
+        _GAP_ROWS,
+        "repo string, path string, commit string, lang string, content string, "
+        "nlen long, tag string, stars long",
+    )
+    IncrementalIndexer(spark, cfg, gap, pack_each_batch=True).process_batch(pushed, batch_id=1)
+    # name the pushed docs files last, so the first file lacks tag and stars
+    for f in glob.glob(gap + "/docs/*.parquet"):
+        if "tag" in pq.read_schema(f).names:
+            os.rename(f, os.path.join(os.path.dirname(f), "zz-" + os.path.basename(f)))
+    first = sorted(glob.glob(gap + "/docs/*.parquet"))[0]
+    assert "tag" not in pq.read_schema(first).names
+    return {"fresh": fresh, "tomb": tomb, "stale": stale, "gap": gap}
 
 
 def _dismax(tie):
@@ -360,6 +394,14 @@ ROUTE_CASES = [
     ("match_stale", "stale", lambda s: s.search(_M), "flat"),
     ("rrf_stale", "stale", lambda s: s.search(RRF_Q2), "flat"),
     ("facet_stale", "stale", lambda s: s.facet_term(_M, "lang"), "flat"),
+    ("match_sort_float", "fresh", lambda s: s.search(_M, sort=[("ratio", "desc")]), "flat"),
+    ("facet_range_float", "fresh", lambda s: s.facet_range(_M, "ratio", _RANGES), "flat"),
+    ("facet_range_int_nulls", "fresh",
+     lambda s: s.facet_range(_M, "nlen_null", _RANGES), "head"),
+    ("facet_term_gap", "gap", lambda s: s.facet_term(_M, "tag"), "head"),
+    ("match_sort_gap", "gap",
+     lambda s: s.search(_M, size=15, sort=[("stars", "desc", "last"), ("tag", "asc", "first")]),
+     "head"),
 ]
 
 
@@ -383,6 +425,25 @@ def test_auto_routes_are_pinned(spark, routed, name, index, request_fn, route):
 HEAD_CASES = [c for c in ROUTE_CASES if c[3] == "head"]
 
 
+def _flat_searcher(s, monkeypatch):
+    """``s`` with mode="flat" pinned on every public entry."""
+    for m in ("search", "facet_term", "facet_range"):
+        monkeypatch.setattr(s, m, functools.partial(getattr(s, m), mode="flat"))
+    return s
+
+
+@pytest.mark.parametrize("name, index, request_fn, route", HEAD_CASES,
+                         ids=[c[0] for c in HEAD_CASES])
+def test_head_routes_equal_flat(spark, routed, monkeypatch, name, index, request_fn, route):
+    """Every head answer equals mode="flat" row for row: (term, count)
+    rows, range counts, and (docid, float32 score) order."""
+    r = IndexReader(spark, routed[index])
+    got = [tuple(x) for x in request_fn(Searcher(r, plan_cache=False)).collect()]
+    flat = _flat_searcher(Searcher(r, plan_cache=False), monkeypatch)
+    want = [tuple(x) for x in request_fn(flat).collect()]
+    assert got == want and len(got) > 0
+
+
 @pytest.mark.parametrize("name, index, request_fn, route", HEAD_CASES,
                          ids=[c[0] for c in HEAD_CASES])
 def test_head_segment_bound_declines(spark, routed, monkeypatch, name, index, request_fn, route):
@@ -399,10 +460,8 @@ def test_head_segment_bound_declines(spark, routed, monkeypatch, name, index, re
     assert not isinstance(out, LocalFrame)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert ("MapInArrow" in plan) == (name == "match")
-    flat = Searcher(r, plan_cache=False)
-    for m in ("search", "facet_term", "facet_range"):
-        monkeypatch.setattr(flat, m, functools.partial(getattr(flat, m), mode="flat"))
+    flat = _flat_searcher(Searcher(r, plan_cache=False), monkeypatch)
     assert [tuple(x) for x in out.collect()] == [tuple(x) for x in request_fn(flat).collect()]
     seg = r.head_segment
     assert seg._packed is None and seg._dictionary is None and seg._ordinals is None
-    assert seg.nbytes == 0
+    assert not seg._columns and seg.nbytes == 0

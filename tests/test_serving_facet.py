@@ -1,7 +1,7 @@
 """Search-head facet/sort serving: identity with the cluster plans.
 
 facet_term and sort-by-field auto-route through the driver (full match set
-decoded from packed blocks, facet/sort columns via the pyarrow docid LUT);
+decoded from packed blocks, facet/sort columns cut from the head segment);
 these tests pin that the served results equal the Catalyst plans row for
 row, including missing-value placement and multi-key ties.
 """
@@ -211,34 +211,36 @@ def test_facet_rrf_empty_retrieve_raises(built):
         s.facet_range({"rrf": {"retrieve": []}}, "nlen", [{"lt": 1}])
 
 
-def test_driver_bounds_force_cluster_fallback(built, monkeypatch):
-    """The scale guards are real: shrinking each driver bound to zero must
-    route the same queries back to the cluster plans (results unchanged)."""
-    import nixiesearch_spark.index.builder as bmod
-    from nixiesearch_spark.query import wand as wmod
+def test_driver_bounds_force_cluster_fallback(spark, built, monkeypatch):
+    """The head segment's one bound is real: set between the segment's
+    estimate and that estimate plus a facet or sort column, the facet and
+    the sort take the flat plan and give its answer while a match still
+    serves on the head; set to zero, the facet falls back too."""
+    from nixiesearch_spark.index import segment
 
-    s = Searcher(built, plan_cache=False)
+    r = IndexReader(spark, built.index_dir)
+    seg = r.head_segment
+    base = seg.estimate_bytes()
+    extra = min(seg.estimate_bytes([c]) for c in ("lang", "nlen")) - base
+    assert extra > 0
+    monkeypatch.setattr(segment, "HEAD_SEGMENT_MAX_BYTES", base + extra - 1)
+    s = Searcher(r, plan_cache=False)
     q = MatchQuery("content", "def import")
-
-    # field LUT refused (docs "too big") → facet + sort fall back
-    real_flut = built.field_lut
-    monkeypatch.setattr(
-        type(built), "field_lut", lambda self, f: None, raising=True
-    )
     out = s.facet_term(q, "lang", 3)
     assert not _is_local(out)
     flat = s.term_facet(s.score(q), "lang", 3)
     assert [(r["term"], r["count"]) for r in out.collect()] == [
         (r["term"], r["count"]) for r in flat.collect()
     ]
-    sorted_out = s.search(q, size=5, sort=[("nlen", "desc")])
+    sort = [("nlen", "desc")]
+    got, sorted_out = _sorted_pairs(s, q, sort, 5)
     assert not _is_local(sorted_out)
-    monkeypatch.undo()
+    assert got == _sorted_pairs(s, q, sort, 5, mode="flat")[0]
+    assert _is_local(s.search(q, size=5))
+    assert not seg._columns and seg.estimate_bytes() == base
 
     # head segment over its bound (corpus "too big") → match-set decode
     # falls back
-    from nixiesearch_spark.index import segment
-
     monkeypatch.setattr(segment, "HEAD_SEGMENT_MAX_BYTES", 0)
     s2 = Searcher(built, plan_cache=False)
     out2 = s2.facet_term(q, "lang", 3)

@@ -62,18 +62,6 @@ def test_wand_equals_flat_path(built):
     ]
 
 
-def test_wand_resolve_strategies_identical(built):
-    """ordinal→docid resolve: broadcast-join and pushed point-lookup must
-    return identical (docid, float32 score) lists."""
-    reader, _ = built
-    for text in ("def import return", MARKERS[0]):
-        a = [(r["docid"], np.float32(r["score"])) for r in
-             wand_topk(reader, "content", text, k=15, resolve="join").collect()]
-        b = [(r["docid"], np.float32(r["score"])) for r in
-             wand_topk(reader, "content", text, k=15, resolve="lookup").collect()]
-        assert a == b, text
-
-
 def test_pack_subsplit_ubiquitous_term(spark, tmp_path):
     """A term present in EVERY doc must pack into multiple ordinal-range
     sub-groups (the giant-term collect_list guard), and WAND over the split
